@@ -1,422 +1,389 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.TimeUnit
 
-/** Per-round benchmark: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints the headline JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`,
-  * followed by one short `"metric":"total_recap"` line repeating the
-  * headline numbers (tail-truncation insurance — a consumer keying on
-  * `metric == "total"` sees exactly one line).
+import scala.annotation.tailrec
+import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.ops.{Artifacts, Dedup, Pipeline, TextDedup}
+import graft.ops.Tables.table
+import graft.ops.TextOps.tokens
+
+/** The one timing main: `graft.Bench [suite|decade|intake]` runs a
+  * profile and prints its record as one JSON object on the last stdout
+  * line (under sbt too: `build.sbt` routes the forked stdout unprefixed
+  * and suppresses the success banner). The process exits non-zero when
+  * anything in the record's `"failed"` list failed; a failed attempt is
+  * never timed.
   *
-  * Results are materialized through the `noop` sink — a bare `count()`
-  * would let Catalyst prune projections and undercount the real work.
+  *  - `suite` (default): every SparkEntry query over SPARK_GRAFT_SF_DIR,
+  *    best of SPARK_GRAFT_RUNS attempts, then an sf1 leg in a forked
+  *    fresh JVM (this main in the `sf1` profile) that re-times the
+  *    slowest and the [[Sf1Forced]] queries over the [[ScaleProbe]]
+  *    corpus and reports sf1/suite ratios. The full record goes to
+  *    BENCH_FULL.json and BENCH_HISTORY.jsonl; stdout gets
+  *    [[compact]], ≤1500 chars, keyed `"metric":"total"`.
+  *  - `decade`: [[DecadeQueries]] at sf1 and at sf10 (the sf1 corpus
+  *    replicated again, over the tables they read) and the sf10/sf1
+  *    ratio per query.
+  *  - `intake`: one fixed arrival batch through
+  *    [[graft.ops.Pipeline.intakeBatch]] against the sf0.1 corpus and
+  *    against the 10× sf1 corpus, standing artifacts built untimed; a
+  *    flat pair shows per-arrival cost independent of the corpus.
+  *
+  * Every attempt is timed the same way ([[attempt]]): a fixed-work
+  * calibration sentinel first, so a reading taken under load is
+  * visible in the record, then the result is materialized through the
+  * `noop` sink (a bare `count()` would let Catalyst prune the work).
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // GraftSession.builder: same extension-injected configuration the
-    // correctness gate runs under (custom function/strategy/rule active)
+  type Query = (SparkSession, String) => DataFrame
+
+  val mapper: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  lazy val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  lazy val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  lazy val sf1Dir: String = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1")
+  /** Seconds of measured attempts in the sf1 leg; anything past it is
+    * listed in `sf1_skipped`. */
+  lazy val sf1Budget: Double = sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET", "2400").toDouble
+
+  /** The queries named in SPARK_GRAFT_ONLY (comma-separated), else all. */
+  def selected(queries: Map[String, Query]): Map[String, Query] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+      .fold(queries)(only => queries.filter(q => only(q._1)))
+
+  /** The session every measurement (and Verify) runs under: the
+    * GraftSession configuration on `local[SPARK_GRAFT_CPUS]`. */
+  def session(): SparkSession = {
     val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm the session once (JVM/codegen/scheduler/whole-stage compile) so
-    // the alphabetically-first query isn't charged ~6 s of bring-up cost.
-    spark.range(1 << 20).selectExpr("sum(id) AS s")
-      .write.format("noop").mode("overwrite").save()
-    // Optional subset for local iteration, e.g. SPARK_GRAFT_ONLY=q01_pricing_summary,q_dedup_exact
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // Best-of-N (default 2): the shared box this runs on shows roaming
-    // contention spikes — a different query 5-10× slower each run while
-    // measuring <1 s isolated (BASELINE.md documents the evidence). The
-    // min over N runs is the engine-characteristic number; the per-run
-    // plan/codegen work is identical, so this measures execution, not luck.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    // Contention sentinel: a FIXED constant-work aggregate timed before
-    // every measured attempt. Its isolated cost is a known constant, so
-    // inflated sentinel readings in the emitted JSON mark exactly which
-    // measurements ran under shared-box load — the artifact carries its
-    // own noise floor instead of needing an after-the-fact adjudication.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1L << 22).selectExpr("sum(id * 2 + 1) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    // Broadcast variables are reclaimed by the ContextCleaner only when
-    // the DRIVER GC collects their references: over a 240-query suite the
-    // 8 GiB heap accumulates hundreds of dead broadcast/checkpoint blocks
-    // faster than incidental GC frees them, squeezing execution memory —
-    // measured round 10 as 3-5× inflation of the LAST queries to run (the
-    // sf1 probe: pagerank 16.2× there vs 3.1× in a clean JVM, identical
-    // plans). A periodic explicit GC lets the cleaner drain; ~50 ms every
-    // 24 queries, repaid many times over in the probe.
-    var sinceGc = 0
-    // counts QUERIES, not attempts (ADVICE r11): called once per query
-    // below, so with best-of-N this really is every 24 queries as the
-    // BASELINE notes state.
-    def maybeGc(): Unit = { sinceGc += 1; if (sinceGc >= 24) { sinceGc = 0; System.gc() } }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val attempts = (1 to runs).map { _ =>
-        val calib = calibrate()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        // Each query's consumed localCheckpoints/caches otherwise pile up in
-        // the block manager across the 70+-query run, squeezing execution
-        // memory for later queries (the roaming mid-suite slowdowns).
-        // Safe between queries: every result was fully materialized above.
-        Caches.releaseAll(spark)
-        (elapsed, calib)
-      }
-      maybeGc()
-      val (best, calibAtBest) = attempts.minBy(_._1)
-      (name, best, calibAtBest, attempts.map(_._2))
-    }
-    // sf1 scale probe (round 10): synthesize the ~10× corpus in-engine
-    // (ScaleProbe) and re-time the heavy tail once, so the emitted JSON
-    // carries sf1/sf0.1 ratios — a super-linear regression fails loudly in
-    // BENCH_r{N}.json instead of depending on a manual builder probe.
-    // SPARK_GRAFT_SF1_PROBE: "auto" (default — run iff the bench dir looks
-    // like sf0.1), "0"/"off", or "1". The probe is time-budgeted
-    // (SPARK_GRAFT_SF1_BUDGET sec, default 2000); anything dropped is
-    // listed in "sf1_skipped" — no silent caps.
-    val sf1Enabled = sys.env.getOrElse("SPARK_GRAFT_SF1_PROBE", "auto") match {
-      case "0" | "off" => false
-      case "auto"      => sfDir.contains("sf0.1")
-      case _           => true
-    }
-    val sf1Top = sys.env.getOrElse("SPARK_GRAFT_SF1_TOP", "20").toInt
-    // 2000 → 2400 (ADVICE r13 item 3): the budget scales with the
-    // best-of-2 attempt discipline — and in the FRESH probe JVM the
-    // second attempt no longer rides a suite-warmed page cache, so the
-    // old early-exit saving doesn't apply. The probe corpus synth and
-    // JVM bring-up run before the probe's deadline starts, so the budget
-    // buys measured attempts only.
-    val sf1Budget = sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET", "2400").toDouble
-    // probed regardless of rank: the two round-10 re-registered pair
-    // queries (their sub-quadratic claim is exactly what the probe
-    // audits), plus one representative per family that reads the
-    // round-11-scaled events/orders tables — before round 11 those were
-    // flat dimensions in the probe corpus, so this family's linearity was
-    // argued rather than measured (VERDICT r10 item 4)
-    val sf1Forced = Set(
-      "q_dedup_embedding", "q_pipeline_crossmodal",
-      "q_variant_extract", "q_interpolate", "q_m4_downsample",
-      "q_target_encode", "q_events_funnel", "q_cusum_shift",
-      // round 11: the two composites — their sub-linearity claims are the
-      // integration story, so the probe audits them regardless of rank
-      "q_pipeline_full", "q_intake",
-      // round 12: the two r11 weak items — their fixes (hash-argmax LPA,
-      // single-build packed-key trigram) dropped them below the top-20
-      // cutoff, which would make their ratios invisible exactly when the
-      // record needs to show the fix held
-      "q_label_prop", "q_lm_trigram_score",
-      // round 13: the new broadcast-apply classifier and the per-epoch
-      // window packer — first decade measured the round they land
-      "q_quality_classifier", "q_epoch_order",
-      // round 13c: every new query measures its first decade the round it
-      // lands — the composite, both single-aggregate audits, and the
-      // burst walk+aggregate (exif_meta itself is a pure narrow codegen
-      // walk; the media family's per-row linearity is established)
-      "q_pipeline_gated", "q_epoch_mixing", "q_batch_buckets",
-      "q_exif_burst_dedup",
-      // round 14: every new query measures its first decade the round it
-      // lands — the one-scan repetition profile + filter, the geo mix,
-      // and the classifier-pre-gated intake composite (exif_thumb is a
-      // pure narrow codegen walk like exif_meta — per-row linearity
-      // established for the family)
-      "q_doc_repetition", "q_repetition_filter", "q_geo_diversity_mix",
-      "q_intake_gated", "q_pq_recon_error",
-      // round 15: the full nine-gate composite and the HTML boilerplate
-      // report measure their first decade the round they land
-      // (q_html_extract itself is a pure narrow codegen walk — per-row
-      // linearity established for the walker family)
-      "q_intake_full", "q_html_boilerplate")
-    // targets + denominators + quiet bar are computed HERE (the suite
-    // leg owns them); the measurements run in a FORKED fresh JVM
-    // (VERDICT r13 item 2 — see Sf1Probe's scaladoc for why), with the
-    // old in-process path kept only as a loudly-labeled fallback.
-    def sf1Targets: Seq[(String, Double)] = {
-      val byName = results.map(r => r._1 -> r._2).toMap
-      (results.sortBy(-_._2).map(_._1).take(sf1Top) ++
-        results.map(_._1).filter(sf1Forced)).distinct.map(n => (n, byName(n)))
-    }
-    def sf1QuietBar: Double = {
-      val suiteCalibs = results.flatMap(_._4).sorted
-      if (suiteCalibs.isEmpty) 0.15
-      else math.max(0.15, 2 * suiteCalibs(suiteCalibs.size / 2))
-    }
-    def forkSf1Probe(): Option[(String, Seq[(String, Double)])] =
-      try {
-        val base = java.io.File.createTempFile("graft-sf1-base", ".tsv")
-        java.nio.file.Files.write(base.toPath,
-          sf1Targets.map { case (n, s) => s"$n\t$s" }
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
-        val out = java.io.File.createTempFile("graft-sf1-out", ".json")
-        out.delete()
-        val javaBin = System.getProperty("java.home") + "/bin/java"
-        // the module opens Spark needs on JDK 17 (the parent was started
-        // with the same set by sbt/spark-submit)
-        val addOpens = Seq(
-          "java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar",
-        ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-        // child heap: a FRACTION of the parent's (ADVICE r14) — the
-        // parent JVM (suite heap + cached pages) stays resident while the
-        // child runs, so mirroring the full -Xmx can overcommit a box
-        // provisioned for one heap and get the child OOM-killed mid-probe
-        // (pressure the calibration sentinel cannot flag). 60% leaves the
-        // resident parent room; SPARK_GRAFT_SF1_XMX overrides.
-        val childXmx = sys.env.getOrElse("SPARK_GRAFT_SF1_XMX",
-          (Runtime.getRuntime.maxMemory * 6 / 10).toString)
-        val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-          s"-Xmx$childXmx",
-          "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.Sf1Probe")).toArray
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.environment().put("SPARK_GRAFT_SF1_BASE", base.getAbsolutePath)
-        pb.environment().put("SPARK_GRAFT_SF1_OUT", out.getAbsolutePath)
-        pb.environment().put("SPARK_GRAFT_SF1_BUDGET", sf1Budget.toString)
-        pb.environment().put("SPARK_GRAFT_SF1_QUIETBAR", sf1QuietBar.toString)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-        pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        // child stdout would interleave with the parent's JSON lines —
-        // the fragment arrives via the out file; keep stderr visible
-        pb.redirectOutput(java.lang.ProcessBuilder.Redirect.DISCARD)
-        pb.redirectError(java.lang.ProcessBuilder.Redirect.INHERIT)
-        val p = pb.start()
-        // wall cap = attempt budget + synth/bring-up headroom
-        val ok = p.waitFor((sf1Budget * 1.2 + 600).toLong,
-          java.util.concurrent.TimeUnit.SECONDS)
-        if (!ok) {
-          p.destroyForcibly()
-          System.err.println("[bench] sf1 fork timed out — killed")
-          None
-        } else if (p.exitValue() != 0 || !out.exists()) {
-          // distinguish a memory-killed fork (SIGKILL → 137) from a
-          // genuine probe failure so a silently-degraded record is
-          // attributable (ADVICE r14)
-          val why = p.exitValue() match {
-            case 137 => "exit 137 (SIGKILL — likely OOM-killed; " +
-              "lower SPARK_GRAFT_SF1_XMX or free memory)"
-            case 0 => "exit 0 but no output file"
-            case other => s"exit $other"
-          }
-          System.err.println(s"[bench] sf1 fork failed: $why")
-          None
-        } else {
-          val fragment = new String(
-            java.nio.file.Files.readAllBytes(out.toPath), "UTF-8")
-          // ratios arrive via the TSV side channel the probe writes next
-          // to the fragment (ADVICE r14 — one serializer, no regex
-          // re-parse of the JSON); absence just drops the recap digest
-          val tsv = new java.io.File(out.getAbsolutePath + ".ratios.tsv")
-          // readAllBytes + explicit UTF-8: the probe writes the TSV as
-          // UTF-8, and a Source would leak its file handle per bench run
-          // (ADVICE r15)
-          val ratioRows =
-            if (!tsv.exists()) Seq.empty[(String, Double)]
-            else new String(java.nio.file.Files.readAllBytes(tsv.toPath), "UTF-8")
-              .linesIterator.filter(_.nonEmpty)
-              .flatMap { l =>
-                l.split("\t") match {
-                  case Array(k, v) => scala.util.Try((k, v.toDouble)).toOption
-                  case _ => None
-                }
-              }.toSeq
-          Some((fragment, ratioRows))
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] sf1 fork failed: ${e.getMessage}")
-        None
-      }
-    // Fallback only (fork failure): the pre-r14 in-process probe, with
-    // every documented caveat about measuring in a suite-aged heap.
-    def inProcessProbe(): (Seq[(String, Double, Double, Double, Boolean)], Seq[String], String) = {
-      val dst = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1")
-      ScaleProbe.synthesize(spark, sfDir, dst)
-      // the probe measures 10× the data in the same heap the whole suite
-      // just ran through — start it from a drained block manager, and
-      // drain between probe queries (see maybeGc above)
-      Caches.releaseAll(spark)
-      System.gc()
-      val targets = (results.sortBy(-_._2).map(_._1).take(sf1Top) ++
-        results.map(_._1).filter(sf1Forced)).distinct
-      val byName = results.map(r => r._1 -> r._2).toMap
-      val deadline = System.nanoTime() + (sf1Budget * 1e9).toLong
-      val done = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Double, Boolean)]
-      val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-      val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-      // Contention-proofing (VERDICT r12 item 1) + attempt SYMMETRY
-      // (round 13c): the r12 record carried 23× for a plan that measures
-      // 2.89× clean (one unflagged run, roaming load); the r13 records
-      // then swung 3.8×–11.4× for the SAME pagerank plan because the
-      // suite leg is best-of-N (warm: footers cached, codegen compiled)
-      // while the sf1 leg was a single COLD attempt retried only when
-      // the sentinel was hot — a warm denominator under a cold numerator
-      // overstates every unretried ratio. Every sf1 entry now gets the
-      // SAME best-of-2 the suite leg got (budget-guarded), carries its
-      // own sentinel reading, and is listed under "sf1_contended" if the
-      // kept attempt's sentinel exceeds the quiet bar (2× the suite's
-      // median, floored at 150 ms) — a hot or cold-start ratio can no
-      // longer be mistaken for a plan property.
-      val suiteCalibs = results.flatMap(_._4).sorted
-      val quietBar =
-        if (suiteCalibs.isEmpty) 0.15
-        else math.max(0.15, 2 * suiteCalibs(suiteCalibs.size / 2))
-      targets.foreach { name =>
-        if (System.nanoTime() > deadline) skipped += name
-        else {
-          def attempt(): Option[(Double, Double)] = {
-            val calib = calibrate()
-            val t0 = System.nanoTime()
-            val ok =
-              try {
-                SparkEntry.queries(name)(spark, dst).write.format("noop").mode("overwrite").save()
-                true
-              } catch { case e: Throwable =>
-                System.err.println(s"[bench] sf1 $name failed: ${e.getMessage}")
-                false
-              }
-            val elapsed = (System.nanoTime() - t0) / 1e9
-            Caches.releaseAll(spark)
-            System.gc()
-            // a failed run's wall time is NOT a timing — drop the entry
-            if (ok) Some((elapsed, calib)) else None
-          }
-          attempt() match {
-            case None => failed += name
-            case Some(first) =>
-              val best =
-                if (System.nanoTime() > deadline) first
-                else attempt().map(s => if (s._1 < first._1) s else first).getOrElse(first)
-              done += ((name, best._1, best._1 / math.max(byName(name), 1e-3),
-                best._2, best._2 > quietBar))
-          }
-        }
-      }
-      (done.toSeq, skipped.toSeq ++ failed.map(_ + ":failed"), dst)
+    spark
+  }
+
+  final case class Timing(sec: Double, calib: Double)
+
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  private def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One attempt: the calibration sentinel, the timed noop write of `df`,
+    * then release of every cached block the query left behind. None when
+    * `df` fails to build or run. */
+  def attempt(spark: SparkSession, name: String)(df: => DataFrame): Option[Timing] = {
+    val (_, calib) = timed(noop(spark.range(1L << 22).selectExpr("sum(id * 2 + 1) AS s")))
+    val (run, sec) = timed(Try(noop(df)))
+    Caches.releaseAll(spark)
+    run.failed.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+    run.toOption.map(_ => Timing(sec, calib))
+  }
+
+  /** [[attempt]]'s seconds; `name` is added to `failed` when it fails. */
+  private def secsOrFailed(spark: SparkSession, name: String, failed: ArrayBuffer[String])(
+      df: => DataFrame): Option[Double] = {
+    val t = attempt(spark, name)(df).map(_.sec)
+    if (t.isEmpty) failed += name
+    t
+  }
+
+  /** Up to `n` attempts, fewer once past `deadline`; None if one fails. */
+  @tailrec private def attempts(n: Int, deadline: Long = Long.MaxValue,
+      done: List[Timing] = Nil)(run: => Option[Timing]): Option[List[Timing]] =
+    if (n == 0 || (done.nonEmpty && System.nanoTime() > deadline)) Some(done)
+    else run match {
+      case Some(t) => attempts(n - 1, deadline, t :: done)(run)
+      case None    => None
     }
 
-    // Locale.ROOT: f"" uses the default locale — a comma decimal separator
-    // would corrupt the JSON line.
-    def sec(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def ms(v: Double): String = math.round(v * 1000).toString
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + sec(v) }
-      .mkString("{", ",", "}")
-    // per-query sentinel reading from the attempt that produced the best
-    // time (ms) — an inflated entry means that measurement ran under load
-    val calibQs = results.map { case (k, _, c, _) => "\"" + k + "\":" + ms(c) }
-      .mkString("{", ",", "}")
-    val allCalibs = results.flatMap(_._4).sorted
+  private def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+  private def r2(v: Double): Double = math.round(v * 100) / 100.0
+  private def ms(v: Double): Long = math.round(v * 1000)
+  private def kv(xs: Iterable[(String, Any)]): ListMap[String, Any] = ListMap(xs.toSeq: _*)
+  private def record(fields: (String, Any)*): ObjectNode = mapper.valueToTree[ObjectNode](kv(fields))
+
+  /** The process exit status for `record`: non-zero iff anything failed. */
+  def exitCode(record: JsonNode): Int = if (record.path("failed").isEmpty) 0 else 1
+
+  /** Queries the sf1 leg re-times whatever their suite rank: the
+    * composites, the pair queries whose sub-quadratic plans it audits,
+    * and one query per family that reads the scaled events/orders
+    * tables. */
+  val Sf1Forced: Set[String] = Set(
+    "q_dedup_embedding", "q_pipeline_crossmodal",
+    "q_variant_extract", "q_interpolate", "q_m4_downsample",
+    "q_target_encode", "q_events_funnel", "q_cusum_shift",
+    "q_pipeline_full", "q_intake", "q_label_prop", "q_lm_trigram_score",
+    "q_quality_classifier", "q_epoch_order",
+    "q_pipeline_gated", "q_epoch_mixing", "q_batch_buckets",
+    "q_exif_burst_dedup",
+    "q_doc_repetition", "q_repetition_filter", "q_geo_diversity_mix",
+    "q_intake_gated", "q_pq_recon_error",
+    "q_intake_full", "q_html_boilerplate")
+  /** How many of the slowest suite queries the sf1 leg re-times. */
+  val Sf1Top = 20
+
+  /** The `suite` profile over `queries` (SparkEntry's, in `main`). */
+  def suite(spark: SparkSession, dir: String, queries: Map[String, Query],
+      runs: Int, sf1: Boolean): ObjectNode = {
+    val failed = ArrayBuffer.empty[String]
+    // dead broadcast/checkpoint blocks are reclaimed only when the driver
+    // GC collects their references; a GC every 24 queries lets the
+    // ContextCleaner keep up over a long suite
+    val results = queries.toSeq.sortBy(_._1).zipWithIndex.flatMap { case ((name, fn), i) =>
+      val r = attempts(runs)(attempt(spark, name)(fn(spark, dir)))
+      if ((i + 1) % 24 == 0) System.gc()
+      if (r.isEmpty) failed += name
+      r.map(name -> _)
+    }
+    val best = results.map { case (n, ts) => n -> ts.minBy(_.sec) }
+    val calibs = results.flatMap(_._2.map(_.calib)).sorted
     def pct(p: Double): Double =
-      if (allCalibs.isEmpty) 0.0
-      else allCalibs(math.min(allCalibs.size - 1, (p * allCalibs.size).toInt))
-    val calibStats =
-      s"""{"n":${allCalibs.size},"median_ms":${ms(pct(0.5))},""" +
-        s""""p90_ms":${ms(pct(0.9))},"max_ms":${ms(allCalibs.lastOption.getOrElse(0.0))}}"""
-    val total = results.map(_._2).sum
-    def r2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // sf1Json is the spliced fragment; sf1RatioRows is the SAME data as
-    // rows for the recap digest — one machine-readable channel (the
-    // probe's ratios TSV / the fallback's own rows) feeds both, instead
-    // of the recap re-parsing ratios out of the serialized JSON with a
-    // format-fragile regex (ADVICE r14).
-    val (sf1Json, sf1RatioRows) =
-      if (!sf1Enabled) ("", Seq.empty[(String, Double)])
-      else forkSf1Probe() match {
-        case Some((fragment, ratioRows)) => ("," + fragment, ratioRows)
-        case None =>
-          val (sf1Rows, sf1Skipped, sf1Dir) = inProcessProbe()
-          val ratios = sf1Rows.map { case (k, _, r, _, _) => "\"" + k + "\":" + r2(r) }
-            .mkString("{", ",", "}")
-          val secs = sf1Rows.map { case (k, s, _, _, _) => "\"" + k + "\":" + sec(s) }
-            .mkString("{", ",", "}")
-          val calibs = sf1Rows.map { case (k, _, _, c, _) => "\"" + k + "\":" + ms(c) }
-            .mkString("{", ",", "}")
-          val contended = sf1Rows.collect { case (k, _, _, _, true) => "\"" + k + "\"" }
-            .mkString("[", ",", "]")
-          val skip = sf1Skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
-          (s""","sf1_ratios":$ratios,"sf1_secs":$secs,"sf1_calib_ms":$calibs""" +
-            s""","sf1_contended":$contended,"sf1_skipped":$skip,"sf1_dir":"$sf1Dir"""" +
-            s""","sf1_jvm":"shared-fallback"""",
-            sf1Rows.map { case (k, _, r, _, _) => (k, r) })
+      if (calibs.isEmpty) 0.0 else calibs(math.min(calibs.size - 1, (p * calibs.size).toInt))
+    // ServingIndexes/model first builds this run triggered, sorted
+    val builds = ServingIndexes.buildLog.toSeq.sortBy(_._1)
+    val rec = record(
+      "metric" -> "total",
+      "value" -> r3(best.map(_._2.sec).sum),
+      "unit" -> "sec",
+      "queries" -> kv(best.map { case (n, t) => n -> r3(t.sec) }),
+      "calib_ms" -> kv(best.map { case (n, t) => n -> ms(t.calib) }),
+      "calib" -> kv(Seq("n" -> calibs.size, "median_ms" -> ms(pct(0.5)),
+        "p90_ms" -> ms(pct(0.9)), "max_ms" -> ms(calibs.lastOption.getOrElse(0.0)))),
+      "runs" -> runs,
+      "artifact_build_sec" -> kv(builds.map { case (k, s) => k -> r3(s) }),
+      "artifact_build_total_sec" -> r3(builds.map(_._2).sum),
+      "sf" -> dir)
+    if (sf1 && best.nonEmpty) {
+      val byTime = best.sortBy(-_._2.sec)
+      val targets = (byTime.take(Sf1Top) ++ best.filter(b => Sf1Forced(b._1))).distinct
+      // a sentinel reading above twice the suite's median marks an sf1
+      // measurement as taken under load
+      val quietBar = math.max(0.15, 2 * pct(0.5))
+      forkSf1(targets.map { case (n, t) => n -> t.sec }, quietBar) match {
+        case Right(leg) =>
+          leg.remove("failed").elements().asScala.foreach(f => failed += s"sf1:${f.asText}")
+          rec.setAll[JsonNode](leg)
+        case Left(why) =>
+          System.err.println(s"[bench] sf1 fork failed: $why")
+          failed += s"sf1_probe: $why"
       }
-    // Every ServingIndexes/model first build this run triggered, with its
-    // wall seconds (VERDICT r16 item 3a): the record carries the true
-    // cost of each stored artifact/session model instead of hiding it in
-    // a discarded best-of-N first attempt. Sorted for a stable record.
-    val buildLog = ServingIndexes.buildLog.toSeq.sortBy(_._1)
-    val buildJson = buildLog
-      .map { case (k, s) => "\"" + k + "\":" + sec(s) }.mkString("{", ",", "}")
-    val buildTotal = buildLog.map(_._2).sum
-    val totalLine = s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"calib_ms":$calibQs,"calib":$calibStats,"runs":$runs,"artifact_build_sec":$buildJson,"artifact_build_total_sec":${sec(buildTotal)},"sf":"$sfDir"$sf1Json}"""
-    // The per-round harness keeps only the TAIL of stdout (2000 chars), so
-    // the full 293-query map NEVER survives into BENCH_r{N}.json — r10..r16
-    // all have `parsed: null` because the only line carrying
-    // `"metric":"total"` lost its head (VERDICT r16 item 2, broken for 7
-    // rounds). The full line therefore goes to the repo files ONLY
-    // (BENCH_FULL.json = latest run, BENCH_HISTORY.jsonl = one line per
-    // run for tools/bench_diff.py), and stdout carries exactly ONE
-    // `"metric":"total"` line — the compact recap printed LAST below, small
-    // enough (≤1500 chars) to survive any tail capture intact.
-    try {
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (totalLine + "\n").getBytes("UTF-8"))
-      val hist = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl"))
-      java.nio.file.Files.write(hist, (totalLine + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] full-JSON persist failed: ${e.getMessage}")
     }
-    val top10 = results.sortBy(-_._2).take(10)
-      .map { case (k, v, _, _) => "\"" + k + "\":" + sec(v) }.mkString("{", ",", "}")
-    // recap's worst-ratio digest from the machine-readable ratio rows
-    val sf1Recap =
-      if (sf1RatioRows.isEmpty) ""
-      else {
-        val worst = sf1RatioRows.sortBy(-_._2).take(5)
-          .map { case (k, r) => "\"" + k + "\":" + r2(r) }.mkString("{", ",", "}")
-        s""","sf1_n":${sf1RatioRows.size},"sf1_worst_ratios":$worst"""
+    rec.set[JsonNode]("failed", mapper.valueToTree[JsonNode](failed.toSeq))
+    rec
+  }
+
+  /** Runs the `sf1` profile in a fresh JVM with this JVM's flags and a
+    * smaller heap (60%: this JVM stays resident meanwhile), returning
+    * its record. */
+  private def forkSf1(targets: Seq[(String, Double)], quietBar: Double): Either[String, ObjectNode] = {
+    val flags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms"))
+    val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++ flags ++ Seq(
+      s"-Xmx${Runtime.getRuntime.maxMemory * 6 / 10}",
+      "-cp", System.getProperty("java.class.path"), "graft.Bench", "sf1", quietBar.toString) ++
+      targets.map { case (n, s) => s"$n=$s" }
+    val p = new ProcessBuilder(cmd: _*)
+      .redirectError(ProcessBuilder.Redirect.INHERIT).start()
+    val out = Future(new String(p.getInputStream.readAllBytes(), UTF_8))(ExecutionContext.global)
+    // synthesis and JVM bring-up run outside the budget
+    if (!p.waitFor((sf1Budget * 1.2 + 600).toLong, TimeUnit.SECONDS)) {
+      p.destroyForcibly()
+      Left("timed out, killed")
+    } else {
+      val last = Try(Await.result(out, 1.minute)).toOption.toSeq
+        .flatMap(_.linesIterator.filter(_.startsWith("{"))).lastOption
+      last.flatMap(l => Try(mapper.readTree(l)).toOption).collect {
+        case o: ObjectNode if o.has("sf1_ratios") => o
+      }.toRight(p.exitValue() match {
+        case 137 => "exit 137 (SIGKILL, likely OOM-killed)"
+        case code => s"exit $code without a record"
+      })
+    }
+  }
+
+  /** The `sf1` profile: re-times each `name -> suiteSec` target over the
+    * sf1 corpus (synthesized first if missing), best of 2 within
+    * [[sf1Budget]]. */
+  def sf1(spark: SparkSession, quietBar: Double, targets: Seq[(String, Double)]): ObjectNode = {
+    if (!ScaleProbe.isSynthesized(sfDir, sf1Dir, ScaleProbe.AllTables))
+      ScaleProbe.synthesize(spark, sfDir, sf1Dir)
+    val deadline = System.nanoTime() + (sf1Budget * 1e9).toLong
+    val done = ArrayBuffer.empty[(String, Double, Timing)]
+    val skipped, failed = ArrayBuffer.empty[String]
+    targets.foreach { case (name, suiteSec) =>
+      if (System.nanoTime() > deadline) skipped += name
+      else attempts(2, deadline) {
+        System.gc()
+        attempt(spark, name)(SparkEntry.queries(name)(spark, sf1Dir))
+      } match {
+        case None => failed += name
+        case Some(ts) =>
+          val b = ts.minBy(_.sec)
+          done += ((name, b.sec / math.max(suiteSec, 1e-3), b))
       }
-    // Assemble the compact line under the 1500-char budget: the optional
-    // digests are dropped (loudly, via "omitted") before the itemized
-    // build log, which is dropped last in favour of its total.
-    def compact(withTop10: Boolean, withSf1: Boolean, withBuilds: Boolean): String = {
-      val opt = (if (withBuilds) s""","artifact_build_sec":$buildJson""" else ""","artifact_build_omitted":"see BENCH_FULL.json"""") +
-        s""","artifact_build_total_sec":${sec(buildTotal)}""" +
-        (if (withTop10) s""","top10":$top10""" else "") +
-        (if (withSf1) sf1Recap else "")
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${results.size},"runs":$runs,"sf":"$sfDir","calib":$calibStats,"full":"BENCH_FULL.json"$opt}"""
     }
-    val recapLine = Seq(
-      compact(withTop10 = true, withSf1 = true, withBuilds = true),
-      compact(withTop10 = false, withSf1 = true, withBuilds = true),
-      compact(withTop10 = false, withSf1 = false, withBuilds = true),
-      compact(withTop10 = false, withSf1 = false, withBuilds = false))
-      .find(_.length <= 1500)
-      .getOrElse(compact(withTop10 = false, withSf1 = false, withBuilds = false))
+    record(
+      "sf1_ratios" -> kv(done.map(d => d._1 -> r2(d._2))),
+      "sf1_secs" -> kv(done.map(d => d._1 -> r3(d._3.sec))),
+      "sf1_calib_ms" -> kv(done.map(d => d._1 -> ms(d._3.calib))),
+      "sf1_contended" -> done.filter(_._3.calib > quietBar).map(_._1),
+      "sf1_skipped" -> skipped,
+      "sf1_dir" -> sf1Dir,
+      "sf1_jvm" -> "fresh",
+      "failed" -> failed)
+  }
+
+  val DecadeQueries: Seq[String] = Seq(
+    "q_pagerank", "q_label_prop", "q_triangles",
+    "q_dedup_threshold_sweep", "q_dedup_embedding")
+
+  /** The `decade` profile. SPARK_GRAFT_SF10_QUERIES overrides
+    * [[DecadeQueries]]; SPARK_GRAFT_SF10_TABLES the tables replicated to
+    * sf10, which must cover everything those queries read. */
+  def decade(spark: SparkSession): ObjectNode = {
+    def list(k: String) = sys.env.get(k).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+    val queries = list("SPARK_GRAFT_SF10_QUERIES").getOrElse(DecadeQueries)
+    val tables = list("SPARK_GRAFT_SF10_TABLES").map(_.toSet)
+      .getOrElse(Set("lineitem", "documents", "embeddings"))
+    val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft-sf10")
+    if (!ScaleProbe.isSynthesized(sfDir, sf1Dir, ScaleProbe.AllTables))
+      ScaleProbe.synthesize(spark, sfDir, sf1Dir)
+    if (!ScaleProbe.isSynthesized(sf1Dir, sf10Dir, tables))
+      ScaleProbe.synthesizeTables(spark, sf1Dir, sf10Dir, tables)
+    val failed = ArrayBuffer.empty[String]
+    def time(q: String, dir: String): Option[Double] = {
+      System.gc()
+      secsOrFailed(spark, s"$q@$dir", failed)(SparkEntry.queries(q)(spark, dir))
+    }
+    val rows = queries.map { q =>
+      val (t1, t10) = (time(q, sf1Dir), time(q, sf10Dir))
+      (q, t1, t10, for (a <- t1; b <- t10) yield b / math.max(a, 1e-3))
+    }
+    def byQuery(f: ((String, Option[Double], Option[Double], Option[Double])) => Option[Double]) =
+      kv(rows.map(r => r._1 -> f(r).map(r3)))
+    record("metric" -> "sf10_probe", "cpus" -> cpus.toInt, "partitions" -> cpus.toInt,
+      "sf1_secs" -> byQuery(_._2), "sf10_secs" -> byQuery(_._3), "decade_ratios" -> byQuery(_._4),
+      "failed" -> failed)
+  }
+
+  /** The `intake` profile: the sf0.1 arrival split stays fixed while the
+    * standing corpus grows 10×. Every standing relation (LSH and IVF
+    * indexes, fingerprints, benchmark grams) is built before the timed
+    * write, as a deployment would serve them from stores. */
+  def intake(spark: SparkSession): ObjectNode = {
+    if (!ScaleProbe.isSynthesized(sfDir, sf1Dir, ScaleProbe.AllTables))
+      ScaleProbe.synthesize(spark, sfDir, sf1Dir)
+    val failed = ArrayBuffer.empty[String]
+    def timeAt(dir: String): Option[Double] = {
+      val arrivals = table(spark, sfDir, "documents")
+        .filter(pmod(col("doc_id"), lit(5)) === 0).localCheckpoint()
+      val corpus = table(spark, dir, "documents").filter(pmod(col("doc_id"), lit(5)) =!= 0)
+      val emb = table(spark, dir, "embeddings")
+      val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
+      val lshDir = Artifacts.ensureDedupLsh(spark, dir)
+      val ivfDir = Artifacts.ensureSemdedupIvf(spark, dir)
+      val corpusFps = corpus
+        .select(md5(concat_ws(" ", tokens(col("text")))).as("fp"))
+        .localCheckpoint()
+      val benchSh = TextDedup.shingles(
+        corpus.filter(pmod(col("doc_id"), lit(7)) === 0),
+        col("doc_id"), col("text"), Dedup.ShingleK)
+      val benchGrams = benchSh.select(col("s")).distinct().localCheckpoint()
+      benchSh.unpersist()
+      System.gc()
+      secsOrFailed(spark, s"intake@$dir", failed)(Pipeline.intakeBatch(
+        arrivals, corpusFps, lshDir, emb, corpusEmb, ivfDir, benchGrams))
+    }
+    val (a, b) = (timeAt(sfDir), timeAt(sf1Dir))
+    record("metric" -> "intake_probe",
+      "fixed_arrival_secs" -> kv(Seq("sf0.1" -> a.map(r3), "sf1" -> b.map(r3))),
+      "corpus_ratio" -> (for (x <- a; y <- b) yield r3(y / math.max(x, 1e-3))),
+      "failed" -> failed)
+  }
+
+  /** The suite record's stdout form: headline numbers plus digests,
+    * dropping the lowest-priority digest until it fits 1500 chars (a
+    * consumer that keeps only the tail of stdout still gets it whole). */
+  def compact(full: JsonNode): String = {
+    def pairs(k: String) = full.path(k).properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toSeq
+    val queries = pairs("queries")
+    val ratios = pairs("sf1_ratios")
+    val base = Seq("metric" -> "total", "value" -> full.get("value"), "unit" -> "sec",
+      "n_queries" -> queries.size, "runs" -> full.get("runs"), "sf" -> full.get("sf"),
+      "calib" -> full.get("calib"), "full" -> "BENCH_FULL.json",
+      "n_failed" -> full.path("failed").size,
+      "artifact_build_total_sec" -> full.get("artifact_build_total_sec"))
+    val digests = Seq(
+      Seq("failed" -> full.path("failed")),
+      Seq("artifact_build_sec" -> full.get("artifact_build_sec")),
+      if (ratios.isEmpty) Nil
+      else Seq("sf1_n" -> ratios.size, "sf1_worst_ratios" -> kv(ratios.sortBy(-_._2).take(5))),
+      Seq("top10" -> kv(queries.sortBy(-_._2).take(10))))
+    val lines = (digests.size to 0 by -1).map(k => mapper.writeValueAsString(kv(base ++ digests.take(k).flatten)))
+    lines.find(_.length <= 1500).getOrElse(lines.last)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val profile = args.headOption.getOrElse("suite")
+    val run: SparkSession => ObjectNode = profile match {
+      case "suite" =>
+        val sf1On = sys.env.getOrElse("SPARK_GRAFT_SF1_PROBE", "auto") match {
+          case "0" | "off" => false
+          case "auto"      => sfDir.contains("sf0.1")
+          case _           => true
+        }
+        val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
+        suite(_, sfDir, selected(SparkEntry.queries), runs, sf1On)
+      case "sf1" =>
+        sf1(_, args(1).toDouble, args.drop(2).toSeq.map { a =>
+          val i = a.lastIndexOf('='); a.take(i) -> a.drop(i + 1).toDouble
+        })
+      case "decade" => decade
+      case "intake" => intake
+      case other => throw new IllegalArgumentException(
+        s"unknown profile '$other' (expected suite, decade or intake)")
+    }
+    val spark = session()
+    // warm the JVM, codegen and scheduler so the first query isn't charged
+    noop(spark.range(1 << 20).selectExpr("sum(id) AS s"))
+    val rec = run(spark)
     spark.stop()
-    // printed after spark.stop() so no late executor/log line can follow
-    // it: the LAST stdout line is the one `"metric":"total"` JSON.
-    println(recapLine)
+    val full = mapper.writeValueAsString(rec)
+    if (profile == "suite") {
+      try {
+        Files.write(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")),
+          (full + "\n").getBytes(UTF_8))
+        Files.write(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl")),
+          (full + "\n").getBytes(UTF_8), StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] full-record persist failed: ${e.getMessage}")
+      }
+      println(compact(rec))
+    } else println(full)
+    sys.exit(exitCode(rec))
   }
 }

@@ -544,13 +544,12 @@ object Artifacts {
   private[ops] def ensureExactTopK(spark: SparkSession, dir: String,
       qids: Seq[Long], k: Int): String =
     graft.ServingIndexes.ensure(s"exact-topk-k$k-q" + {
-      // digest, not the raw id list: the qid set only disambiguates the
-      // full vs sampled baselines within a session, and the raw join
-      // would bloat the bench's artifact_build_sec keys past the compact
-      // line's budget
+      // full digest of the qid set, not the raw id list (which would
+      // bloat the bench's artifact_build_sec keys): it tells the full and
+      // sampled baselines apart, and a truncated digest could collide
       val md = java.security.MessageDigest.getInstance("MD5")
       md.digest(qids.mkString("_").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(8)
+        .map("%02x".format(_)).mkString
     }, dir) { d =>
       VectorSearch.cosineTopK(
           table(spark, dir, "embeddings"), col("vec_id"), col("embedding"), qids, k)

@@ -1036,6 +1036,15 @@ object Graph {
     * rather than duplicating the edges both ways). Overflow envelope:
     * `raw · scale` must fit a long, so max in-degree ≤ ~9·10⁶ at the
     * default millionth scale — re-scale down for denser graphs.
+    *
+    * Input layout: `edges` must already be hash-partitioned by `hub` at
+    * the session's shuffle partition count (`repartition(col("hub"))`, as
+    * [[qHits]] does below its dedup); that is what makes every
+    * hub-keyed join exchange-free, since this method does not
+    * repartition. Any other layout still gives the same scores, but pays
+    * an extra exchange of the edge relation every round. Each
+    * `(hub, auth)` pair counts once per occurrence, so pass distinct
+    * pairs for a simple graph.
     */
   def hitsInt(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     // the hub-keyed layout is established by the CALLER's repartition

@@ -310,6 +310,44 @@ class HubTransformSpec extends SparkFunSuite {
     assert(none.columns.toSeq == Seq("round_id", "model_id"))
   }
 
+  test("readHub: derived schema over CSV and parquet files, and an empty selection") {
+    import spark.implicits._
+    val hub = tmpDir("hub-derived")
+    new java.io.File(s"$hub/hub-config").mkdirs()
+    new java.io.File(s"$hub/raw").mkdirs()
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(resource("integration/data/flu-metrocast/hub-config/tasks.json")),
+      java.nio.file.Paths.get(s"$hub/hub-config/tasks.json"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$hub/raw/2025-01-25-teamA-modelX.csv"),
+      "reference_date,target,horizon,location,target_end_date,output_type,output_type_id,value\n" +
+        "2025-01-25,ILI ED visits,0,NYC,2025-01-25,quantile,0.5,10.5\n" +
+        "2025-01-25,ILI ED visits,1,Bronx,2025-02-01,quantile,0.5,NA\n")
+    // parquet physical types differ from the derived schema: the read casts
+    ModelOutputWriter.writeSingleParquet(
+      Seq(("2025-02-01", "ILI ED visits", 2, "Queens", "2025-02-15", "quantile", 0.25, 7.0f))
+        .toDF("reference_date", "target", "horizon", "location", "target_end_date",
+          "output_type", "output_type_id", "value"),
+      s"$hub/raw", "2025-02-01-teamB-modelY")
+    val schema = HubSchema.deriveSchema(HubConfig.load(hub).get)
+    assert(schema.fieldNames.takeRight(2).toSeq == Seq("round_id", "model_id"))
+
+    val all = HubTransform.readHub(spark, hub)
+    assert(all.columns.toSeq == schema.fieldNames.toSeq)
+    assert(all.select("model_id", "round_id").distinct().orderBy("model_id").as[(String, String)]
+      .collect().toSeq == Seq(("teamA-modelX", "2025-01-25"), ("teamB-modelY", "2025-02-01")))
+    assert(all.filter(col("value").isNull).count() == 1)
+    assert(all.filter(col("model_id") === "teamB-modelY").select("horizon", "value")
+      .as[(Long, Double)].collect().toSeq == Seq((2L, 7.0)))
+
+    val parquetOnly = HubTransform.readHub(spark, hub, modelIds = Seq("teamB-modelY"))
+    assert(parquetOnly.count() == 1 && parquetOnly.inputFiles.length == 1)
+
+    val none = HubTransform.readHub(spark, hub, roundIds = Seq("2099-01-01"))
+    assert(none.count() == 0)
+    assert(none.columns.toSeq == schema.fieldNames.toSeq)
+  }
+
   test("retrigger touches metadata and re-fires add for every raw file " +
       "(faas/lambda_retrigger_model_output_add.py:35-53)") {
     val hub = tmpDir("hub-retrig")
