@@ -1,59 +1,48 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.VecDot
+import graft.functions._
 
 /** Session wiring for the graft engine: custom function registration (SQL
   * + Column surfaces) and the recommended session configuration.
   */
 object GraftSession {
 
-  /** Register graft's custom expressions on an existing session so SQL text
-    * can call them (`SELECT vec_dot(a, b) ...`). Idempotent.
+  /** graft's SQL functions as (name, expression class, builder). Both
+    * [[registerFunctions]] and [[GraftExtensions]] register exactly this
+    * list.
     */
-  def registerFunctions(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      (exprs: Seq[Expression]) => functions.VecDot(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_key",
-      (exprs: Seq[Expression]) => functions.HilbertKey(
-        exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_count",
-      (exprs: Seq[Expression]) => functions.TokenCount(exprs(0)),
-      "built-in")
-    unaryWalkers.foreach { case (name, mk) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, (exprs: Seq[Expression]) => mk(exprs(0)), "built-in")
-    }
-  }
-
-  /** The unary media byte walkers, registered under their SQL names so
-    * SQL text can run the decode-free prep path
-    * (`SELECT exif_datetime(content) ...`) — same expressions the Column
-    * surfaces wrap.
-    */
-  private[graft] val unaryWalkers: Seq[(String, Expression => Expression)] = Seq(
-    "image_dims" -> (functions.ImageDims(_)),
-    "mp4_meta" -> (functions.Mp4Meta(_)),
-    "wav_meta" -> (functions.WavMeta(_)),
-    "wav_data_len" -> (functions.WavDataLen(_)),
-    "jpeg_dqt" -> (functions.JpegDqt(_)),
-    "exif_orient" -> (functions.ExifOrient(_)),
-    "exif_datetime" -> (functions.ExifDateTime(_)),
-    "exif_gps_lat" -> (functions.ExifGps(_, lon = false)),
-    "exif_gps_lon" -> (functions.ExifGps(_, lon = true)),
-    "exif_thumb" -> (functions.ExifThumb(_)),
-    "repetition_profile" -> (functions.RepetitionProfile(_)),
-    "html_text" -> (functions.HtmlText(_)),
-    "html_links" -> (functions.HtmlLinks(_)),
+  private[graft] val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VecDot], e => VecDot(e(0), e(1))),
+    ("hilbert_key", classOf[HilbertKey],
+      e => HilbertKey(e(0), e(1), e(2).eval(null).asInstanceOf[Number].intValue())),
+    ("token_count", classOf[TokenCount], e => TokenCount(e(0))),
+    ("image_dims", classOf[ImageDims], e => ImageDims(e(0))),
+    ("mp4_meta", classOf[Mp4Meta], e => Mp4Meta(e(0))),
+    ("wav_meta", classOf[WavMeta], e => WavMeta(e(0))),
+    ("wav_data_len", classOf[WavDataLen], e => WavDataLen(e(0))),
+    ("jpeg_dqt", classOf[JpegDqt], e => JpegDqt(e(0))),
+    ("exif_orient", classOf[ExifOrient], e => ExifOrient(e(0))),
+    ("exif_datetime", classOf[ExifDateTime], e => ExifDateTime(e(0))),
+    ("exif_gps_lat", classOf[ExifGps], e => ExifGps(e(0), lon = false)),
+    ("exif_gps_lon", classOf[ExifGps], e => ExifGps(e(0), lon = true)),
+    ("exif_thumb", classOf[ExifThumb], e => ExifThumb(e(0))),
+    ("repetition_profile", classOf[RepetitionProfile], e => RepetitionProfile(e(0))),
+    ("html_text", classOf[HtmlText], e => HtmlText(e(0))),
+    ("html_links", classOf[HtmlLinks], e => HtmlLinks(e(0))),
   )
+
+  /** Register graft's SQL functions on an existing session so SQL text
+    * can call them (`SELECT vec_dot(a, b) ...`). Idempotent. Registers
+    * functions only: the planner rules come with [[builder]].
+    */
+  def registerFunctions(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
 
   /** Builder with the engine's recommended configuration; callers add
     * master/memory. `nanosAsLong` is set up front so parquet ns timestamps
@@ -68,7 +57,7 @@ object GraftSession {
 
   /** Column-API surface for the custom expressions. */
   def vec_dot(a: Column, b: Column): Column = VecDot(a, b)
-  def token_count(s: Column): Column = functions.TokenCount(s)
+  def token_count(s: Column): Column = TokenCount(s)
 }
 
 /** `SparkSessionExtensions` hook — usable via
@@ -77,30 +66,8 @@ object GraftSession {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("hilbert_key"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.HilbertKey].getName, "hilbert_key"),
-      (exprs: Seq[Expression]) => graft.functions.HilbertKey(
-        exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("token_count"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.TokenCount].getName, "token_count"),
-      (exprs: Seq[Expression]) => graft.functions.TokenCount(exprs(0))))
-    GraftSession.unaryWalkers.foreach { case (name, mk) =>
-      e.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          mk(org.apache.spark.sql.catalyst.expressions.Literal(null)).getClass.getName,
-          name),
-        (exprs: Seq[Expression]) => mk(exprs(0))))
+    GraftSession.sqlFunctions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }
     e.injectPlannerStrategy(_ => new graft.plans.TopKPerKeyStrategy)
     e.injectOptimizerRule(_ => graft.plans.NativeTopKRule)

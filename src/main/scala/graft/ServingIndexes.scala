@@ -1,85 +1,81 @@
 package graft
 
+import java.util.concurrent.locks.ReentrantLock
 import scala.collection.concurrent.TrieMap
 
-/** Session-scoped TRAIN-ONCE registry for the persisted serving artifacts
-  * (IVF/LSH/PQ vector indexes, the MinHash-LSH dedup index): the first
-  * query to need artifact `key` over data directory `dataDir` builds it
-  * into a [[ScratchDirs]] scratch path; every later query in the same JVM
-  * — including the other registered queries that serve from the same
-  * artifact, and repeated benchmark attempts of the same query — serves
-  * from the stored bytes without retraining. This is the
-  * build-once/serve-many contract a production index has across a whole
-  * serving fleet, applied across the query suite: before round 11 each
-  * indexed query trained its own scratch copy, so one bench pass built
-  * the IVF index four times over (VERDICT r10 item 2).
+/** Session-scoped build-once registry for every reusable artifact: stored
+  * directories (vector and dedup indexes, trained tables, stored
+  * relations, see [[graft.ops.Artifacts]]) and JVM-object models (trained
+  * IVF centroids, PQ codebooks). The first caller of `key` over data
+  * directory `dataDir` builds it; every later caller in the same JVM,
+  * whichever query it serves, gets the memoized value. JVM objects survive
+  * [[Caches.releaseAll]] between queries, and stored directories are read
+  * back as plain parquet scans.
   *
-  * Sharing is safe for bit-identity because every writer is deterministic
-  * in its input relation and config (the stored==in-session specs pin
-  * this), so the artifact bytes don't depend on WHICH query triggered the
-  * build. The memo key is (artifact, data directory): a different corpus
-  * (another SF dir, a spec fixture) gets its own build, while re-reads of
-  * the same directory reuse the trained index — exactly the staleness
-  * semantics of a production index, which serves until an explicit
-  * refresh (the `*_refresh` queries model that path: their build+merge lifecycle is itself an ensure*Refresh artifact whose serving covers the merged state).
+  * Sharing is safe because every builder is deterministic in its input
+  * relation and config (the stored==in-session specs pin this), so the
+  * value does not depend on which query triggered the build. The memo key
+  * is (artifact, data directory): another corpus gets its own build, while
+  * re-reads of the same directory serve the first build until the JVM
+  * exits, as a production index serves until an explicit refresh.
   */
 object ServingIndexes {
 
-  private val built = TrieMap.empty[(String, String), String]
+  private val built = TrieMap.empty[(String, String), Any]
 
-  // wall seconds each first build cost, keyed like `built` — Bench emits
-  // this as "artifact_build_sec" so the record carries the true cost of
-  // every stored artifact instead of hiding it in a discarded best-of-N
-  // first attempt (VERDICT r16 item 3a)
-  private val buildSecs = TrieMap.empty[(String, String), Double]
+  // First builds run under this lock: two concurrent builders of one key
+  // would interleave half-written files. It is reentrant because a build
+  // may need another artifact (intake-arrivals builds on the NB model).
+  private val lock = new ReentrantLock()
+
+  // guarded by `lock`
+  private val buildSecs = scala.collection.mutable.HashMap.empty[(String, String), Double]
+  private var nestedNs = 0L // time spent in builds nested inside the running one
 
   /** Per-artifact first-build seconds observed in this JVM, summed over
-    * data directories (the bench runs one directory, so this is normally
-    * the plain per-key cost).
+    * data directories. A build's time excludes builds nested inside it,
+    * so each second is counted under one key only.
     */
-  def buildLog: Map[String, Double] =
-    buildSecs.toSeq.groupBy(_._1._1)
-      .map { case (k, rows) => k -> rows.map(_._2).sum }
-
-  /** Record an out-of-band first build (the session-trained models are
-    * memoized as plain JVM objects outside [[ensure]]) so the bench's
-    * `artifact_build_sec` itemization covers every memoized build.
-    */
-  private[graft] def recordBuild(key: String, dataDir: String, secs: Double): Unit =
-    buildSecs((key, dataDir)) = secs
-
-  /** Collision-proof scratch-name suffix for a data directory: md5 over the
-    * full path string, so two directories can never share a scratch path the
-    * way a 32-bit hashCode could (ADVICE r11 — a collision would silently
-    * serve a wrong-corpus index while the memo still pointed at it).
-    */
-  private def dirDigest(dataDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(dataDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  def buildLog: Map[String, Double] = {
+    lock.lock()
+    try buildSecs.toSeq.groupBy(_._1._1).map { case (k, rows) => k -> rows.map(_._2).sum }
+    finally lock.unlock()
   }
 
-  /** The stored-index directory for artifact `key` over `dataDir`,
-    * running `build` into a fresh scratch directory on first use only.
-    * A failed build is not memoized (the next caller retrains). First
-    * builds are serialized under a monitor: TrieMap.getOrElseUpdate may
-    * evaluate the thunk more than once under concurrent callers, and two
-    * concurrent trainers writing the same artifact path could interleave
-    * half-written files — builds are rare (once per artifact per session),
-    * so a coarse lock costs nothing.
+  /** Full MD5 hex of `s`: names scratch paths, catalog tables and
+    * parameterized keys, so two inputs never share an artifact.
+    */
+  private[graft] def digest(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** The value of artifact `key` over `dataDir`, running `build` on first
+    * use only. A failed build is not memoized: the next caller retries.
+    */
+  def model[T](key: String, dataDir: String)(build: => T): T =
+    built.getOrElse((key, dataDir), {
+      lock.lock()
+      try built.getOrElse((key, dataDir), {
+        val outerNested = nestedNs
+        nestedNs = 0L
+        val t0 = System.nanoTime()
+        try {
+          val v = build
+          buildSecs((key, dataDir)) = (System.nanoTime() - t0 - nestedNs) / 1e9
+          built((key, dataDir)) = v
+          v
+        } finally nestedNs = outerNested + (System.nanoTime() - t0)
+      })
+      finally lock.unlock()
+    }).asInstanceOf[T]
+
+  /** The stored directory of artifact `key` over `dataDir`: `build` writes
+    * it into a fresh scratch directory on first use only.
     */
   def ensure(key: String, dataDir: String)(build: String => Unit): String =
-    built.get((key, dataDir)).getOrElse(synchronized {
-      built.getOrElseUpdate((key, dataDir), {
-        val dir = ScratchDirs(key + "-" + dirDigest(dataDir))
-        val t0 = System.nanoTime()
-        build(dir)
-        buildSecs((key, dataDir)) = (System.nanoTime() - t0) / 1e9
-        dir
-      })
-    })
-
-  /** Test hook: forget every memoized build (the scratch files remain;
-    * the next ensure retrains over them via the writers' overwrite mode).
-    */
-  private[graft] def reset(): Unit = { built.clear(); buildSecs.clear() }
+    model(key, dataDir) {
+      val dir = ScratchDirs(key + "-" + digest(dataDir))
+      build(dir)
+      dir
+    }
 }

@@ -88,15 +88,19 @@ object BpeTrain {
   }
 
   /** 10 merge rounds over the 2000 most frequent words of `documents`.
-    * Served from the stored merge table ([[Artifacts.ensureBpeMerges]] —
-    * trained once per (corpus, session); all three BPE queries share it).
+    * Served from the stored merge table ([[storedMerges]]; all three BPE
+    * queries share it).
     */
   def qBpeMerges(spark: SparkSession, dir: String): DataFrame =
     storedMerges(spark, dir).orderBy(col("round"))
 
-  /** The stored merge table of [[Artifacts.ensureBpeMerges]]. */
+  /** [[bpeMerges]] over the documents table, trained once per (corpus,
+    * session) as the `bpe-merges` artifact: the tokenizer a production
+    * pipeline ships. Deterministic: exact counts, argmax total-ordered by
+    * (count desc, pair asc).
+    */
   private def storedMerges(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${Artifacts.ensureBpeMerges(spark, dir)}/merges.parquet")
+    Artifacts.stored(spark, "bpe-merges", dir)(bpeMerges(table(spark, dir, "documents"), VocabWords, MergeRounds))
 
   /** Every per-round CTE is MATERIALIZED and each is referenced with a
     * single 1-row cross join: a plain (inlined) CTE chain re-expands the

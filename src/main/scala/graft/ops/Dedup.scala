@@ -139,15 +139,14 @@ object Dedup {
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id"), col("span_start"))
 
-  /** [[TextDedup.duplicatedSpans]] served from the stored artifact
-    * ([[Artifacts.ensureDupSpans]]) — the dup-rate accounting aggregates
-    * this relation; the build's cost is itemized in the bench record
-    * (`artifact_build_sec`, round 17) instead of hiding in a discarded
-    * first attempt.
+  /** [[TextDedup.duplicatedSpans]] over the documents table at
+    * [[DupSpanL]], stored once per (corpus, session) as the `dup-spans`
+    * artifact; the dup-rate accounting aggregates this relation.
     */
   private def storedDupSpans(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${Artifacts.ensureDupSpans(spark, dir)}/spans.parquet")
-      .orderBy(col("id"), col("span_start"))
+    Artifacts.stored(spark, "dup-spans", dir) {
+      TextDedup.duplicatedSpans(table(spark, dir, "documents"), col("doc_id"), col("text"), DupSpanL)
+    }.orderBy(col("id"), col("span_start"))
 
   val qDupSpansSql: String =
     s"""WITH tok AS (

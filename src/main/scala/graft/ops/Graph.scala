@@ -171,14 +171,19 @@ object Graph {
     o.union(o.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** [[coOrderEdges]] served from the stored edge artifact
-    * ([[Artifacts.ensureCoOrderEdges]]) — the registered queries' path:
-    * the oriented relation is built once per (corpus, session) and each
-    * consumer re-reads a 2-column long parquet instead of re-running the
-    * basket explode (round 16; StoredArtifactParitySpec pins stored == inline).
+  /** [[orientedCoOrderEdges]] at the default basket cap, stored once per
+    * (corpus, session) as the `co-order-edges` artifact: the graph queries
+    * re-read a 2-column long parquet instead of re-running the basket
+    * explode (StoredArtifactParitySpec pins stored == inline).
+    */
+  private[ops] def coOrderOriented(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.stored(spark, "co-order-edges", dir)(orientedCoOrderEdges(spark, dir))
+
+  /** [[coOrderEdges]] served from [[coOrderOriented]] — the registered
+    * queries' path.
     */
   private def coOrderEdgesStored(spark: SparkSession, dir: String): DataFrame = {
-    val o = Artifacts.coOrderOriented(spark, dir)
+    val o = coOrderOriented(spark, dir)
     o.union(o.select(col("dst").as("src"), col("src").as("dst")))
   }
 
@@ -330,7 +335,7 @@ object Graph {
     * "parts whose co-purchase neighborhoods are most tightly knit".
     */
   def qTriangles(spark: SparkSession, dir: String): DataFrame =
-    triangleCounts(degreeOrient(Artifacts.coOrderOriented(spark, dir)))
+    triangleCounts(degreeOrient(coOrderOriented(spark, dir)))
       .select(col("node").as("part"), col("n_triangles"))
       .orderBy(col("n_triangles").desc, col("part"))
       .limit(20)
@@ -1117,7 +1122,7 @@ object Graph {
     * one scalar aggregate. Nothing is quadratic in degree or edge count.
     */
   def qAssortativity(spark: SparkSession, dir: String): DataFrame =
-    assortativity(Artifacts.coOrderOriented(spark, dir))
+    assortativity(coOrderOriented(spark, dir))
 
   /** [[qAssortativity]]'s moment pass over any canonically oriented
     * (`src < dst`, distinct) undirected edge list.
@@ -1190,7 +1195,7 @@ object Graph {
   val DegreeBuckets = 20
 
   def qDegreeHist(spark: SparkSession, dir: String): DataFrame =
-    degreeHist(Artifacts.coOrderOriented(spark, dir))
+    degreeHist(coOrderOriented(spark, dir))
 
   /** [[qDegreeHist]]'s bucket pass over any canonically oriented
     * (`src < dst`, distinct) undirected edge list.

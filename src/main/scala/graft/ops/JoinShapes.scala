@@ -122,9 +122,8 @@ object JoinShapes {
     * must match the oracle's plain join over the raw parquet.
     */
   def qBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    // bucketed tables built + registered once per (corpus, session) —
-    // persisting the partitioning across jobs is what bucketing is FOR
-    // (round 16; previously both tables were re-written per run)
+    // bucketed tables built + registered once per (corpus, session):
+    // persisting the partitioning across jobs is what bucketing is for
     val (ln, on) = Artifacts.ensureBucketedTables(spark, dir)
     spark.table(ln)
       .join(spark.table(on), col("l_orderkey") === col("o_orderkey"))
@@ -257,10 +256,12 @@ object JoinShapes {
       .select(col("o_orderkey"), col("o_custkey"), dec(col("o_totalprice")).as("price"))
     val cust = table(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    // the stored view is built once per (corpus, session) — round 16,
-    // Artifacts.ensureJoinView; the refresh below is the per-run work
-    val stored = spark.read.parquet(
-      s"${Artifacts.ensureJoinView(spark, dir)}/view.parquet")
+    // the view is stored once per (corpus, session); the refresh below
+    // is the per-run work
+    val stored = Artifacts.stored(spark, "join-view", dir) {
+      orders.join(cust, col("o_custkey") === col("c_custkey"))
+        .select(col("o_orderkey"), col("o_custkey"), col("c_mktsegment").as("segment"), col("price"))
+    }
     val deltaDim = cust.filter(col("c_custkey") % 7 === 0)
       .select(col("c_custkey"), lit("RESEGMENTED").as("c_mktsegment"))
     val refreshed = stored

@@ -1190,9 +1190,7 @@ object Pipeline {
     * turns the plan into an RDD scan.
     */
   private[ops] def gatedScored(spark: SparkSession, dir: String): DataFrame = {
-    val d = Artifacts.ensureQualityNb(spark, dir)
-    val weights = spark.read.parquet(s"$d/weights.parquet")
-    val totals = spark.read.parquet(s"$d/totals.parquet")
+    val (weights, totals) = TextAnalysis.nbLoad(spark, Artifacts.ensureQualityNb(spark, dir))
     val docs = table(spark, dir, "documents")
       .select(col("doc_id"), col("source"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 1)

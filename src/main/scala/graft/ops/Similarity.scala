@@ -671,10 +671,18 @@ object Similarity {
         expr("((r_len + l1) * 1000000) DIV l1 - 1000000").as("w_len"))
   }
 
+  /** [[rerankTrain]] over the pool pair features, stored once per
+    * (corpus, session) as the `rerank-scorer` artifact. Deterministic, so
+    * the stored serve is bit-identical to an in-session train→apply; the
+    * store is what makes [[qRerankScored]]'s serving plan training-free.
+    */
+  private[ops] def rerankScorer(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.stored(spark, "rerank-scorer", dir)(rerankTrain(rerankFeatures(spark, dir)))
+
   /** RERANK with the STORED trained scorer (closing the r15 stub
     * boundary): stage 1 retrieves the bounded pool, stage 2 scores every
     * pair with the 1-row weight table from
-    * [[Artifacts.ensureRerankScorer]] broadcast onto the pair features —
+    * [[rerankScorer]] broadcast onto the pair features —
     * `lin_score = w·x` in exact integers (|w| ≤ 10^6, |x| ≤ 10^6 →
     * |score| ≤ 3·10^12, long-safe always) — and keeps the
     * top-[[CrossK]]. Serving reads the stored model and never trains
@@ -682,8 +690,7 @@ object Similarity {
     * teacher labeling in the plan).
     */
   def qRerankScored(spark: SparkSession, dir: String): DataFrame = {
-    val wdir = Artifacts.ensureRerankScorer(spark, dir)
-    val weights = spark.read.parquet(s"$wdir/weights.parquet")
+    val weights = rerankScorer(spark, dir)
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_vec_id")).orderBy(col("lin_score").desc, col("vec_id"))
     rerankFeatures(spark, dir)
@@ -1139,16 +1146,19 @@ object Similarity {
         Artifacts.pqModel(spark, dir), shortlist = PqShortlist)))
   }
 
-  /** The stored exact-cosine baseline for `qids` — queries×k rows
-    * computed once per (qids, dir) per session ([[Artifacts.ensureExactTopK]]);
-    * previously every audit in the family recomputed the identical
-    * brute-force scan (and localCheckpointed it, which the cross-query
-    * Caches.releaseAll would have dropped anyway).
+  /** The exact brute-force cosine top-k baseline for `qids`
+    * (`q_vec_id, rnk, vec_id, cos_sim`), stored once per (qids, dir) per
+    * session so the audits in the family share one corpus scan. The key
+    * carries the full digest of the qid set, which tells the full and
+    * sampled baselines apart. Stored rather than localCheckpointed
+    * because [[graft.Caches.releaseAll]] between queries drops
+    * checkpoint blocks.
     */
-  private def exactBaseline(spark: SparkSession, dir: String, qids: Seq[Long]): DataFrame = {
-    val d = Artifacts.ensureExactTopK(spark, dir, qids, K)
-    spark.read.parquet(s"$d/exact.parquet").select(col("q_vec_id"), col("vec_id"))
-  }
+  private def exactBaseline(spark: SparkSession, dir: String, qids: Seq[Long]): DataFrame =
+    Artifacts.stored(spark, s"exact-topk-k$K-q${graft.ServingIndexes.digest(qids.mkString("_"))}", dir) {
+      VectorSearch.cosineTopK(table(spark, dir, "embeddings"), col("vec_id"), col("embedding"), qids, K)
+        .withColumnRenamed("qid", "q_vec_id").withColumnRenamed("id", "vec_id")
+    }.select(col("q_vec_id"), col("vec_id"))
 
   /** The recall computation over ANY three (q_vec_id, vec_id) rankings —
     * shared by the in-session audit and the stored-index audit. `exact`

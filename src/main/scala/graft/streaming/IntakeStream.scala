@@ -99,8 +99,7 @@ object IntakeStream {
       photoCells: DataFrame,
       geoRates: DataFrame): DataFrame = {
     StreamGuards.requireFreshCheckpoint(spark, checkpoint)
-    val weights = spark.read.parquet(s"$modelDir/weights.parquet").localCheckpoint()
-    val totals = spark.read.parquet(s"$modelDir/totals.parquet").localCheckpoint()
+    val (weights, totals) = QualityServeStream.frozenModel(spark, modelDir)
     val frozenCells = photoCells.localCheckpoint()
     val frozenRates = geoRates.localCheckpoint()
     @volatile var results: Option[DataFrame] = None
@@ -140,8 +139,7 @@ object IntakeStream {
       ivfIndexDir: String,
       benchGrams: DataFrame): DataFrame = {
     StreamGuards.requireFreshCheckpoint(spark, checkpoint)
-    val weights = spark.read.parquet(s"$modelDir/weights.parquet").localCheckpoint()
-    val totals = spark.read.parquet(s"$modelDir/totals.parquet").localCheckpoint()
+    val (weights, totals) = QualityServeStream.frozenModel(spark, modelDir)
     @volatile var results: Option[DataFrame] = None
     val q = spark.readStream
       .schema(IngestDedup.docSchema)

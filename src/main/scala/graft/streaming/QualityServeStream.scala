@@ -37,10 +37,18 @@ object QualityServeStream {
       .withColumn("verdict", graft.ops.TextAnalysis.nbVerdict(col("score_micro")))
 
   /** [[scoreBatch]] reading the model from `modelDir`. */
-  def scoreBatch(spark: SparkSession, batch: DataFrame, modelDir: String): DataFrame =
-    scoreBatch(batch,
-      spark.read.parquet(s"$modelDir/weights.parquet"),
-      spark.read.parquet(s"$modelDir/totals.parquet"))
+  def scoreBatch(spark: SparkSession, batch: DataFrame, modelDir: String): DataFrame = {
+    val (weights, totals) = graft.ops.TextAnalysis.nbLoad(spark, modelDir)
+    scoreBatch(batch, weights, totals)
+  }
+
+  /** The stored NB model at `modelDir`, read once and pinned for a whole
+    * stream.
+    */
+  private[streaming] def frozenModel(spark: SparkSession, modelDir: String): (DataFrame, DataFrame) = {
+    val (weights, totals) = graft.ops.TextAnalysis.nbLoad(spark, modelDir)
+    (weights.localCheckpoint(), totals.localCheckpoint())
+  }
 
   /** Run the gate over `docDir` (documents-shaped arrival files) and
     * return the accumulated per-document verdict rows. The model parquets
@@ -53,8 +61,7 @@ object QualityServeStream {
     // verdicts accumulate in the driver — a resumed checkpoint would
     // silently skip batches
     StreamGuards.requireFreshCheckpoint(spark, checkpoint)
-    val weights = spark.read.parquet(s"$modelDir/weights.parquet").localCheckpoint()
-    val totals = spark.read.parquet(s"$modelDir/totals.parquet").localCheckpoint()
+    val (weights, totals) = frozenModel(spark, modelDir)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val q = spark.readStream
       .schema(IngestDedup.docSchema)

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Similarity, VectorSearch}
 
-/** The train-once-serve-many registry behind the indexed query family
-  * (round 11): one build per (artifact, data dir) per JVM, distinct
-  * corpora never share an artifact, and the queries that now ride the
+/** The build-once registry behind every session artifact: one build per
+  * (artifact, data dir) per JVM, distinct corpora never share an
+  * artifact, build times are itemized once, and the queries that ride a
   * shared build stay bit-identical to their in-session duals.
   */
 class ServingIndexesSpec extends SparkFunSuite {
@@ -35,6 +35,33 @@ class ServingIndexesSpec extends SparkFunSuite {
     }
     ServingIndexes.ensure("spec-fail", "/dir")(_ => attempts += 1)
     assert(attempts == 2)
+  }
+
+  test("model builds once per (key, dataDir), retries a failed build and logs its time") {
+    var builds = 0
+    intercept[RuntimeException] {
+      ServingIndexes.model("spec-model", "/dir/one") {
+        builds += 1
+        throw new RuntimeException("boom")
+      }
+    }
+    assert(!ServingIndexes.buildLog.contains("spec-model"), "a failed build must not be logged")
+    val a = ServingIndexes.model("spec-model", "/dir/one") { builds += 1; Array(1L, 2L) }
+    val b = ServingIndexes.model("spec-model", "/dir/one") { builds += 1; Array(3L) }
+    assert((a eq b) && builds == 2, "second call must serve the first model")
+    val c = ServingIndexes.model("spec-model", "/dir/two") { builds += 1; Array(3L) }
+    assert(c.toSeq == Seq(3L) && builds == 3, "a different corpus dir must get its own build")
+    assert(ServingIndexes.buildLog.contains("spec-model"))
+  }
+
+  test("a build nested in another is timed under its own key only") {
+    val sleepMs = 200L
+    ServingIndexes.ensure("spec-outer", "/dir") { _ =>
+      ServingIndexes.ensure("spec-inner", "/dir")(_ => Thread.sleep(sleepMs))
+    }
+    val log = ServingIndexes.buildLog
+    assert(log("spec-inner") >= sleepMs / 1e3)
+    assert(log("spec-outer") < sleepMs / 1e3, log)
   }
 
   test("queries sharing one artifact stay bit-identical to in-session search") {

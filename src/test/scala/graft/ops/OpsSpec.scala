@@ -248,6 +248,9 @@ class OpsSpec extends SparkFunSuite {
 
   test("vec_dot is SQL-callable after registration") {
     graft.GraftSession.registerFunctions(spark)
+    graft.GraftSession.sqlFunctions.foreach { case (name, _, _) =>
+      assert(spark.catalog.functionExists(name), s"$name not registered")
+    }
     val r = spark.sql(
       "SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").head().getDouble(0)

@@ -62,10 +62,10 @@ class RerankScorerSpec extends SparkFunSuite {
   }
 
   test("serving plan reads the weight store and never trains") {
-    graft.ops.Artifacts.ensureRerankScorer(spark, sf) // build outside the measured plan
+    Similarity.rerankScorer(spark, sf) // build outside the measured plan
     val p = Similarity.qRerankScored(spark, sf).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(p.contains("weights.parquet"), p.take(2000))
+    assert(p.contains("rerank-scorer-"), p.take(2000))
     // the training signature — teacher labeling + centroid aggregates —
     // must be absent from the serving plan
     assert(!p.contains("sp_cos_micro"), "training aggregate in serving plan")

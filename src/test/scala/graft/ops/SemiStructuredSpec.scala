@@ -21,8 +21,7 @@ class SemiStructuredSpec extends SparkFunSuite {
 
   test("the persisted column is VariantType and absent fields extract as NULL") {
     SemiStructured.qVariantStored(spark, sf).collect() // ensures the write ran
-    val stored = spark.read.parquet(
-      Artifacts.ensureVariantStore(spark, sf) + "/events.parquet")
+    val stored = SemiStructured.variantStore(spark, sf)
     assert(stored.schema("v").dataType ===
       org.apache.spark.sql.types.VariantType)
     val flags = stored.select(col("event_id"),

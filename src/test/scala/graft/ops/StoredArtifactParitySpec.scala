@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
 
-/** Round-16 optimization artifacts: the stored dedup candidates table
+/** Stored artifacts: the stored dedup candidates table
   * ([[Artifacts.ensureDedupCommons]]) and the stored co-order edge list
-  * ([[Artifacts.ensureCoOrderEdges]]) must serve BIT-IDENTICAL relations
+  * ([[Graph.coOrderOriented]]) must serve BIT-IDENTICAL relations
   * to the inline computations they memoize — the same stored==in-session
   * discipline every ServingIndexes artifact is pinned under.
   */
@@ -38,7 +38,7 @@ class StoredArtifactParitySpec extends SparkFunSuite {
 
   test("stored co-order edges == inline orientedCoOrderEdges") {
     val inline = Graph.orientedCoOrderEdges(spark, sf)
-    val stored = Artifacts.coOrderOriented(spark, sf)
+    val stored = Graph.coOrderOriented(spark, sf)
     assert(sortedRows(stored) === sortedRows(inline))
     assert(stored.columns.toSeq === inline.columns.toSeq)
     // oriented: every stored edge points low → high

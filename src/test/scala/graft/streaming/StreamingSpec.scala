@@ -876,10 +876,9 @@ class StreamingSpec extends SparkFunSuite {
       corpusEmb, col("vec_id"), col("embedding"), ivfDir)
     // the stored NB model — the SAME artifact layout ensureQualityNb writes
     val nbDir = tmpDir("gintake-nb")
-    val (w, t) = graft.ops.TextAnalysis.nbTrain(
-      graft.ops.TextAnalysis.nbLabeled(spark, sf))
-    w.write.mode("overwrite").parquet(s"$nbDir/weights.parquet")
-    t.write.mode("overwrite").parquet(s"$nbDir/totals.parquet")
+    graft.ops.TextAnalysis.nbSave(graft.ops.TextAnalysis.nbTrain(
+      graft.ops.TextAnalysis.nbLabeled(spark, sf)), nbDir)
+    val (weights, totals) = graft.ops.TextAnalysis.nbLoad(spark, nbDir)
     val corpusFps = corpus
       .select(md5(concat_ws(" ", graft.ops.TextOps.tokens(col("text")))).as("fp"))
       .localCheckpoint()
@@ -892,9 +891,7 @@ class StreamingSpec extends SparkFunSuite {
       .orderBy(col("doc_id")).collect()
     // the one-shot gated batch of the whole feed
     val want = graft.ops.Pipeline.intakeBatchGated(
-      docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-      spark.read.parquet(s"$nbDir/weights.parquet"),
-      spark.read.parquet(s"$nbDir/totals.parquet"),
+      docs.filter(pmod(col("doc_id"), lit(5)) === 0), weights, totals,
       corpusFps, lshDir, emb, corpusEmb, ivfDir, benchGrams)
       .collect().map(_.toSeq).toSeq
     // the classifier must actually fire on this feed
@@ -931,10 +928,8 @@ class StreamingSpec extends SparkFunSuite {
     graft.ops.VectorSearch.writeIvfIndex(
       corpusEmb, col("vec_id"), col("embedding"), ivfDir)
     val nbDir = tmpDir("fintake-nb")
-    val (w, t) = graft.ops.TextAnalysis.nbTrain(
-      graft.ops.TextAnalysis.nbLabeled(spark, sf))
-    w.write.mode("overwrite").parquet(s"$nbDir/weights.parquet")
-    t.write.mode("overwrite").parquet(s"$nbDir/totals.parquet")
+    graft.ops.TextAnalysis.nbSave(graft.ops.TextAnalysis.nbTrain(
+      graft.ops.TextAnalysis.nbLabeled(spark, sf)), nbDir)
     val corpusFps = corpus
       .select(md5(concat_ws(" ", graft.ops.TextOps.tokens(col("text")))).as("fp"))
       .localCheckpoint()
@@ -952,8 +947,7 @@ class StreamingSpec extends SparkFunSuite {
     val geoRates = Seq((3L, 5L, 5000L)).toDF("lat_cell", "lon_cell", "thr")
     val want = graft.ops.Pipeline.intakeBatchFull(
       arrivalsDf, None,
-      Some((spark.read.parquet(s"$nbDir/weights.parquet"),
-        spark.read.parquet(s"$nbDir/totals.parquet"))),
+      Some(graft.ops.TextAnalysis.nbLoad(spark, nbDir)),
       corpusFps, lshDir, emb, corpusEmb, ivfDir, benchGrams,
       photoCells, geoRates)
       .collect().map(_.toSeq).toSeq
