@@ -203,7 +203,9 @@ object HubTransform {
 
   /** Batch backfill: transform every supported file under a directory —
     * the engine equivalent of the reference's re-trigger ops script
-    * (faas/lambda_retrigger_model_output_add.py:13-62).
+    * (faas/lambda_retrigger_model_output_add.py:13-62). Each file goes
+    * through [[dispatch]] as an `ObjectCreated:Put` event, so skips and
+    * errors are reported exactly as the event loop reports them.
     *
     * Files are independent single-stage jobs, so they are submitted from a
     * driver-side thread pool (`parallelism` concurrent Spark jobs) — the
@@ -233,16 +235,8 @@ object HubTransform {
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
       val futures = files.sorted.map { rel =>
-        scala.concurrent.Future {
-          try {
-            val out = new ModelOutputHandler(spark, hubPath, rel, outputPath, schemaOverride).addModelOutput()
-            EventResult(rel, "add", Some(out), None)
-          } catch {
-            case w: UserWarning => EventResult(rel, "skip", None, Some(w.getMessage))
-            case scala.util.control.NonFatal(e) =>
-              EventResult(rel, "error", None, Some(e.getMessage))
-          }
-        }
+        scala.concurrent.Future(
+          dispatch(spark, "ObjectCreated:Put", hubPath, rel, outputPath, schemaOverride))
       }
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futures.toSeq),
@@ -262,9 +256,11 @@ object HubTransform {
     * unsupported files are skipped, mirroring the event loop.
     *
     * Scale: files are scanned in BULK — one FileSourceScan per group of
-    * like-shaped files (CSV grouped by identical header bytes, parquet by
-    * footer schema), not a per-file union chain, so a thousand-file hub
-    * plans a handful of scans whose splits schedule across executors.
+    * like-shaped files (grouped by the raw schema read from each file's own
+    * CSV header or parquet footer, [[ModelOutputReader.rawSchema]]), not a
+    * per-file union chain, so a thousand-file hub plans a handful of scans
+    * whose splits schedule across executors. Each group is scanned with its
+    * raw schema, so building the DataFrame runs no schema-inference job.
     * `round_id`/`model_id` come from `input_file_name()` looked up in a
     * driver-built literal (path → id) map per scan group — [[PathParser]]
     * stays the single parsing implementation, and no join is planned.
@@ -272,9 +268,10 @@ object HubTransform {
     * group's file count: unmeasurable at 60 files, about 1.7 µs per row
     * at 1000 files (4 cores). CSV type inference for un-schema'd columns
     * runs once per group (over the group's union, matching what the
-    * former per-file union would widen to). For standing workloads, transform once and
-    * query the parquet store partitioned by (round_id, model_id) instead
-    * of re-scanning raw CSV.
+    * former per-file union would widen to); it is the only job the build
+    * can run, and only when the hub schema leaves a CSV column untyped.
+    * For standing workloads, transform once and query the parquet store
+    * partitioned by (round_id, model_id) instead of re-scanning raw CSV.
     */
   def readHub(
       spark: SparkSession,
@@ -316,49 +313,28 @@ object HubTransform {
       df.withColumn("round_id", idOf(_.roundId)).withColumn("model_id", idOf(_.modelId))
     }
 
-    def headerOf(path: String): String = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(path))
-      try {
-        val br = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-        Option(br.readLine()).getOrElse("")
-      } finally in.close()
-    }
-
-    // grouping key = the file's parquet schema, read DIRECTLY from the
-    // footer (ParquetFileReader) — `spark.read.parquet(f).schema` would
-    // open a full datasource per file, a driver-side O(files) planning
-    // cost at thousand-file hubs. The raw MessageType string is enough to
-    // group by; no Spark schema conversion is needed here.
-    def footerSchemaKey(path: String): String = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
-    }
-
-    // header/footer sniffs are independent metadata reads — run them in a
-    // bounded pool instead of sequentially on the listing thread
-    val (csvGroups, parquetGroups) = {
+    // group key = the file's raw schema from its own header or footer
+    // (ModelOutputReader.rawSchema, independent metadata reads run in a
+    // bounded pool); each group is scanned with that schema, so no scan
+    // runs an inference job. CSV groups come first, then parquet.
+    val groups = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
-      val csvKeyed = Future.traverse(selected.filter(_._2 == ".csv"))(t =>
-        Future(headerOf(t._1) -> t))
-      val pqKeyed = Future.traverse(
-        selected.filter(s => s._2 == ".parquet" || s._2 == ".pqt"))(t =>
-        Future(footerSchemaKey(t._1) -> t))
-      def grouped(keyed: Seq[(String, (String, String, PathParser.FileParts))]) =
-        keyed.groupBy(_._1).values.map(_.map(_._2)).toSeq.sortBy(_.head._1)
-      (grouped(Await.result(csvKeyed, Duration.Inf)),
-        grouped(Await.result(pqKeyed, Duration.Inf)))
+      val keyed = Await.result(Future.traverse(selected)(t =>
+        Future((t._2 == ".csv", ModelOutputReader.rawSchema(spark, t._1, t._2)) -> t)), Duration.Inf)
+      keyed.groupBy(_._1).toSeq
+        .map { case ((isCsv, fileSchema), g) => (isCsv, fileSchema, g.map(_._2)) }
+        .sortBy { case (isCsv, _, g) => (!isCsv, g.head._1) }
     }
 
-    val parts =
-      csvGroups.map(g =>
-        withPathMeta(ModelOutputReader.readCsv(spark, g.map(_._1), schema), g)) ++
-      parquetGroups.map(g =>
-        withPathMeta(ModelOutputReader.readParquet(spark, g.map(_._1), schema), g))
+    val parts = groups.map { case (isCsv, fileSchema, g) =>
+      val paths = g.map(_._1)
+      withPathMeta(
+        if (isCsv) ModelOutputReader.readCsv(spark, paths, fileSchema, schema)
+        else ModelOutputReader.readParquet(spark, paths, fileSchema, schema),
+        g)
+    }
     parts
       .reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
       .getOrElse(withPathMeta(

@@ -1,7 +1,17 @@
 package graft.hub
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Schema-directed model-output file reading (SURVEY.md §2 ops 1-3, 10).
@@ -21,7 +31,10 @@ import org.apache.spark.sql.types._
   *
   * Scale: both paths are a single narrow projection over a parallel file
   * scan — no shuffle, fully whole-stage codegen (the Arrow float→string
-  * cast is the native [[ArrowFormatString]] expression).
+  * cast is the native [[ArrowFormatString]] expression). The raw schema
+  * handed to the scan comes from the file's own CSV header or parquet
+  * footer ([[rawSchema]]), read on the driver, so reading a file plans
+  * without a schema-inference job: an add is one Spark job, the write.
   */
 object ModelOutputReader {
 
@@ -35,8 +48,7 @@ object ModelOutputReader {
     */
   def arrowCast(c: Column, from: DataType, to: DataType): Column = (from, to) match {
     case (DoubleType, StringType) | (FloatType, StringType) =>
-      org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        ArrowFormatString(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+      ColumnBridge.column(ArrowFormatString(ColumnBridge.expression(c)))
     case _ => c.cast(to)
   }
 
@@ -48,20 +60,73 @@ object ModelOutputReader {
         throw new PathParser.UserWarning(s"Input file type $other is not supported")
     }
 
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    readCsv(spark, Seq(path), schema)
-
-  /** Multi-file variant: `paths` must share identical header bytes (the
-    * [[HubTransform.readHub]] grouping guarantees it) so one scan parses
-    * them all consistently.
+  /** Options of every CSV read. [[rawSchema]] parses the header and
+    * [[readCsv]] scans the file with these same options, so the two cannot
+    * disagree on quoting, whitespace or the header line.
     */
-  def readCsv(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .csv(paths: _*)
+  private val CsvReadOptions: Map[String, String] = Map(
+    "header" -> "true",
+    "inferSchema" -> "false",
+    "ignoreLeadingWhiteSpace" -> "false",
+    "ignoreTrailingWhiteSpace" -> "false")
+
+  /** The schema `spark.read` would infer for the file at `path`, read on the
+    * driver from the file itself instead of by an inference job:
+    *
+    *  - CSV: the first non-empty line, tokenized with the scan's own parser
+    *    settings and made unique the way Spark names header columns
+    *    (`a,a,,b` → `a0, a1, _c2, b`); every column is a string. A file
+    *    without a header line has an empty schema.
+    *  - parquet: the footer, converted as Spark's schema inference does
+    *    (the Spark schema stored in the footer when there is one), with
+    *    every field nullable as the scan exposes it.
+    *
+    * A directory (a Spark output directory such as `f.parquet/`) stands for
+    * its first data file in path order, skipping names that start with `_`
+    * or `.` — the file Spark's inference reads when there are no summary
+    * files. `fileType` is the suffix as [[read]] takes it: `.csv`, else
+    * parquet.
+    */
+  def rawSchema(spark: SparkSession, path: String, fileType: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val sqlConf = spark.sessionState.conf
+    firstDataFile(new Path(path), conf).fold(new StructType()) { file =>
+      if (fileType == ".csv") {
+        val opts = new CSVOptions(CsvReadOptions, sqlConf.csvColumnPruning, sqlConf.sessionLocalTimeZone)
+        CSVUtils.readHeaderLine(file, opts, conf)
+          .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
+          .fold(new StructType()) { header =>
+            StructType(CSVUtils.makeSafeHeader(header, sqlConf.caseSensitiveAnalysis, opts).toSeq
+              .map(StructField(_, StringType)))
+          }
+      } else {
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ColumnBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file, footer), new ParquetToSparkSchemaConverter(sqlConf)))
+      }
+    }
+  }
+
+  private def firstDataFile(path: Path, conf: Configuration): Option[Path] = {
+    val fs = path.getFileSystem(conf)
+    if (!fs.getFileStatus(path).isDirectory) Some(path)
+    else fs.listStatus(path).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.toString).headOption
+  }
+
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    readCsv(spark, Seq(path), rawSchema(spark, path, ".csv"), schema)
+
+  /** Multi-file variant: every file in `paths` must have the raw schema
+    * `fileSchema` (the [[HubTransform.readHub]] grouping guarantees it), so
+    * one scan parses them all consistently. A file without a header line
+    * is rejected, as the reference's `pyarrow.csv.read_csv` rejects it.
+    */
+  def readCsv(spark: SparkSession, paths: Seq[String], fileSchema: StructType, schema: StructType): DataFrame = {
+    require(fileSchema.nonEmpty, s"CSV file has no header line: ${paths.mkString(", ")}")
+    val raw = spark.read.options(CsvReadOptions).schema(fileSchema).csv(paths: _*)
 
     val byName = schema.fields.map(f => f.name -> f.dataType).toMap
 
@@ -113,13 +178,13 @@ object ModelOutputReader {
   }
 
   def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    readParquet(spark, Seq(path), schema)
+    readParquet(spark, Seq(path), rawSchema(spark, path, ".parquet"), schema)
 
-  /** Multi-file variant: `paths` must share one footer schema (the
-    * [[HubTransform.readHub]] grouping guarantees it).
+  /** Multi-file variant: every file in `paths` must have the raw schema
+    * `fileSchema` (the [[HubTransform.readHub]] grouping guarantees it).
     */
-  def readParquet(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame = {
-    val raw = spark.read.parquet(paths: _*)
+  def readParquet(spark: SparkSession, paths: Seq[String], fileSchema: StructType, schema: StructType): DataFrame = {
+    val raw = spark.read.schema(fileSchema).parquet(paths: _*)
     // pyarrow `read_table(f, schema=empty)` keeps the file schema unchanged
     // (pinned empirically in round 1); mirror that.
     if (schema.isEmpty) return raw

@@ -31,7 +31,6 @@ object ModelOutputWriter {
         case _ => throw new IllegalStateException(s"no part file written under $tmp")
       }
       if (fs.exists(target)) fs.delete(target, false)
-      if (!fs.exists(outDir)) fs.mkdirs(outDir)
       if (!fs.rename(part, target))
         throw new IllegalStateException(s"rename $part -> $target failed")
       // local Hadoop FS tracks renamed checksum sidecars — the contract is

@@ -225,10 +225,15 @@ class HubTransformSpec extends SparkFunSuite {
       java.nio.file.Paths.get(s"$hub/raw/nested/2420-01-04-team-model.csv"),
       "location,value\nvulcan,2.5\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$hub/raw/junk.txt"), "x")
+    java.nio.file.Files.writeString( // supported type, unparseable name
+      java.nio.file.Paths.get(s"$hub/raw/2420-01-05.csv"), "location,value\nmars,3.5\n")
     val results = HubTransform.addDirectory(
       spark, hub, "raw", out, parallelism = 4, schemaOverride = Some(new StructType()))
     assert(results.count(_.action == "add") == 4)
     assert(results.count(_.action == "skip") == 1)
+    val errors = results.filter(_.action == "error")
+    assert(errors.map(_.key.split('/').last) == Seq("2420-01-05.csv"))
+    assert(errors.head.error.exists(_.startsWith("IllegalArgumentException:")), errors)
     assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) == 4)
   }
 
@@ -310,9 +315,12 @@ class HubTransformSpec extends SparkFunSuite {
     assert(none.columns.toSeq == Seq("round_id", "model_id"))
   }
 
-  test("readHub: derived schema over CSV and parquet files, and an empty selection") {
+  /** A hub under the flu-metrocast `tasks.json` with one CSV and one
+    * parquet model-output file whose columns the derived schema all names.
+    */
+  private def fluMetrocastHub(prefix: String): String = {
     import spark.implicits._
-    val hub = tmpDir("hub-derived")
+    val hub = tmpDir(prefix)
     new java.io.File(s"$hub/hub-config").mkdirs()
     new java.io.File(s"$hub/raw").mkdirs()
     java.nio.file.Files.copy(
@@ -323,12 +331,18 @@ class HubTransformSpec extends SparkFunSuite {
       "reference_date,target,horizon,location,target_end_date,output_type,output_type_id,value\n" +
         "2025-01-25,ILI ED visits,0,NYC,2025-01-25,quantile,0.5,10.5\n" +
         "2025-01-25,ILI ED visits,1,Bronx,2025-02-01,quantile,0.5,NA\n")
-    // parquet physical types differ from the derived schema: the read casts
     ModelOutputWriter.writeSingleParquet(
       Seq(("2025-02-01", "ILI ED visits", 2, "Queens", "2025-02-15", "quantile", 0.25, 7.0f))
         .toDF("reference_date", "target", "horizon", "location", "target_end_date",
           "output_type", "output_type_id", "value"),
       s"$hub/raw", "2025-02-01-teamB-modelY")
+    hub
+  }
+
+  test("readHub: derived schema over CSV and parquet files, and an empty selection") {
+    import spark.implicits._
+    // parquet physical types differ from the derived schema: the read casts
+    val hub = fluMetrocastHub("hub-derived")
     val schema = HubSchema.deriveSchema(HubConfig.load(hub).get)
     assert(schema.fieldNames.takeRight(2).toSeq == Seq("round_id", "model_id"))
 
@@ -346,6 +360,23 @@ class HubTransformSpec extends SparkFunSuite {
     val none = HubTransform.readHub(spark, hub, roundIds = Seq("2099-01-01"))
     assert(none.count() == 0)
     assert(none.columns.toSeq == schema.fieldNames.toSeq)
+  }
+
+  test("an add is one Spark job, and building readHub runs none") {
+    val hub = fluMetrocastHub("hub-jobs")
+    val out = tmpDir("hub-jobs-out")
+    for (f <- Seq("2025-01-25-teamA-modelX.csv", "2025-02-01-teamB-modelY.parquet")) {
+      val (written, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+        HubTransform.add(spark, hub, s"raw/$f", out)
+      }
+      assert(jobs == 1, s"$f: $jobs jobs")
+      assert(spark.read.parquet(written).count() > 0, f)
+    }
+    val (all, planJobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      HubTransform.readHub(spark, hub)
+    }
+    assert(planJobs == 0, s"readHub ran $planJobs jobs before the caller's action")
+    assert(all.count() == 3)
   }
 
   test("retrigger touches metadata and re-fires add for every raw file " +

@@ -141,4 +141,75 @@ class ModelOutputReaderSpec extends SparkFunSuite {
     val r = df.head()
     assert(r.getAs[String]("a") == "1" && r.getAs[String]("d") == null)
   }
+
+  private def writeCsv(path: String, text: String): String = // UTF-8
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text).toString
+
+  private def inferredCsv(path: String): StructType =
+    spark.read.option("header", "true").csv(path).schema
+
+  test("rawSchema: every CSV fixture's header gives Spark's inferred schema") {
+    val fixtures = java.nio.file.Files.walk(java.nio.file.Paths.get(resource(""))).toArray
+      .map(_.toString).filter(_.endsWith(".csv")).sorted.toSeq
+    assert(fixtures.nonEmpty)
+    for (f <- fixtures)
+      assert(ModelOutputReader.rawSchema(spark, f, ".csv") == inferredCsv(f), f)
+  }
+
+  test("rawSchema: planted CSV headers name columns as Spark's inference does") {
+    val dir = tmpDir("raw-csv")
+    val cases = Seq(
+      "blank-first-line" -> ("\na,b\n1,2\n", Seq("a", "b")),
+      "bom" -> ("\uFEFFa,b\n1,2\n", Seq("a", "b")),
+      "crlf" -> ("a,b\r\n1,2\r\n", Seq("a", "b")),
+      "duplicate-and-empty" -> ("a,a,,b\n1,2,3,4\n", Seq("a0", "a1", "_c2", "b")),
+      "case-duplicate" -> ("A,a\n1,2\n", Seq("A0", "a1")),
+      "quoted-delimiter" -> ("\"x,y\",z\n1,2\n", Seq("x,y", "z")),
+      "comment-like" -> ("# c\n1\n", Seq("# c")))
+    for ((name, (text, columns)) <- cases) {
+      val p = writeCsv(s"$dir/$name.csv", text)
+      val raw = ModelOutputReader.rawSchema(spark, p, ".csv")
+      assert(raw.fieldNames.toSeq == columns, name)
+      assert(raw.forall(_.dataType == StringType), name)
+      assert(raw == inferredCsv(p), name)
+      // the scan with the header's schema returns what the inferring scan does
+      assert(spark.read.option("header", "true").schema(raw).csv(p).collect().toSeq ==
+        spark.read.option("header", "true").csv(p).collect().toSeq, name)
+    }
+    val empty = writeCsv(s"$dir/empty.csv", "")
+    assert(ModelOutputReader.rawSchema(spark, empty, ".csv") == new StructType())
+    assertThrows[IllegalArgumentException](ModelOutputReader.readCsv(spark, empty, new StructType()))
+  }
+
+  test("rawSchema: parquet footers in the three hub physical layouts, as files and directories") {
+    val dir = tmpDir("raw-pq")
+    val d = java.sql.Date.valueOf("2025-01-25")
+    val layouts = Seq(
+      // narrow ints and floats, quantile id as double
+      Seq(Row("2025-01-25", "ILI", 0, "NYC", "2025-01-25", "quantile", 0.5, 1.5f)) -> Seq(
+        StringType, StringType, IntegerType, StringType, StringType, StringType, DoubleType, FloatType),
+      // horizon and quantile id as text, dates as dates
+      Seq(Row(d, "ILI", "0", "NYC", d, "quantile", "0.5", 1.5)) -> Seq(
+        DateType, StringType, StringType, StringType, DateType, StringType, StringType, DoubleType),
+      // 64-bit everything, dates as text
+      Seq(Row("2025-01-25", "ILI", 0L, "NYC", "2025-01-25", "quantile", 0.5, 1.5)) -> Seq(
+        StringType, StringType, LongType, StringType, StringType, StringType, DoubleType, DoubleType))
+    val names = Seq("reference_date", "target", "horizon", "location", "target_end_date",
+      "output_type", "output_type_id", "value")
+    for (((rows, types), i) <- layouts.zipWithIndex) {
+      // numeric columns non-nullable, as a Dataset of primitives writes them
+      val physical = StructType(names.zip(types).map { case (n, t) =>
+        StructField(n, t, nullable = t == StringType || t == DateType) })
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), physical)
+      val outputDir = s"$dir/layout$i.parquet"
+      df.write.mode("overwrite").parquet(outputDir)
+      val single = ModelOutputWriter.writeSingleParquet(df, s"$dir/single", s"layout$i")
+      for (p <- Seq(outputDir, single)) {
+        val raw = ModelOutputReader.rawSchema(spark, p, ".parquet")
+        assert(raw.map(_.dataType) == types, p)
+        assert(raw == spark.read.parquet(p).schema, p)
+        assert(spark.read.schema(raw).parquet(p).collect().toSeq == rows, p)
+      }
+    }
+  }
 }
