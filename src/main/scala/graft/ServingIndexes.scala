@@ -25,7 +25,7 @@ object ServingIndexes {
 
   // First builds run under this lock: two concurrent builders of one key
   // would interleave half-written files. It is reentrant because a build
-  // may need another artifact (intake-arrivals builds on the NB model).
+  // may call `ensure` or `model` for another artifact it reads.
   private val lock = new ReentrantLock()
 
   // guarded by `lock`

@@ -29,9 +29,7 @@ final class ModelOutputHandler(
     outputPathRaw: String,
     schemaOverride: Option[StructType] = None) {
 
-  private def joinPaths(base: String, rel: String): String =
-    if (rel.startsWith("/") || rel.contains("://")) rel
-    else base.stripSuffix("/") + "/" + rel
+  import ModelOutputHandler.joinPaths
 
   val inputFile: String = PathParser.sanitizePath(joinPaths(hubPath, moPath))
   val outputPath: String = PathParser.sanitizePath(outputPathRaw)
@@ -112,6 +110,11 @@ final class ModelOutputHandler(
 }
 
 object ModelOutputHandler {
+
+  /** `rel` resolved against `base`: absolute paths and URIs unchanged. */
+  private[hub] def joinPaths(base: String, rel: String): String =
+    if (rel.startsWith("/") || rel.contains("://")) rel
+    else base.stripSuffix("/") + "/" + rel
 
   /** Factory mirroring `ModelOutputHandler.from_s3` (model_output.py:137-189).
     * Paths keep the reference's quirks (only the first `originPrefix`
@@ -220,26 +223,17 @@ object HubTransform {
       outputPath: String,
       parallelism: Int = 8,
       schemaOverride: Option[StructType] = None): Seq[EventResult] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(PathParser.sanitizePath(joinAbs(hubPath, rawDir)))
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Nil
-    val it = fs.listFiles(dir, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    // local Hadoop paths stringify as "file:/..." — strip so path joining
-    // and stem parsing see a plain absolute path; remote schemes
-    // ("s3a://...") keep their authority form
-    while (it.hasNext) files += it.next().getPath.toString.stripPrefix("file:")
+    val (_, files) = rawFiles(spark.sessionState.newHadoopConf(), hubPath, rawDir)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
-      val futures = files.sorted.map { rel =>
+      val futures = files.map { rel =>
         scala.concurrent.Future(
           dispatch(spark, "ObjectCreated:Put", hubPath, rel, outputPath, schemaOverride))
       }
       scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures.toSeq),
+        scala.concurrent.Future.sequence(futures),
         scala.concurrent.duration.Duration.Inf)
     } finally pool.shutdown()
   }
@@ -281,14 +275,8 @@ object HubTransform {
       modelIds: Seq[String] = Nil,
       schemaOverride: Option[StructType] = None): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(PathParser.sanitizePath(joinAbs(hubPath, rawDir)))
-    val fs = dir.getFileSystem(conf)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(dir)) {
-      val it = fs.listFiles(dir, true)
-      while (it.hasNext) files += it.next().getPath.toString.stripPrefix("file:")
-    }
-    val selected = files.sorted.toSeq.flatMap { f =>
+    val (_, files) = rawFiles(conf, hubPath, rawDir)
+    val selected = files.flatMap { f =>
       val suffix = PathParser.suffix(f)
       if (!PathParser.SupportedFileTypes(suffix)) None
       else scala.util.Try(PathParser.parseFile(PathParser.stem(f))).toOption
@@ -365,21 +353,30 @@ object HubTransform {
       rawDir: String = "raw",
       outputPath: String,
       schemaOverride: Option[StructType] = None): Seq[EventResult] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(PathParser.sanitizePath(joinAbs(hubPath, rawDir)))
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Nil
-    val it = fs.listFiles(dir, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) files += it.next().getPath.toString.stripPrefix("file:")
+    val (fs, files) = rawFiles(spark.sessionState.newHadoopConf(), hubPath, rawDir)
     val now = System.currentTimeMillis()
-    files.sorted.toSeq.map { f =>
+    files.map { f =>
       fs.setTimes(new org.apache.hadoop.fs.Path(f), now, -1) // metadata touch
       dispatch(spark, "ObjectCreated:Copy", hubPath, f, outputPath, schemaOverride)
     }
   }
 
-  private def joinAbs(base: String, rel: String): String =
-    if (rel.startsWith("/") || rel.contains("://")) rel
-    else base.stripSuffix("/") + "/" + rel
+  /** Every file under `<hubPath>/<rawDir>` (recursive, sorted) with the
+    * directory's file system; no files when the directory is missing.
+    * Local Hadoop paths stringify as "file:/..." — stripped so path
+    * joining and stem parsing see a plain absolute path; remote schemes
+    * ("s3a://...") keep their authority form.
+    */
+  private def rawFiles(conf: org.apache.hadoop.conf.Configuration, hubPath: String,
+      rawDir: String): (org.apache.hadoop.fs.FileSystem, Seq[String]) = {
+    val dir = new org.apache.hadoop.fs.Path(
+      PathParser.sanitizePath(ModelOutputHandler.joinPaths(hubPath, rawDir)))
+    val fs = dir.getFileSystem(conf)
+    val files = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (fs.exists(dir)) {
+      val it = fs.listFiles(dir, true)
+      while (it.hasNext) files += it.next().getPath.toString.stripPrefix("file:")
+    }
+    (fs, files.sorted.toSeq)
+  }
 }

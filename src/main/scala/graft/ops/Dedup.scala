@@ -139,15 +139,6 @@ object Dedup {
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id"), col("span_start"))
 
-  /** [[TextDedup.duplicatedSpans]] over the documents table at
-    * [[DupSpanL]], stored once per (corpus, session) as the `dup-spans`
-    * artifact; the dup-rate accounting aggregates this relation.
-    */
-  private def storedDupSpans(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.stored(spark, "dup-spans", dir) {
-      TextDedup.duplicatedSpans(table(spark, dir, "documents"), col("doc_id"), col("text"), DupSpanL)
-    }.orderBy(col("id"), col("span_start"))
-
   val qDupSpansSql: String =
     s"""WITH tok AS (
        |  SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t FROM documents
@@ -405,7 +396,8 @@ object Dedup {
     val docs = table(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
-    val perDoc = storedDupSpans(spark, dir)
+    val perDoc = TextDedup.duplicatedSpans(
+        table(spark, dir, "documents"), col("doc_id"), col("text"), DupSpanL)
       .groupBy(col("id").as("doc_id"))
       .agg(sum(col("span_len")).as("dup_tok"))
     docs.join(perDoc, Seq("doc_id"), "left")

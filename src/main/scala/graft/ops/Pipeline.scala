@@ -487,25 +487,6 @@ object Pipeline {
        |ORDER BY 1, 2, 3""".stripMargin
   }
 
-  /** ARRIVAL-TIME CORPUS INTAKE — the gate-composition dual of
-    * [[qPipelineFull]]: where the composite cleans a STANDING corpus
-    * against itself, the intake gates an INGEST BATCH against standing
-    * corpus artifacts, one verdict row per arrival with the first stage
-    * that rejected it:
-    *
-    *   quality/lang (per-row) → exact_dup (corpus fingerprint semi-join)
-    *   → near_dup (stored MinHash-LSH index probe) → semantic_dup (stored
-    *   IVF index probe; arrivals without an embedding pass) →
-    *   contaminated (broadcast bench-gram join) → clean (+ split/shard
-    *   routing; chunk assignment composes downstream via
-    *   [[graft.streaming.PackStream]]).
-    *
-    * Every verdict depends only on the arrival and the STANDING corpus —
-    * arrivals never pair with each other — so the per-batch gate equals
-    * the one-shot batch gate of the whole feed under ANY trigger split
-    * (the [[graft.streaming.IntakeStream]] spec pins it), and per-batch
-    * cost is O(batch) probes against persisted artifacts.
-    */
   /** Admission bar for [[intakeBatch]] — looser than [[QualityMin]]: an
     * intake service admits borderline documents and lets the dedup /
     * contamination stages decide (the one-shot corpus clean can afford a
@@ -523,37 +504,31 @@ object Pipeline {
     */
   val IntakeContamMinShingles = 3
 
+  /** ARRIVAL-TIME CORPUS INTAKE — the gate-composition dual of
+    * [[qPipelineFull]]: where the composite cleans a STANDING corpus
+    * against itself, the intake gates an INGEST BATCH against standing
+    * corpus artifacts, one verdict row per arrival with the first stage
+    * that rejected it:
+    *
+    *   quality/lang (per-row) → exact_dup (corpus fingerprint semi-join)
+    *   → near_dup (stored MinHash-LSH index probe) → semantic_dup (stored
+    *   IVF index probe; arrivals without an embedding pass) →
+    *   contaminated (broadcast bench-gram join) → clean (+ split/shard
+    *   routing; chunk assignment composes downstream via
+    *   [[graft.streaming.PackStream]]).
+    *
+    * Every verdict depends only on the arrival and the STANDING corpus —
+    * arrivals never pair with each other — so the per-batch gate equals
+    * the one-shot batch gate of the whole feed under ANY trigger split
+    * (the [[graft.streaming.IntakeStream]] spec pins it), and per-batch
+    * cost is O(batch) probes against persisted artifacts. The batch
+    * queries ([[qIntake]] and its gated/full variants) and the streams
+    * run this one cascade.
+    */
   def intakeBatch(arrivals: DataFrame, corpusFps: DataFrame,
       lshIndexDir: String, embLookup: DataFrame, corpusEmb: DataFrame,
-      ivfIndexDir: String, benchGrams: DataFrame): DataFrame =
-    intakeBatchImpl(arrivals, None, corpusFps, lshIndexDir, embLookup,
-      corpusEmb, ivfIndexDir, benchGrams)
-
-  /** Session-memoized arrival-side relations of the intake cascade
-    * (round 15 — the arrival dual of [[Artifacts.ensureIntakeStanding]]):
-    * each is a PURE per-document function of the arrival set (and, for
-    * probes, the frozen IVF centroids), so serving a superset relation
-    * semi-joined to the current survivor set is bit-identical to
-    * recomputing from the survivors — the equivalence the stream==batch
-    * argument already rests on.
-    *
-    *   - meta:     (doc_id, n_tokens, quality_score, lang, fp)
-    *   - shingles: (id, s)             — LSH verify + contamination probe
-    *   - bands:    (id, band, bv, sg)  — LSH banding collisions
-    *   - probes:   (id, bucket)        — IVF nprobe nearest buckets
-    *   - nbScores: (doc_id, n_toks, score_micro) — NB classifier scores
-    *     against the session model (itself a deterministic per-dir
-    *     artifact, so the scores are bit-stable too)
-    */
-  final case class ArrivalPrep(meta: DataFrame, shingles: DataFrame,
-      bands: DataFrame, probes: DataFrame, nbScores: DataFrame)
-
-  /** The per-arrival gate/meta projection (tokens → n_tokens, quality,
-    * langid, exact-dup fingerprint) — the single definition the inline
-    * cascade and the [[Artifacts.ensureIntakeArrivals]] builder share.
-    */
-  private[ops] def arrivalMeta(arrivals: DataFrame): DataFrame =
-    arrivals
+      ivfIndexDir: String, benchGrams: DataFrame): DataFrame = {
+    val withT = arrivals
       .select(col("doc_id"), col("source"), col("text"), tokens(col("text")).as("t"))
       .withColumn("n_tokens", size(col("t")).cast(LongType))
       .withColumn("quality_score",
@@ -563,39 +538,14 @@ object Pipeline {
           TextAnalysis.lengthOkC(col("t"))))
       .withColumn("lang", TextAnalysis.langPredC(col("t")))
       .withColumn("fp", md5(concat_ws(" ", col("t"))))
-
-  /** [[intakeBatch]] served from session-memoized arrival artifacts: the
-    * tokenize/quality/langid/fp scan, the MinHash banding, the shingle
-    * relation and the IVF probe ranking are all read back instead of
-    * recomputed per run — only the survivor-set joins and the exact
-    * verifications execute. Bit-identical to [[intakeBatch]] because
-    * every prepared relation is a pure per-document function.
-    */
-  def intakeBatchPrepared(arrivals: DataFrame, prep: ArrivalPrep,
-      corpusFps: DataFrame, lshIndexDir: String, embLookup: DataFrame,
-      corpusEmb: DataFrame, ivfIndexDir: String,
-      benchGrams: DataFrame): DataFrame =
-    intakeBatchImpl(arrivals, Some(prep), corpusFps, lshIndexDir, embLookup,
-      corpusEmb, ivfIndexDir, benchGrams)
-
-  private def intakeBatchImpl(arrivals: DataFrame, prep: Option[ArrivalPrep],
-      corpusFps: DataFrame, lshIndexDir: String, embLookup: DataFrame,
-      corpusEmb: DataFrame, ivfIndexDir: String,
-      benchGrams: DataFrame): DataFrame = {
-    // prepared meta is a superset (all arrivals) — restrict to THIS call's
-    // arrival set so a pre-gated caller (intakeBatchGated) still excludes
-    // its rejected ids from the cascade
-    val withT = prep
-      .map(_.meta.join(arrivals.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-      .getOrElse(arrivalMeta(arrivals)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val gated = withT.filter(col("lang") === "en" && col("quality_score") >= IntakeQualityMin)
-    // Exact-dup probe with the broadcast on the ARRIVAL side (round 12):
-    // the fingerprint store is corpus-sized, so broadcasting it per batch
+    // Exact-dup probe with the broadcast on the ARRIVAL side: the
+    // fingerprint store is corpus-sized, so broadcasting it per batch
     // is a driver OOM at the documented scale. A ⋉ B ≡ A ⋉ (B ⋉ A): one
     // narrow scan of the stored fps semi-joined by the trigger-bounded
     // arrival fps, then only the (≤ batch-sized by construction)
-    // surviving fps broadcast back — per-batch driver/executor state now
+    // surviving fps broadcast back — per-batch driver/executor state
     // bounded by the trigger, with the corpus touched only as a streamed
     // single-column scan.
     // .distinct() is load-bearing: the left-semi preserves corpusFps
@@ -616,19 +566,10 @@ object Pipeline {
     // sf0.1 without these; all three are arrival-bounded rows)
     val afterExact = gated.join(exactDup.select("doc_id"), Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nearDup = (prep match {
-      case Some(p) =>
-        // banding restricted to the exact-dup survivors; the shingle
-        // relation self-restricts through the candidate join by id
-        TextDedup.minhashLshIncrementalFromIndexPrepared(
-          p.shingles,
-          p.bands.join(afterExact.select(col("doc_id").as("id")), Seq("id"), "left_semi"),
-          lshIndexDir, Dedup.JaccardThreshold)
-      case None =>
-        TextDedup.minhashLshIncrementalFromIndex(
-          afterExact, col("doc_id"), col("text"), lshIndexDir,
-          TextDedup.MinHashConfig(shingleK = Dedup.ShingleK), Dedup.JaccardThreshold)
-    }).select(col("id").as("doc_id"), lit("near_dup").as("r"))
+    val nearDup = TextDedup.minhashLshIncrementalFromIndex(
+        afterExact, col("doc_id"), col("text"), lshIndexDir,
+        TextDedup.MinHashConfig(shingleK = Dedup.ShingleK), Dedup.JaccardThreshold)
+      .select(col("id").as("doc_id"), lit("near_dup").as("r"))
     val afterNear = afterExact.join(nearDup.select("doc_id"), Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // arrival vectors come from the embeddings TABLE keyed by doc_id
@@ -636,25 +577,13 @@ object Pipeline {
     val withVec = afterNear
       .join(embLookup.select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"))
       .select(col("doc_id").as("vec_id"), col("embedding"))
-    val semDup = (prep match {
-      case Some(p) =>
-        // the probe relation self-restricts to withVec through its id join
-        VectorSearch.semDedupIncrementalFromIndexPrepared(
-          corpusEmb, withVec, col("vec_id"), col("embedding"), p.probes,
-          ivfIndexDir, Similarity.SemThreshold)
-      case None =>
-        VectorSearch.semDedupIncrementalFromIndex(
-          corpusEmb, withVec, col("vec_id"), col("embedding"), ivfIndexDir,
-          Similarity.SemThreshold)
-    }).select(col("id").as("doc_id"), lit("semantic_dup").as("r"))
+    val semDup = VectorSearch.semDedupIncrementalFromIndex(
+        corpusEmb, withVec, col("vec_id"), col("embedding"), ivfIndexDir,
+        Similarity.SemThreshold)
+      .select(col("id").as("doc_id"), lit("semantic_dup").as("r"))
     val afterSem = afterNear.join(semDup.select("doc_id"), Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val survSh = prep match {
-      case Some(p) =>
-        p.shingles.join(afterSem.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-      case None =>
-        TextDedup.shingles(afterSem, col("doc_id"), col("text"), Dedup.ShingleK)
-    }
+    val survSh = TextDedup.shingles(afterSem, col("doc_id"), col("text"), Dedup.ShingleK)
     // same arrival-side-broadcast flip as the fp probe: the benchmark
     // gram set scales with the eval corpus — scan it once per batch,
     // broadcast only the (trigger-bounded) arrival shingles and the
@@ -711,8 +640,8 @@ object Pipeline {
   @volatile var lastIntakeMetrics: Option[Map[String, Any]] = None
 
   /** [[intakeBatch]] with the TRAINED quality classifier as the pre-gate
-    * stage (VERDICT r13 item 6) — the arrival-time composition of
-    * [[qPipelineGated]]'s production filter with the intake cascade:
+    * stage — the arrival-time composition of [[qPipelineGated]]'s
+    * production filter with the intake cascade:
     * every arrival is scored against the FROZEN NB weight tables first
     * (the one shared [[TextAnalysis.nbScore]] formula), `neg` verdicts
     * leave immediately with reason `classifier` (no index probes paid
@@ -731,49 +660,19 @@ object Pipeline {
   def intakeBatchGated(arrivals: DataFrame, weights: DataFrame,
       totals: DataFrame, corpusFps: DataFrame, lshIndexDir: String,
       embLookup: DataFrame, corpusEmb: DataFrame, ivfIndexDir: String,
-      benchGrams: DataFrame): DataFrame =
-    intakeBatchGatedImpl(arrivals, None, Some((weights, totals)), corpusFps,
-      lshIndexDir, embLookup, corpusEmb, ivfIndexDir, benchGrams)
-
-  /** [[intakeBatchGated]] served from the session-memoized arrival
-    * artifacts (see [[intakeBatchPrepared]]) — the classifier verdicts
-    * come from `prep.nbScores`, which are bound to the session
-    * [[Artifacts.ensureQualityNb]] model; the signature takes NO model
-    * relations (ADVICE r15: the old weights/totals parameters were
-    * silently ignored here, so a caller passing a different model got
-    * the artifact model's verdicts with no error).
-    */
-  def intakeBatchGatedPrepared(arrivals: DataFrame, prep: ArrivalPrep,
-      corpusFps: DataFrame,
-      lshIndexDir: String, embLookup: DataFrame, corpusEmb: DataFrame,
-      ivfIndexDir: String, benchGrams: DataFrame): DataFrame =
-    intakeBatchGatedImpl(arrivals, Some(prep), None, corpusFps,
-      lshIndexDir, embLookup, corpusEmb, ivfIndexDir, benchGrams)
-
-  private def intakeBatchGatedImpl(arrivals: DataFrame, prep: Option[ArrivalPrep],
-      model: Option[(DataFrame, DataFrame)], corpusFps: DataFrame,
-      lshIndexDir: String, embLookup: DataFrame, corpusEmb: DataFrame,
-      ivfIndexDir: String, benchGrams: DataFrame): DataFrame = {
-    require(prep.isDefined != model.isDefined,
-      "classifier source must be EXACTLY ONE of prepared arrival scores " +
-        "(bound to the session artifact model) or an explicit (weights, totals) model")
-    val rejected = (prep match {
-      case Some(p) =>
-        p.nbScores.join(arrivals.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      case None =>
-        val (weights, totals) = model.get
-        TextAnalysis.nbScore(
-          arrivals
-            .select(col("doc_id"), tokens(col("text")).as("t"))
-            .filter(size(col("t")) >= 1)
-            .select(col("doc_id"), explode(col("t")).as("tok")),
-          Seq("doc_id"), weights, totals)
-    }).filter(TextAnalysis.nbVerdict(col("score_micro")) === "neg")
+      benchGrams: DataFrame): DataFrame = {
+    val rejected = TextAnalysis.nbScore(
+        arrivals
+          .select(col("doc_id"), tokens(col("text")).as("t"))
+          .filter(size(col("t")) >= 1)
+          .select(col("doc_id"), explode(col("t")).as("tok")),
+        Seq("doc_id"), weights, totals)
+      .filter(TextAnalysis.nbVerdict(col("score_micro")) === "neg")
       .select(col("doc_id"), col("n_toks"))
       .localCheckpoint()
     val pos = arrivals.join(
       broadcast(rejected.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-    val inner = intakeBatchImpl(pos, prep, corpusFps, lshIndexDir, embLookup,
+    val inner = intakeBatch(pos, corpusFps, lshIndexDir, embLookup,
       corpusEmb, ivfIndexDir, benchGrams)
     inner.unionByName(
         rejected.select(col("doc_id"), col("n_toks").as("n_tokens"),
@@ -783,9 +682,9 @@ object Pipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** The FULL intake cascade (round 15 — VERDICT r14 item 4): every
-    * standing gate of the engine composed into one ingest front door with
-    * verdict provenance, ordered cheapest-first:
+  /** The FULL intake cascade: every standing gate of the engine composed
+    * into one ingest front door with verdict provenance, ordered
+    * cheapest-first:
     *
     *   repetition (Gopher §A1.1 — a pure row expression, the cheapest
     *   gate, so repeated junk never reaches the classifier) → classifier
@@ -806,11 +705,10 @@ object Pipeline {
     * @param geoRates frozen (lat_cell, lon_cell, thr) standing-corpus
     *   admission thresholds; cells unseen in the standing corpus admit
     */
-  def intakeBatchFull(arrivals: DataFrame, prep: Option[ArrivalPrep],
-      model: Option[(DataFrame, DataFrame)], corpusFps: DataFrame,
-      lshIndexDir: String, embLookup: DataFrame, corpusEmb: DataFrame,
-      ivfIndexDir: String, benchGrams: DataFrame,
-      photoCells: DataFrame, geoRates: DataFrame): DataFrame = {
+  def intakeBatchFull(arrivals: DataFrame, weights: DataFrame,
+      totals: DataFrame, corpusFps: DataFrame, lshIndexDir: String,
+      embLookup: DataFrame, corpusEmb: DataFrame, ivfIndexDir: String,
+      benchGrams: DataFrame, photoCells: DataFrame, geoRates: DataFrame): DataFrame = {
     val repDropped = arrivals
       .join(TextAnalysis.docRepetitionProfileOf(arrivals)
           .filter(not(expr(TextAnalysis.RepetitionKeep)))
@@ -820,7 +718,7 @@ object Pipeline {
       .localCheckpoint()
     val pos = arrivals.join(
       broadcast(repDropped.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-    val gatedOut = intakeBatchGatedImpl(pos, prep, model, corpusFps,
+    val gatedOut = intakeBatchGated(pos, weights, totals, corpusFps,
       lshIndexDir, embLookup, corpusEmb, ivfIndexDir, benchGrams)
     // geo admission applies to otherwise-clean photo-carrying arrivals:
     // thresholds broadcast (≤ 18×36 cells), decision a pure row function
@@ -846,27 +744,32 @@ object Pipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** [[intakeBatch]] bound to the standing split: corpus = doc_id ≢ 0
-    * mod 5 (with its session-shared dedup-LSH and semantic-IVF artifacts
-    * — the SAME [[graft.ServingIndexes]] builds the individual gate
-    * queries use), arrivals = doc_id ≡ 0 mod 5, eval stand-in = corpus
-    * docs ≡ 0 mod 7.
+  /** The standing-split set-up of the intake queries, handed to
+    * `cascade` as (arrivals, corpusFps, lshIndexDir, embLookup, corpusEmb,
+    * ivfIndexDir, benchGrams): corpus = doc_id ≢ 0 mod 5 (with its
+    * session-shared dedup-LSH and semantic-IVF artifacts — the SAME
+    * [[graft.ServingIndexes]] builds the individual gate queries use, and
+    * the stored fingerprint and bench-gram relations of
+    * [[Artifacts.ensureIntakeStanding]]), arrivals = doc_id ≡ 0 mod 5,
+    * eval stand-in = corpus docs ≡ 0 mod 7.
     */
-  def qIntake(spark: SparkSession, dir: String): DataFrame = {
-    val docs = table(spark, dir, "documents")
-    val arrivals = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+  private def standingIntake(spark: SparkSession, dir: String)(
+      cascade: (DataFrame, DataFrame, String, DataFrame, DataFrame, String, DataFrame) => DataFrame
+  ): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
     val lshDir = Artifacts.ensureDedupLsh(spark, dir)
     val ivfDir = Artifacts.ensureSemdedupIvf(spark, dir)
-    // fp/gram probe relations served from the session artifact — the two
-    // intake queries otherwise each re-paid the standing-corpus scans
     val standing = Artifacts.ensureIntakeStanding(spark, dir)
-    val corpusFps = spark.read.parquet(s"$standing/fps.parquet")
-    val benchGrams = spark.read.parquet(s"$standing/grams.parquet")
-    intakeBatchPrepared(arrivals, Artifacts.intakeArrivalPrep(spark, dir),
-      corpusFps, lshDir, emb, corpusEmb, ivfDir, benchGrams)
+    cascade(
+      table(spark, dir, "documents").filter(pmod(col("doc_id"), lit(5)) === 0),
+      spark.read.parquet(s"$standing/fps.parquet"), lshDir,
+      emb, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), ivfDir,
+      spark.read.parquet(s"$standing/grams.parquet"))
   }
+
+  /** [[intakeBatch]] bound to the standing split ([[standingIntake]]). */
+  def qIntake(spark: SparkSession, dir: String): DataFrame =
+    standingIntake(spark, dir)(intakeBatch)
 
   /** DuckDB replay of the whole cascade with the SAME stage priority:
     * the near-dup stage replays as the exact cross-corpus Jaccard (the
@@ -993,43 +896,22 @@ object Pipeline {
     * so the model has never seen the arrival docs it gates).
     */
   def qIntakeGated(spark: SparkSession, dir: String): DataFrame = {
-    val docs = table(spark, dir, "documents")
-    val arrivals = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    val emb = table(spark, dir, "embeddings")
-    val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    val lshDir = Artifacts.ensureDedupLsh(spark, dir)
-    val ivfDir = Artifacts.ensureSemdedupIvf(spark, dir)
-    // classifier model comes through the prepared arrival scores (bound
-    // to ensureQualityNb) — no separate weights/totals reads (ADVICE r15)
-    val standing = Artifacts.ensureIntakeStanding(spark, dir)
-    intakeBatchGatedPrepared(arrivals, Artifacts.intakeArrivalPrep(spark, dir),
-      spark.read.parquet(s"$standing/fps.parquet"), lshDir,
-      emb, corpusEmb, ivfDir,
-      spark.read.parquet(s"$standing/grams.parquet"))
+    val (weights, totals) = TextAnalysis.nbLoad(spark, Artifacts.ensureQualityNb(spark, dir))
+    standingIntake(spark, dir)(intakeBatchGated(_, weights, totals, _, _, _, _, _, _))
   }
 
   /** [[intakeBatchFull]] bound to the standing split: [[qIntakeGated]]'s
     * setup plus the arrival photo cells (the [[Multimodal.burstKeys]]
     * EXIF decode over the photo-carrying arrivals) and the frozen
-    * standing-corpus geo admission rates.
+    * standing-corpus geo admission rates, both read from
+    * [[Artifacts.ensureGeoCells]].
     */
   def qIntakeFull(spark: SparkSession, dir: String): DataFrame = {
-    val docs = table(spark, dir, "documents")
-    val arrivals = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    val emb = table(spark, dir, "embeddings")
-    val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    val lshDir = Artifacts.ensureDedupLsh(spark, dir)
-    val ivfDir = Artifacts.ensureSemdedupIvf(spark, dir)
-    val standing = Artifacts.ensureIntakeStanding(spark, dir)
-    // geo state served from the session artifact (VERDICT r15 item 7) —
-    // the cascade no longer EXIF-walks the photo corpus per run
+    val (weights, totals) = TextAnalysis.nbLoad(spark, Artifacts.ensureQualityNb(spark, dir))
     val geo = Artifacts.ensureGeoCells(spark, dir)
-    intakeBatchFull(arrivals, Some(Artifacts.intakeArrivalPrep(spark, dir)), None,
-      spark.read.parquet(s"$standing/fps.parquet"), lshDir,
-      emb, corpusEmb, ivfDir,
-      spark.read.parquet(s"$standing/grams.parquet"),
+    standingIntake(spark, dir)(intakeBatchFull(_, weights, totals, _, _, _, _, _, _,
       spark.read.parquet(s"$geo/photoCells.parquet"),
-      spark.read.parquet(s"$geo/rates.parquet"))
+      spark.read.parquet(s"$geo/rates.parquet")))
   }
 
   /** DuckDB replay of the full cascade: the gated CTE chain plus the

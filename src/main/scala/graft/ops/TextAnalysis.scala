@@ -932,14 +932,7 @@ object TextAnalysis {
     * floats, no windows, no driver state.
     */
   def qLmTrigramScore(spark: SparkSession, dir: String): DataFrame =
-    lmTrigramStored(spark, dir).orderBy(col("doc_id"))
-
-  /** [[lmTrigramDocScores]] over the documents table, stored once per
-    * (corpus, session) as the `lm-trigram-scores` artifact and shared
-    * with [[qPplBuckets]].
-    */
-  private def lmTrigramStored(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.stored(spark, "lm-trigram-scores", dir)(lmTrigramDocScores(table(spark, dir, "documents")))
+    lmTrigramDocScores(table(spark, dir, "documents")).orderBy(col("doc_id"))
 
   /** Per-document stupid-backoff trigram fluency — the shared core of
     * [[qLmTrigramScore]] and the [[qPplBuckets]] mixture report. Returns
@@ -1032,7 +1025,7 @@ object TextAnalysis {
     */
   def qPplBuckets(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val scores = lmTrigramStored(spark, dir)
+    val scores = lmTrigramDocScores(docs)
     val w = Window.partitionBy(col("source"))
       .orderBy(col("mean_score_micro").desc, col("doc_id"))
     docs.select(col("doc_id"), col("source"),

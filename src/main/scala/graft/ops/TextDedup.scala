@@ -408,24 +408,7 @@ object TextDedup {
       incoming: DataFrame, id: Column, text: Column,
       cfg: MinHashConfig, threshold: Double): DataFrame = {
     val shI = shingles(incoming, id, text, cfg.shingleK)
-    val out = incrementalProbePrepared(
-      cappedC, shC, sizesC, shI, bandedSignatures(shI, cfg), threshold)
-    materializeAndRelease(out, shI)
-  }
-
-  /** [[incrementalProbe]] over PRE-COMPUTED incoming shingles (`shI`:
-    * id, s) and banded signatures (`bandsI`: id, band, bv) — the seam the
-    * intake cascade's session-memoized arrival artifacts serve through
-    * (round 15: the arrival dual of the stored corpus index; signatures
-    * are pure per-document functions, so a superset relation semi-joined
-    * to the current survivor set is bit-identical to recomputing from the
-    * survivors). Lazy — the caller owns materialization and any caches
-    * behind shI/bandsI.
-    */
-  private[ops] def incrementalProbePrepared(
-      cappedC: DataFrame, shC: DataFrame, sizesC: DataFrame,
-      shI: DataFrame, bandsI: DataFrame, threshold: Double): DataFrame = {
-    val candidates = bandsI
+    val candidates = bandedSignatures(shI, cfg)
       .select(col("id").as("id_i"), col("band"), col("bv"))
       .join(cappedC.select(col("id").as("id_c"), col("band"), col("bv")),
         Seq("band", "bv"))
@@ -449,29 +432,13 @@ object TextDedup {
         (col("common").cast(DoubleType) /
           (col("ni") + col("nc") - col("common")).cast(DoubleType)).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    verified
+    val out = verified
       .groupBy(col("id_i"))
       .agg(min(col("id_c")).as("dup_of"), max(col("jaccard")).as("best_jaccard"),
         count(lit(1)).as("n_dups"))
       .withColumnRenamed("id_i", "id")
       .orderBy(col("id"))
-  }
-
-  /** Serve an ingest probe from the stored index AND pre-computed arrival
-    * relations — [[minhashLshIncrementalFromIndex]] with the arrival-side
-    * shingle/signature work already paid (session artifact or a prior
-    * stage). Bit-identical to the from-index path over the same ids.
-    */
-  def minhashLshIncrementalFromIndexPrepared(
-      shI: DataFrame, bandsI: DataFrame, indexDir: String,
-      threshold: Double = 0.8): DataFrame = {
-    val spark = shI.sparkSession
-    incrementalProbePrepared(
-      spark.read.parquet(s"$indexDir/banded.parquet"),
-      spark.read.parquet(s"$indexDir/shingles.parquet"),
-      spark.read.parquet(s"$indexDir/sizes.parquet"),
-      shI, bandsI, threshold)
-      .localCheckpoint()
+    materializeAndRelease(out, shI)
   }
 
   /** Persist the LSH dedup index — the dedup-side dual of the PQ/IVF ANN

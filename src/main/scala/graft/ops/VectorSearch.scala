@@ -654,7 +654,11 @@ object VectorSearch {
     out
   }
 
-  /** Un-checkpointed probe plan + caches to release (for plan specs). */
+  /** Un-checkpointed probe plan + caches to release (for plan specs):
+    * the probed incoming rows collide with the corpus bucket assignment,
+    * verify at `threshold` with the exact rounded cosine, and aggregate
+    * per incoming id.
+    */
   private[ops] def semProbePlan(assignedC: DataFrame, centroids: Array[Centroid],
       incoming: DataFrame, id: Column, vec: Column, threshold: Double,
       cfg: IvfConfig): (DataFrame, Seq[DataFrame]) = {
@@ -662,20 +666,11 @@ object VectorSearch {
     val probed = inc
       .select(col("id").as("id_i"), col("v").as("vi"), col("nrm").as("ni"),
         explode(probeBucketsCol(centroids, cfg)).as("bucket"))
-    (semVerify(probed, assignedC, threshold), Seq(inc))
-  }
-
-  /** The exact-cosine verification of every sem-dedup probe path: collide
-    * the probed incoming rows against the corpus bucket assignment,
-    * verify at `threshold`, aggregate per incoming id.
-    */
-  private def semVerify(probed: DataFrame, assignedC: DataFrame,
-      threshold: Double): DataFrame =
     // the ingest batch is small by definition — broadcast it so the
     // corpus side STREAMS through the bucket join instead of shuffling
     // its vectors (at 100 TB the corpus shuffle would dominate the probe;
     // measured 3.5× on the 10× probe corpus)
-    broadcast(probed)
+    val verified = broadcast(probed)
       .join(assignedC.select(col("id").as("id_c"), col("v").as("vc"),
         col("nrm").as("nc"), col("bucket")), Seq("bucket"))
       .select(col("id_i"), col("id_c"),
@@ -686,41 +681,7 @@ object VectorSearch {
         count(lit(1)).as("n_dups"))
       .withColumnRenamed("id_i", "id")
       .orderBy(col("id"))
-
-  /** The `nprobe` nearest-bucket relation `(id, bucket)` of an incoming
-    * batch against a STORED IVF index — the expensive arrival-side half
-    * of [[semDedupIncrementalFromIndex]] (quantization + k-centroid
-    * distance ranking), split out so a session can memoize it per corpus
-    * (round 15: the arrival dual of the stored corpus index). A pure
-    * function of (vectors, stored centroids), so the persisted relation
-    * is bit-stable and restriction to any survivor subset equals
-    * computing on that subset directly.
-    */
-  def ivfProbeBucketsFromIndex(incoming: DataFrame, id: Column, vec: Column,
-      indexDir: String, cfg: IvfConfig = IvfConfig()): DataFrame = {
-    val centroids = loadCentroids(incoming.sparkSession, indexDir)
-    val inc = ivfCorpus(incoming, id, vec, cfg)
-    val out = inc.select(col("id"), explode(probeBucketsCol(centroids, cfg)).as("bucket"))
-    TextDedup.materializeAndRelease(out, inc)
-  }
-
-  /** Serve the incremental semantic gate from the stored IVF index AND a
-    * pre-computed arrival probe relation ([[ivfProbeBucketsFromIndex]]):
-    * only the exact-cosine verification runs per call — no arrival
-    * quantization, no centroid ranking. Bit-identical to
-    * [[semDedupIncrementalFromIndex]] over the same ids because the probe
-    * relation is a pure function of (vector, centroids).
-    */
-  def semDedupIncrementalFromIndexPrepared(corpus: DataFrame, incoming: DataFrame,
-      id: Column, vec: Column, probesI: DataFrame, indexDir: String,
-      threshold: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    val assignedC = withNorm(corpus, id, vec)
-      .join(spark.read.parquet(s"$indexDir/buckets.parquet"), Seq("id"))
-    val probed = withNorm(incoming, id, vec)
-      .join(probesI.select(col("id"), col("bucket")), Seq("id"))
-      .select(col("id").as("id_i"), col("v").as("vi"), col("nrm").as("ni"), col("bucket"))
-    semVerify(probed, assignedC, threshold).localCheckpoint()
+    (verified, Seq(inc))
   }
 
   /** Un-checkpointed stored-index gate plan + caches (for plan specs):

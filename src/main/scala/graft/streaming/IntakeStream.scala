@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Streaming corpus INTAKE — the arrival-time face of
@@ -37,35 +36,12 @@ object IntakeStream {
       embLookup: DataFrame,
       corpusEmb: DataFrame,
       ivfIndexDir: String,
-      benchGrams: DataFrame): DataFrame = {
-    import IngestDedup.docSchema
-    @volatile var results: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val verdicts = graft.ops.Pipeline.intakeBatch(
-          batch, corpusFps, lshIndexDir, embLookup, corpusEmb, ivfIndexDir,
-          benchGrams)
-        results = Some(results.fold(verdicts)(_.union(verdicts).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("n_tokens", LongType), StructField("reason", StringType),
-          StructField("accepted", LongType), StructField("split", StringType),
-          StructField("shard", LongType)))))
-  }
+      benchGrams: DataFrame): DataFrame =
+    drain(spark, docDir, checkpoint)(graft.ops.Pipeline.intakeBatch(
+      _, corpusFps, lshIndexDir, embLookup, corpusEmb, ivfIndexDir, benchGrams))
 
   /** [[intakeGate]] with the trained quality classifier as the PRE-gate
-    * stage (VERDICT r13 item 6): each micro-batch is scored against the
+    * stage: each micro-batch is scored against the
     * FROZEN NB model from `modelDir` ([[graft.ops.Artifacts.ensureQualityNb]]'s
     * layout — the model parquets are read once and pinned for the whole
     * stream, the [[QualityServeStream]] serving shape), `neg` arrivals
@@ -75,7 +51,25 @@ object IntakeStream {
     * one-shot batch gate runs, so stream == batch under any trigger
     * split is by construction (and spec-pinned for 2- and 3-way splits).
     */
-  /** The FULL cascade stream (round 15): [[intakeGateClassified]] plus
+  def intakeGateClassified(
+      spark: SparkSession,
+      docDir: String,
+      checkpoint: String,
+      modelDir: String,
+      corpusFps: DataFrame,
+      lshIndexDir: String,
+      embLookup: DataFrame,
+      corpusEmb: DataFrame,
+      ivfIndexDir: String,
+      benchGrams: DataFrame): DataFrame = {
+    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
+    val (weights, totals) = QualityServeStream.frozenModel(spark, modelDir)
+    drain(spark, docDir, checkpoint)(graft.ops.Pipeline.intakeBatchGated(
+      _, weights, totals, corpusFps, lshIndexDir, embLookup, corpusEmb,
+      ivfIndexDir, benchGrams))
+  }
+
+  /** The FULL cascade stream: [[intakeGateClassified]] plus
     * the Gopher repetition pre-gate (runs FIRST — a pure row expression,
     * the cheapest rejection) and the geo admission stage on the
     * multimodal path (frozen standing-corpus rates — the
@@ -102,44 +96,17 @@ object IntakeStream {
     val (weights, totals) = QualityServeStream.frozenModel(spark, modelDir)
     val frozenCells = photoCells.localCheckpoint()
     val frozenRates = geoRates.localCheckpoint()
-    @volatile var results: Option[DataFrame] = None
-    val q = spark.readStream
-      .schema(IngestDedup.docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val verdicts = graft.ops.Pipeline.intakeBatchFull(
-          batch, None, Some((weights, totals)), corpusFps, lshIndexDir, embLookup,
-          corpusEmb, ivfIndexDir, benchGrams, frozenCells, frozenRates)
-        results = Some(results.fold(verdicts)(_.union(verdicts).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("n_tokens", LongType), StructField("reason", StringType),
-          StructField("accepted", LongType), StructField("split", StringType),
-          StructField("shard", LongType)))))
+    drain(spark, docDir, checkpoint)(graft.ops.Pipeline.intakeBatchFull(
+      _, weights, totals, corpusFps, lshIndexDir, embLookup, corpusEmb,
+      ivfIndexDir, benchGrams, frozenCells, frozenRates))
   }
 
-  def intakeGateClassified(
-      spark: SparkSession,
-      docDir: String,
-      checkpoint: String,
-      modelDir: String,
-      corpusFps: DataFrame,
-      lshIndexDir: String,
-      embLookup: DataFrame,
-      corpusEmb: DataFrame,
-      ivfIndexDir: String,
-      benchGrams: DataFrame): DataFrame = {
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
-    val (weights, totals) = QualityServeStream.frozenModel(spark, modelDir)
+  /** Stream `docDir` one file per micro-batch through `gate` until no
+    * input is left, and return the accumulated verdict rows (an empty
+    * verdict table when no file arrived).
+    */
+  private def drain(spark: SparkSession, docDir: String, checkpoint: String)(
+      gate: DataFrame => DataFrame): DataFrame = {
     @volatile var results: Option[DataFrame] = None
     val q = spark.readStream
       .schema(IngestDedup.docSchema)
@@ -147,9 +114,7 @@ object IntakeStream {
       .parquet(docDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val verdicts = graft.ops.Pipeline.intakeBatchGated(
-          batch, weights, totals, corpusFps, lshIndexDir, embLookup,
-          corpusEmb, ivfIndexDir, benchGrams)
+        val verdicts = gate(batch)
         results = Some(results.fold(verdicts)(_.union(verdicts).localCheckpoint()))
         ()
       }

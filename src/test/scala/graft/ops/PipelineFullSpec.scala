@@ -99,6 +99,15 @@ class PipelineFullSpec extends SparkFunSuite {
       out.filter(_.getString(2) == "clean").map(_.getLong(1)).sum)
   }
 
+  test("intake, dup-rate and ppl-bucket queries compute their intermediates inline") {
+    Seq(Pipeline.qIntakeFull _, Dedup.qDupRate _, TextAnalysis.qPplBuckets _)
+      .foreach(q => assert(q(spark, sf).collect().nonEmpty))
+    val log = graft.ServingIndexes.buildLog
+    Seq("intake-arrivals", "dup-spans", "lm-trigram-scores").foreach { k =>
+      assert(!log.contains(k), s"$k was stored as a session artifact")
+    }
+  }
+
   test("packing invariant: chunk_id equals floor of the doc-order token prefix") {
     // within every (split, shard), chunk token totals reconstruct the
     // prefix sums: chunk c starts at the cumulative tokens of chunks < c

@@ -945,10 +945,9 @@ class StreamingSpec extends SparkFunSuite {
     val photoCells = arrivalsDf.select(col("doc_id"),
       lit(3L).as("lat_cell"), lit(5L).as("lon_cell")).localCheckpoint()
     val geoRates = Seq((3L, 5L, 5000L)).toDF("lat_cell", "lon_cell", "thr")
+    val (weights, totals) = graft.ops.TextAnalysis.nbLoad(spark, nbDir)
     val want = graft.ops.Pipeline.intakeBatchFull(
-      arrivalsDf, None,
-      Some(graft.ops.TextAnalysis.nbLoad(spark, nbDir)),
-      corpusFps, lshDir, emb, corpusEmb, ivfDir, benchGrams,
+      arrivalsDf, weights, totals, corpusFps, lshDir, emb, corpusEmb, ivfDir, benchGrams,
       photoCells, geoRates)
       .collect().map(_.toSeq).toSeq
     val reasons = want.map(_(2)).toSet

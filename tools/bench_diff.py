@@ -1,6 +1,9 @@
 #!/usr/bin/env python3
 """Compare two Bench JSON outputs (raw log lines or the driver's
-BENCH_r{N}.json wrapper) per query and flag regressions.
+BENCH_r{N}.json wrapper) per query and flag regressions. Each side's
+artifact build seconds, its queries + builds total and the artifact keys
+added or removed are printed too, since moving work between a query and
+an artifact changes the per-query seconds but not the sum.
 
 Usage: python3 tools/bench_diff.py <old> <new> [threshold=1.5]
 
@@ -59,6 +62,39 @@ def load(path):
     return d
 
 
+def build_total(d):
+    """Artifact build seconds of a record: the stored total, else the sum
+    of the per-artifact map, else None (a record without build accounting).
+    """
+    if d.get("artifact_build_total_sec") is not None:
+        return float(d["artifact_build_total_sec"])
+    if "artifact_build_sec" in d:
+        return float(sum(d["artifact_build_sec"].values()))
+    return None
+
+
+def print_builds(old, new):
+    """Queries + builds per side, and the artifact keys one side built and
+    the other did not: a query's work moved into (or out of) an artifact
+    shows up here, not in the per-query seconds.
+    """
+    for side, d in (("old", old), ("new", new)):
+        b = build_total(d)
+        if b is None:
+            print(f"{side} artifact builds: not recorded")
+        else:
+            print(f"{side} artifact builds {b:.1f}s   "
+                  f"queries + builds {d['value'] + b:.1f}s")
+    if "artifact_build_sec" not in old or "artifact_build_sec" not in new:
+        return
+    ob, nb = old["artifact_build_sec"], new["artifact_build_sec"]
+    for label, keys, src in (("added", set(nb) - set(ob), nb),
+                             ("removed", set(ob) - set(nb), ob)):
+        if keys:
+            print(f"artifact keys {label} ({len(keys)}): "
+                  + ", ".join(f"{k}={src[k]:.2f}s" for k in sorted(keys)))
+
+
 def main():
     old, new = load(sys.argv[1]), load(sys.argv[2])
     thresh = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
@@ -67,6 +103,7 @@ def main():
     ncal = new.get("calib_ms", {})
     print(f"old total {old['value']:.1f}s/{len(oq)}q   "
           f"new total {new['value']:.1f}s/{len(nq)}q")
+    print_builds(old, new)
     added = sorted(set(nq) - set(oq))
     removed = sorted(set(oq) - set(nq))
     if added:
