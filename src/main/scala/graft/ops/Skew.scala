@@ -39,12 +39,12 @@ object Skew {
     */
   val AdaptiveSaltBarBp = 1000000L
 
-  /** SKEW-ADAPTIVE equi-join (round 16, VERDICT r15 item 4): the
+  /** SKEW-ADAPTIVE equi-join: the
     * [[JoinShapes.qSkewProfile]] measurement WIRED to the join strategy.
     * The fact side's key profile collapses to a 1-row decision scalar —
     * `max_x_mean_bp` = the hottest key's multiple of the mean frequency
-    * in exact basis points (DECIMAL(38,0) product, the r16 envelope
-    * discipline; localCheckpointed so the profile subtree is paid once)
+    * in exact basis points (a DECIMAL(38,0) product, so it cannot
+    * overflow; localCheckpointed so the profile subtree is paid once)
     * — which broadcasts onto BOTH join sides as the SALT-BUCKET COUNT:
     * [[saltBuckets]] at/above the [[AdaptiveSaltBarBp]] bar, 1 below it.
     * With one bucket the salt column is the constant 0 on both sides, so
@@ -90,19 +90,4 @@ object Skew {
         col(factKey) === col(dimKey) && salted("_salt") === replicated("_salt"))
       .drop("_salt")
   }
-
-  /** Two-phase salted aggregation: partial by (key, salt) then final by
-    * key — for severely skewed group-by keys. `aggs` must be decomposable
-    * (sum/count/min/max); the caller re-aggregates the partials.
-    */
-  def saltedPartials(
-      df: DataFrame,
-      key: Column,
-      saltBuckets: Int,
-      partials: Seq[Column]): DataFrame =
-    df.withColumn("_salt",
-        pmod(xxhash64(monotonically_increasing_id()), lit(saltBuckets.toLong)).cast("int"))
-      .groupBy(key.as("key"), col("_salt"))
-      .agg(partials.head, partials.tail: _*)
-      .drop("_salt")
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming CDC apply — the streaming dual of the batch
@@ -75,28 +74,17 @@ object CdcMergeStream {
       facts: DataFrame,
       dimKey: String,
       enrich: DataFrame => DataFrame): DataFrame = {
-    @volatile var view = initialView.localCheckpoint()
     val factsStable = facts.localCheckpoint()
-    val stream = spark.readStream
-      .schema(dimSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dimDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Drain.loop(spark, dimDir, dimSchema, checkpoint)(initialView.localCheckpoint()) {
+      (view, batch, _) =>
         val keys = batch.select(col(dimKey)).distinct().localCheckpoint()
         val refreshedPart = enrich(
           factsStable.join(broadcast(batch), Seq(dimKey)))
-        view = view
+        view
           .join(broadcast(keys), Seq(dimKey), "left_anti")
           .unionByName(refreshedPart)
           .localCheckpoint()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    view
+    }
   }
 
   /** Stream the change-log parquet directory into `initial` with one MERGE
@@ -108,24 +96,12 @@ object CdcMergeStream {
       spark: SparkSession,
       changeDir: String,
       checkpoint: String,
-      initial: DataFrame): DataFrame = {
-    @volatile var target = initial.localCheckpoint()
-    val stream = spark.readStream
-      .schema(changeSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(changeDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      initial: DataFrame): DataFrame =
+    Drain.loop(spark, changeDir, changeSchema, checkpoint)(initial.localCheckpoint()) {
+      (target, batch, _) =>
         // materialize before the next batch: the micro-batch DataFrame is
         // only valid inside this callback, and the target must not chain
         // lineage across batches
-        target = applyBatch(target, batch).localCheckpoint()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    target
-  }
+        applyBatch(target, batch).localCheckpoint()
+    }
 }

@@ -45,15 +45,8 @@ object CompactionStream {
       docDir: String,
       checkpoint: String,
       target: Long = graft.ops.Layout.CompactTargetBytes): DataFrame = {
-    import IngestDedup.docSchema
-    @volatile var carried = Map.empty[String, Long]
-    @volatile var results: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Drain.rows(spark, docDir, IngestDedup.docSchema, checkpoint, Map.empty[String, Long]) {
+      (carried, batch) =>
         val sess = batch.sparkSession
         import sess.implicits._
         val base = carried.toSeq.toDF("source", "base")
@@ -68,23 +61,13 @@ object CompactionStream {
             expr(s"(base + cum - bytes) DIV $target").as("grp"))
           .localCheckpoint()
         // state update: one row per directory seen in this batch
-        carried = assigned.groupBy(col("source")).agg(sum(col("bytes")).as("b"))
+        val next = assigned.groupBy(col("source")).agg(sum(col("bytes")).as("b"))
           .collect()
           .foldLeft(carried) { case (m, r) =>
             m.updated(r.getString(0), m.getOrElse(r.getString(0), 0L) + r.getLong(1))
           }
-        results = Some(results.fold(assigned)(_.union(assigned).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("source", StringType),
-          StructField("doc_id", LongType), StructField("bytes", LongType),
-          StructField("grp", LongType)))))
+        (next, assigned)
+    }._2
   }
 
   final case class FileRow(source: String, doc_id: Long, bytes: Long)

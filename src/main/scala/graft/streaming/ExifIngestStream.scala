@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming photo-ingest BURST gate — the arrival-time dual of
@@ -51,63 +50,38 @@ object ExifIngestStream {
       spark: SparkSession,
       photoDir: String,
       checkpoint: String): (DataFrame, DataFrame) = {
-    // registry/verdict state lives in the driver and starts empty — a
-    // resumed checkpoint would silently skip arrivals already committed
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
-    @volatile var registry: DataFrame = spark.emptyDataFrame
-    @volatile var verdicts: Option[DataFrame] = None
     val kc: Seq[Column] = KeyCols.map(col)
-    val q = spark.readStream
-      .schema(photoSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(photoDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keys = graft.ops.Multimodal.burstKeys(batch).localCheckpoint()
-        val bAgg = keys.groupBy(kc: _*)
-          .agg(min(col("doc_id")).as("bmin"), count(lit(1)).as("bcnt"))
-        val std =
-          if (registry.columns.isEmpty)
-            bAgg.select(kc :+ col("bmin").as("survivor") :+
-              col("bcnt").as("n_std"): _*).limit(0)
-          else registry.select(kc :+ col("survivor") :+
-            col("n_photos").as("n_std"): _*)
-        // untouched standing bursts persist; new cells open with the
-        // commit's min id; re-touched cells keep their first survivor
-        val merged = std.join(bAgg, KeyCols, "full")
-          .select(kc :+
-            coalesce(col("survivor"), col("bmin")).as("survivor") :+
-            (coalesce(col("n_std"), lit(0L)) +
-              coalesce(col("bcnt"), lit(0L))).as("n_photos"): _*)
-          .localCheckpoint()
-        val v = keys
-          .join(std.select(kc :+ col("survivor").as("std_surv"): _*),
-            KeyCols, "left")
-          .join(bAgg.select(kc :+ col("bmin"): _*), KeyCols, "left")
-          .select(col("doc_id") +: kc :+
-            when(col("std_surv").isNotNull, col("std_surv"))
-              .when(col("doc_id") =!= col("bmin"), col("bmin"))
-              .otherwise(lit(null).cast(LongType)).as("dup_of"): _*)
-          .withColumn("admitted", col("dup_of").isNull)
-          .localCheckpoint()
-        registry = merged
-        verdicts = Some(verdicts.fold(v)(_.unionByName(v).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    def empty(fields: (String, DataType)*): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(fields.map { case (n, t) => StructField(n, t) }))
-    (verdicts.getOrElse(empty("doc_id" -> LongType, "lat_cell" -> LongType,
-        "lon_cell" -> LongType, "hour" -> LongType, "dup_of" -> LongType,
-        "admitted" -> BooleanType)),
-      if (registry.columns.isEmpty)
-        empty("lat_cell" -> LongType, "lon_cell" -> LongType,
-          "hour" -> LongType, "survivor" -> LongType, "n_photos" -> LongType)
-      else registry)
+    val (registry, verdicts) = Drain.rows(spark, photoDir, photoSchema, checkpoint,
+        Option.empty[DataFrame]) { (registry, batch) =>
+      val keys = graft.ops.Multimodal.burstKeys(batch).localCheckpoint()
+      val bAgg = keys.groupBy(kc: _*)
+        .agg(min(col("doc_id")).as("bmin"), count(lit(1)).as("bcnt"))
+      val std = registry.fold(
+        bAgg.select(kc :+ col("bmin").as("survivor") :+
+          col("bcnt").as("n_std"): _*).limit(0))(
+        _.select(kc :+ col("survivor") :+ col("n_photos").as("n_std"): _*))
+      // untouched standing bursts persist; new cells open with the
+      // commit's min id; re-touched cells keep their first survivor
+      val merged = std.join(bAgg, KeyCols, "full")
+        .select(kc :+
+          coalesce(col("survivor"), col("bmin")).as("survivor") :+
+          (coalesce(col("n_std"), lit(0L)) +
+            coalesce(col("bcnt"), lit(0L))).as("n_photos"): _*)
+        .localCheckpoint()
+      val v = keys
+        .join(std.select(kc :+ col("survivor").as("std_surv"): _*),
+          KeyCols, "left")
+        .join(bAgg.select(kc :+ col("bmin"): _*), KeyCols, "left")
+        .select(col("doc_id") +: kc :+
+          when(col("std_surv").isNotNull, col("std_surv"))
+            .when(col("doc_id") =!= col("bmin"), col("bmin"))
+            .otherwise(lit(null).cast(LongType)).as("dup_of"): _*)
+        .withColumn("admitted", col("dup_of").isNull)
+        .localCheckpoint()
+      (Some(merged), v)
+    }
+    // rows applies the step at least once (to an empty batch when no
+    // file arrived), so the registry is always defined
+    (verdicts, registry.get)
   }
 }

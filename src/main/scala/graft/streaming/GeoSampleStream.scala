@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Streaming GEO-DIVERSITY admission gate — the arrival-time face of
   * [[graft.ops.Multimodal.qGeoDiversityMix]]: photos arrive as a binary
@@ -48,27 +46,7 @@ object GeoSampleStream {
     */
   def run(spark: SparkSession, photoDir: String, checkpoint: String,
       rates: DataFrame): DataFrame = {
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
     val frozen = rates.localCheckpoint()
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val q = spark.readStream
-      .schema(ExifIngestStream.photoSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(photoDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        parts += keepBatch(batch, frozen).localCheckpoint()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    parts.reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("lat_cell", LongType), StructField("lon_cell", LongType),
-          StructField("kept", BooleanType)))))
+    Drain.rows(spark, photoDir, ExifIngestStream.photoSchema, checkpoint)(keepBatch(_, frozen))
   }
 }

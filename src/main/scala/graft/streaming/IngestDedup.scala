@@ -112,30 +112,9 @@ object IngestDedup {
       indexDir: String,
       cfg: graft.ops.TextDedup.MinHashConfig = graft.ops.TextDedup.MinHashConfig(
         shingleK = graft.ops.Dedup.ShingleK),
-      threshold: Double = graft.ops.Dedup.JaccardThreshold): DataFrame = {
-    @volatile var results: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flagged = graft.ops.TextDedup
-          .minhashLshIncrementalFromIndex(
-            batch, col("doc_id"), col("text"), indexDir, cfg, threshold)
-          .localCheckpoint()
-        results = Some(results.fold(flagged)(_.union(flagged).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", LongType), StructField("dup_of", LongType),
-          StructField("best_jaccard", DoubleType), StructField("n_dups", LongType)))))
-  }
+      threshold: Double = graft.ops.Dedup.JaccardThreshold): DataFrame =
+    Drain.rows(spark, docDir, docSchema, checkpoint)(graft.ops.TextDedup
+      .minhashLshIncrementalFromIndex(_, col("doc_id"), col("text"), indexDir, cfg, threshold))
 
   /** Streaming OVERLAP-SPAN gate — the arrival-time dual of
     * [[graft.ops.Dedup.qOverlapSpans]]: each micro-batch of arriving
@@ -154,40 +133,10 @@ object IngestDedup {
       docDir: String,
       checkpoint: String,
       corpusGrams: DataFrame,
-      l: Int = graft.ops.Dedup.DupSpanL): DataFrame = {
-    @volatile var results: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spans = graft.ops.TextDedup
-          .overlapSpans(batch, col("doc_id"), col("text"), corpusGrams, l)
-          .localCheckpoint()
-        results = Some(results.fold(spans)(_.union(spans).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", LongType),
-          StructField("span_start", LongType), StructField("span_len", LongType)))))
-  }
+      l: Int = graft.ops.Dedup.DupSpanL): DataFrame =
+    Drain.rows(spark, docDir, docSchema, checkpoint)(graft.ops.TextDedup
+      .overlapSpans(_, col("doc_id"), col("text"), corpusGrams, l))
 
-  /** Streaming rendezvous router: each arriving document gets the same
-    * highest-random-weight shard [[graft.ops.Corpus.qShardRendezvous]]
-    * assigns in batch — the assignment is a pure row function of the
-    * stable doc_id, so the stream and the batch view of the same corpus
-    * NEVER disagree (the property the spec pins), and resizing the shard
-    * ring mid-stream only re-routes the dropped/added shard's keys.
-    *
-    * Scale: a stateless per-row projection — no state store, no
-    * watermark, no shuffle before the sink's own partitioning.
-    */
   /** Streaming PII GATE — the arrival-time dual of
     * [[graft.ops.TextAnalysis.qPiiAudit]]: every arriving document is
     * scored against the SAME three structured-PII patterns (the shared
@@ -228,6 +177,16 @@ object IngestDedup {
         .withColumn("fk_known", lit(1L))), Seq(key), "left")
       .select(col(key), col("fk_known").isNull.as("orphan"))
 
+  /** Streaming rendezvous router: each arriving document gets the same
+    * highest-random-weight shard [[graft.ops.Corpus.qShardRendezvous]]
+    * assigns in batch — the assignment is a pure row function of the
+    * stable doc_id, so the stream and the batch view of the same corpus
+    * NEVER disagree (the property the spec pins), and resizing the shard
+    * ring mid-stream only re-routes the dropped/added shard's keys.
+    *
+    * Scale: a stateless per-row projection — no state store, no
+    * watermark, no shuffle before the sink's own partitioning.
+    */
   def shardRouter(incoming: DataFrame, numShards: Int = graft.ops.Corpus.NumShards): DataFrame =
     incoming
       .withColumn("shard", graft.ops.Corpus.rendezvousShard(col("doc_id"), numShards))

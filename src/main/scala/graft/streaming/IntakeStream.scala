@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types._
 
 /** Streaming corpus INTAKE — the arrival-time face of
   * [[graft.ops.Pipeline.intakeBatch]] and the composition of this
@@ -19,8 +18,9 @@ import org.apache.spark.sql.types._
   *
   * Scale: per batch, O(batch) index probes (the LSH/IVF serving paths are
   * corpus-size-independent by construction) plus broadcast joins against
-  * the fingerprint/gram sets; no state beyond the stored artifacts, so a
-  * restart resumes from the checkpoint with nothing to rebuild.
+  * the fingerprint/gram sets; no state beyond the stored artifacts. The
+  * verdict rows accumulate in the driver, so a used checkpoint is refused
+  * ([[Drain.rows]]).
   */
 object IntakeStream {
 
@@ -37,8 +37,9 @@ object IntakeStream {
       corpusEmb: DataFrame,
       ivfIndexDir: String,
       benchGrams: DataFrame): DataFrame =
-    drain(spark, docDir, checkpoint)(graft.ops.Pipeline.intakeBatch(
-      _, corpusFps, lshIndexDir, embLookup, corpusEmb, ivfIndexDir, benchGrams))
+    Drain.rows(spark, docDir, IngestDedup.docSchema, checkpoint)(
+      graft.ops.Pipeline.intakeBatch(
+        _, corpusFps, lshIndexDir, embLookup, corpusEmb, ivfIndexDir, benchGrams))
 
   /** [[intakeGate]] with the trained quality classifier as the PRE-gate
     * stage: each micro-batch is scored against the
@@ -62,11 +63,10 @@ object IntakeStream {
       corpusEmb: DataFrame,
       ivfIndexDir: String,
       benchGrams: DataFrame): DataFrame = {
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
     val (weights, totals) = QualityServeStream.frozenModel(spark, modelDir)
-    drain(spark, docDir, checkpoint)(graft.ops.Pipeline.intakeBatchGated(
-      _, weights, totals, corpusFps, lshIndexDir, embLookup, corpusEmb,
-      ivfIndexDir, benchGrams))
+    Drain.rows(spark, docDir, IngestDedup.docSchema, checkpoint)(
+      graft.ops.Pipeline.intakeBatchGated(_, weights, totals, corpusFps, lshIndexDir,
+        embLookup, corpusEmb, ivfIndexDir, benchGrams))
   }
 
   /** The FULL cascade stream: [[intakeGateClassified]] plus
@@ -92,41 +92,11 @@ object IntakeStream {
       benchGrams: DataFrame,
       photoCells: DataFrame,
       geoRates: DataFrame): DataFrame = {
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
     val (weights, totals) = QualityServeStream.frozenModel(spark, modelDir)
     val frozenCells = photoCells.localCheckpoint()
     val frozenRates = geoRates.localCheckpoint()
-    drain(spark, docDir, checkpoint)(graft.ops.Pipeline.intakeBatchFull(
-      _, weights, totals, corpusFps, lshIndexDir, embLookup, corpusEmb,
-      ivfIndexDir, benchGrams, frozenCells, frozenRates))
-  }
-
-  /** Stream `docDir` one file per micro-batch through `gate` until no
-    * input is left, and return the accumulated verdict rows (an empty
-    * verdict table when no file arrived).
-    */
-  private def drain(spark: SparkSession, docDir: String, checkpoint: String)(
-      gate: DataFrame => DataFrame): DataFrame = {
-    @volatile var results: Option[DataFrame] = None
-    val q = spark.readStream
-      .schema(IngestDedup.docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val verdicts = gate(batch)
-        results = Some(results.fold(verdicts)(_.union(verdicts).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("n_tokens", LongType), StructField("reason", StringType),
-          StructField("accepted", LongType), StructField("split", StringType),
-          StructField("shard", LongType)))))
+    Drain.rows(spark, docDir, IngestDedup.docSchema, checkpoint)(
+      graft.ops.Pipeline.intakeBatchFull(_, weights, totals, corpusFps, lshIndexDir,
+        embLookup, corpusEmb, ivfIndexDir, benchGrams, frozenCells, frozenRates))
   }
 }

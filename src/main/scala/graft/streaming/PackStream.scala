@@ -38,15 +38,8 @@ object PackStream {
       docDir: String,
       checkpoint: String,
       budget: Long = graft.ops.Corpus.PackBudget.toLong): DataFrame = {
-    import IngestDedup.docSchema
-    @volatile var carried = Map.empty[Long, Long]
-    @volatile var results: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Drain.rows(spark, docDir, IngestDedup.docSchema, checkpoint, Map.empty[Long, Long]) {
+      (carried, batch) =>
         val sess = batch.sparkSession
         import sess.implicits._
         val base = carried.toSeq.toDF("shard", "base")
@@ -62,22 +55,13 @@ object PackStream {
           .select(col("shard"), col("doc_id"), col("n_tokens"),
             expr(s"(base + cum - n_tokens) DIV $budget").as("chunk_id"))
           .localCheckpoint()
-        carried = assigned.groupBy(col("shard")).agg(sum(col("n_tokens")).as("t"))
+        val next = assigned.groupBy(col("shard")).agg(sum(col("n_tokens")).as("t"))
           .collect()
           .foldLeft(carried) { case (m, r) =>
             m.updated(r.getLong(0), m.getOrElse(r.getLong(0), 0L) + r.getLong(1))
           }
-        results = Some(results.fold(assigned)(_.union(assigned).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("shard", LongType), StructField("doc_id", LongType),
-          StructField("n_tokens", LongType), StructField("chunk_id", LongType)))))
+        (next, assigned)
+    }._2
   }
 
   /** Aggregate per-document assignments into the batch packer's chunk

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming quality-classifier gate — the arrival-time face of the
   * stored NB model ([[graft.ops.Artifacts.ensureQualityNb]]): every
@@ -16,8 +15,8 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Scale: per batch, one broadcast of the vocab-sized weight table into
   * the batch token stream + one per-doc aggregate; no state beyond the
-  * stored artifact, so a restart resumes from the checkpoint with
-  * nothing to rebuild.
+  * stored artifact. The verdict rows accumulate in the driver, so a used
+  * checkpoint is refused ([[Drain.rows]]).
   */
 object QualityServeStream {
 
@@ -52,33 +51,11 @@ object QualityServeStream {
 
   /** Run the gate over `docDir` (documents-shaped arrival files) and
     * return the accumulated per-document verdict rows. The model parquets
-    * are read once; per-batch results checkpoint individually and union
-    * once at the end (re-checkpointing the accumulated union per batch
-    * would copy O(batches²) rows).
+    * are read once and pinned for the whole stream.
     */
   def run(spark: SparkSession, docDir: String, checkpoint: String,
       modelDir: String): DataFrame = {
-    // verdicts accumulate in the driver — a resumed checkpoint would
-    // silently skip batches
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
     val (weights, totals) = frozenModel(spark, modelDir)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val q = spark.readStream
-      .schema(IngestDedup.docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        parts += scoreBatch(batch, weights, totals).localCheckpoint()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    parts.reduceOption(_.unionByName(_)).getOrElse(
-      scoreBatch(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        IngestDedup.docSchema), weights, totals))
+    Drain.rows(spark, docDir, IngestDedup.docSchema, checkpoint)(scoreBatch(_, weights, totals))
   }
 }

@@ -51,20 +51,13 @@ object ReclusterStream {
       checkpoint: String,
       thresholdBp: Long = Layout.DriftThresholdBp,
       groupRows: Int = Layout.ReclusterGroupRows): (DataFrame, Seq[DriftObs]) = {
-    @volatile var acc: Option[DataFrame] = None
-    @volatile var standing: Option[DataFrame] = None
-    val obs = scala.collection.mutable.ArrayBuffer.empty[DriftObs]
     val deltaSchema = StructType(base.schema.fields.toSeq)
-    val stream = spark.readStream
-      .schema(deltaSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(deltaDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        acc = Some(acc.fold(batch.localCheckpoint())(
-          a => a.union(batch).localCheckpoint()))
+    val (_, standing, obs) = Drain.fold(spark, deltaDir, deltaSchema, checkpoint)(
+        (Option.empty[DataFrame], Option.empty[DataFrame], Vector.empty[DriftObs])) {
+      case ((acc, _, obs), batch, bid) =>
+        val arrived = acc.fold(batch.localCheckpoint())(_.union(batch).localCheckpoint())
         val keyed = base.withColumn("segment", lit(0))
-          .unionByName(acc.get.withColumn("segment", lit(1)))
+          .unionByName(arrived.withColumn("segment", lit(1)))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // 1-row control-plane scalar: the standing drift after this commit
         val drift = Layout.reclusterDrift(keyed).collect()(0).getLong(0)
@@ -72,24 +65,15 @@ object ReclusterStream {
         // Re-decide EVERY commit (clearing on non-firing ones): the batch
         // decision is empty below threshold, so a drift that crossed in an
         // early batch and fell back by the last must leave no standing plan
-        // — otherwise the stream==batch contract breaks (ADVICE r11).
-        standing =
-          if (fire)
-            Some(Layout.reclusterDecision(keyed, thresholdBp, groupRows).localCheckpoint())
+        // — otherwise the stream==batch contract breaks.
+        val plan =
+          if (fire) Some(Layout.reclusterDecision(keyed, thresholdBp, groupRows).localCheckpoint())
           else None
         keyed.unpersist()
-        obs += DriftObs(bid, drift, fire)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("grp", LongType), StructField("n_rows", LongType),
-        StructField("hk_lo", LongType), StructField("hk_hi", LongType),
-        StructField("drift_bp", LongType))))
-    (standing.getOrElse(empty), obs.toSeq)
+        (Some(arrived), plan, obs :+ DriftObs(bid, drift, fire))
+    }
+    // no firing last commit: the decision's columns over no rows
+    (standing.getOrElse(Layout.reclusterDecision(
+      base.withColumn("segment", lit(0)).limit(0), thresholdBp, groupRows).limit(0)), obs)
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Streaming REPETITION gate — the arrival-time face of
   * [[graft.ops.TextAnalysis.qRepetitionFilter]]: every arriving document
@@ -33,27 +31,6 @@ object RepetitionGateStream {
   /** Run the gate over `docDir` (documents-shaped arrival files, one per
     * trigger) and return the accumulated verdict rows.
     */
-  def run(spark: SparkSession, docDir: String, checkpoint: String): DataFrame = {
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val q = spark.readStream
-      .schema(IngestDedup.docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        parts += keepBatch(batch).localCheckpoint()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    parts.reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("top2_bp", LongType), StructField("top3_bp", LongType),
-          StructField("top4_bp", LongType), StructField("kept", BooleanType)))))
-  }
+  def run(spark: SparkSession, docDir: String, checkpoint: String): DataFrame =
+    Drain.rows(spark, docDir, IngestDedup.docSchema, checkpoint)(keepBatch)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.{Similarity, VectorSearch}
 
@@ -61,52 +60,45 @@ object RetrainStream {
     val corpusN = corpus.select(id.as("vec_id"), vec.as("embedding"))
       .localCheckpoint()
     val refreshDir = s"$scratchDir/refresh"
-    VectorSearch.writeIvfIndex(corpusN, col("vec_id"), col("embedding"), refreshDir)
-    @volatile var acc: DataFrame = corpusN
-    @volatile var standing: Option[DataFrame] = None
-    val obs = scala.collection.mutable.ArrayBuffer.empty[RecallObs]
     def rename(df: DataFrame): DataFrame =
       df.withColumnRenamed("qid", "q_vec_id").withColumnRenamed("id", "vec_id")
-    val stream = spark.readStream
-      .schema(VectorServeStream.embeddingSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(embDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
-        VectorSearch.refreshIvfIndex(b, col("vec_id"), col("embedding"), refreshDir)
-        acc = acc.union(b).localCheckpoint()
-        val exact = rename(VectorSearch.cosineTopK(
-          acc, col("vec_id"), col("embedding"), queryIds, k))
-          .select(col("q_vec_id"), col("vec_id")).localCheckpoint()
-        val served = rename(VectorSearch.ivfTopKFromIndex(
-          acc, col("vec_id"), col("embedding"), refreshDir, queryIds, k))
-          .select(col("q_vec_id"), col("vec_id"))
-        // 1-row control-plane scalar: the refreshed index's standing recall
-        val mean = Similarity.recallBpOver(exact, served)
-          .agg(expr("sum(recall_bp) DIV count(*)").as("m"))
-          .collect()(0).getLong(0)
-        val fire = mean < barBp
-        val serveDir = if (fire) {
-          val gen = s"$scratchDir/gen-$bid"
-          VectorSearch.writeIvfIndex(acc, col("vec_id"), col("embedding"), gen)
-          gen
-        } else refreshDir
-        standing = Some(rename(VectorSearch.ivfTopKFromIndex(
-          acc, col("vec_id"), col("embedding"), serveDir, queryIds, k))
-          .withColumn("mean_recall_bp", lit(mean))
-          .withColumn("retrained", lit(if (fire) 1L else 0L))
-          .select(col("q_vec_id"), col("rnk"), col("vec_id"), col("cos_sim"),
-            col("mean_recall_bp"), col("retrained"))
-          .orderBy(col("q_vec_id"), col("rnk"))
-          .localCheckpoint())
-        obs += RecallObs(bid, mean, fire)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (standing.getOrElse(spark.emptyDataFrame), obs.toSeq)
+    def plan(acc: DataFrame, serveDir: String, mean: Long, fire: Boolean): DataFrame =
+      rename(VectorSearch.ivfTopKFromIndex(
+        acc, col("vec_id"), col("embedding"), serveDir, queryIds, k))
+        .withColumn("mean_recall_bp", lit(mean))
+        .withColumn("retrained", lit(if (fire) 1L else 0L))
+        .select(col("q_vec_id"), col("rnk"), col("vec_id"), col("cos_sim"),
+          col("mean_recall_bp"), col("retrained"))
+        .orderBy(col("q_vec_id"), col("rnk"))
+    val (_, standing, obs) = Drain.fold(spark, embDir, VectorServeStream.embeddingSchema,
+        checkpoint)({
+      // the refresh index trains once, after the checkpoint guard
+      VectorSearch.writeIvfIndex(corpusN, col("vec_id"), col("embedding"), refreshDir)
+      (corpusN, Option.empty[DataFrame], Vector.empty[RecallObs])
+    }) { case ((acc0, _, obs), batch, bid) =>
+      val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
+      VectorSearch.refreshIvfIndex(b, col("vec_id"), col("embedding"), refreshDir)
+      val acc = acc0.union(b).localCheckpoint()
+      val exact = rename(VectorSearch.cosineTopK(
+        acc, col("vec_id"), col("embedding"), queryIds, k))
+        .select(col("q_vec_id"), col("vec_id")).localCheckpoint()
+      val served = rename(VectorSearch.ivfTopKFromIndex(
+        acc, col("vec_id"), col("embedding"), refreshDir, queryIds, k))
+        .select(col("q_vec_id"), col("vec_id"))
+      // 1-row control-plane scalar: the refreshed index's standing recall
+      val mean = Similarity.recallBpOver(exact, served)
+        .agg(expr("sum(recall_bp) DIV count(*)").as("m"))
+        .collect()(0).getLong(0)
+      val fire = mean < barBp
+      val serveDir = if (fire) {
+        val gen = s"$scratchDir/gen-$bid"
+        VectorSearch.writeIvfIndex(acc, col("vec_id"), col("embedding"), gen)
+        gen
+      } else refreshDir
+      (acc, Some(plan(acc, serveDir, mean, fire).localCheckpoint()),
+        obs :+ RecallObs(bid, mean, fire))
+    }
+    // no commit, no standing plan: the plan's columns, no rows
+    (standing.getOrElse(plan(corpusN, refreshDir, 0L, fire = false).limit(0)), obs)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming BM25 search serving over a PERSISTED inverted index — the
@@ -42,37 +41,19 @@ object SearchServeStream {
       checkpoint: String,
       indexDir: String,
       k: Int): DataFrame = {
-    import graft.ops.TextAnalysis
-    @volatile var results: Option[DataFrame] = None
-    val served = scala.collection.mutable.Set.empty[Long]
-    val stream = spark.readStream
-      .schema(requestSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(requestDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    def answer(qid: Long, terms: Seq[String]): DataFrame =
+      graft.ops.TextAnalysis.bm25TopKFromIndex(spark, indexDir, terms, k)
+        .select(lit(qid).as("qid"), col("rnk"), col("doc_id"), col("score_bp"), col("n_terms"))
+    Drain.rows(spark, requestDir, requestSchema, checkpoint, Set.empty[Long]) {
+      (served, batch) =>
         val reqs = batch.select(col("qid"), col("term")).distinct()
           .collect().map(r => (r.getLong(0), r.getString(1)))
           .groupBy(_._1).map { case (qid, rows) => qid -> rows.map(_._2).toSeq.sorted }
           .filterNot { case (qid, _) => served(qid) }
-        served ++= reqs.keys
-        reqs.toSeq.sortBy(_._1).foreach { case (qid, terms) =>
-          val answered = TextAnalysis.bm25TopKFromIndex(spark, indexDir, terms, k)
-            .select(lit(qid).as("qid"), col("rnk"), col("doc_id"),
-              col("score_bp"), col("n_terms"))
-            .localCheckpoint()
-          results = Some(results.fold(answered)(_.union(answered).localCheckpoint()))
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("qid", LongType), StructField("rnk", LongType),
-          StructField("doc_id", LongType), StructField("score_bp", LongType),
-          StructField("n_terms", LongType)))))
+        val answered = reqs.toSeq.sortBy(_._1).map { case (qid, terms) => answer(qid, terms) }
+        // a query with no terms matches no postings: the empty answer
+        (served ++ reqs.keys,
+          answered.reduceOption(_.union(_)).getOrElse(answer(0L, Nil)).localCheckpoint())
+    }._2
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType, StringType}
 
 /** Streaming sketch maintenance — the arrival-time dual of
   * [[graft.ops.Sketches]]: document batches stream in and the running
@@ -31,36 +29,26 @@ object SketchStream {
   def hllRegisterBatches(
       spark: SparkSession, docDir: String, checkpoint: String): DataFrame = {
     import graft.ops.{Dedup, Sketches, TextDedup}
-    @volatile var regs: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(IngestDedup.docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sh = TextDedup.shingles(batch, col("doc_id"), col("text"), Dedup.ShingleK)
-        val src = sh
-          .join(batch.select(col("doc_id").as("id"), col("source")), Seq("id"))
-          .select(col("source"), col("s"))
-          .distinct()
-        val bregs = Sketches.hllRegisters(src).localCheckpoint()
-        sh.unpersist()
+    def registers(batch: DataFrame): DataFrame = {
+      val sh = TextDedup.shingles(batch, col("doc_id"), col("text"), Dedup.ShingleK)
+      val src = sh
+        .join(batch.select(col("doc_id").as("id"), col("source")), Seq("id"))
+        .select(col("source"), col("s"))
+        .distinct()
+      val regs = Sketches.hllRegisters(src).localCheckpoint()
+      sh.unpersist()
+      regs
+    }
+    Drain.fold(spark, docDir, IngestDedup.docSchema, checkpoint)(Option.empty[DataFrame]) {
+      (regs, batch, _) =>
+        val bregs = registers(batch)
         // merge law: registers of a union are the elementwise max
-        regs = Some(regs.fold(bregs)(r =>
+        Some(regs.fold(bregs)(r =>
           r.unionByName(bregs)
             .groupBy(col("source"), col("bucket"))
             .agg(max(col("m_j")).as("m_j"))
             .localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    regs.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("source", StringType),
-          StructField("bucket", IntegerType), StructField("m_j", IntegerType)))))
+    }.getOrElse(registers(Drain.emptyBatch(spark, IngestDedup.docSchema)))
   }
 
   /** The running cardinality estimate from the streamed registers —
@@ -87,31 +75,20 @@ object SketchStream {
   def cmsCounterBatches(
       spark: SparkSession, docDir: String, checkpoint: String): DataFrame = {
     import graft.ops.{Dedup, Sketches, TextDedup}
-    @volatile var counters: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(IngestDedup.docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sh = TextDedup.shingles(batch, col("doc_id"), col("text"), Dedup.ShingleK)
-        val delta = Sketches.cmsCounters(
-          sh.groupBy(col("s")).agg(count(lit(1)).as("df"))).localCheckpoint()
-        sh.unpersist()
-        counters = Some(counters.fold(delta)(c =>
+    def counters(batch: DataFrame): DataFrame = {
+      val sh = TextDedup.shingles(batch, col("doc_id"), col("text"), Dedup.ShingleK)
+      val delta = Sketches.cmsCounters(
+        sh.groupBy(col("s")).agg(count(lit(1)).as("df"))).localCheckpoint()
+      sh.unpersist()
+      delta
+    }
+    Drain.fold(spark, docDir, IngestDedup.docSchema, checkpoint)(Option.empty[DataFrame]) {
+      (acc, batch, _) =>
+        val delta = counters(batch)
+        Some(acc.fold(delta)(c =>
           c.unionByName(delta)
             .groupBy(col("r"), col("idx")).agg(sum(col("c")).as("c"))
             .localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    counters.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("r", IntegerType),
-          StructField("idx", IntegerType),
-          StructField("c", org.apache.spark.sql.types.LongType)))))
+    }.getOrElse(counters(Drain.emptyBatch(spark, IngestDedup.docSchema)))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming corpus-version diff — the arrival-time dual of the batch
   * [[graft.ops.Checks.snapshotDiff]] reconcile (the last batch-only
@@ -54,32 +53,21 @@ object SnapshotDiffStream {
       .select(col("grp"), lit("deleted").as("status"),
         col("n_docs"), col("token_delta"))
       .localCheckpoint()
-    @volatile var counters: DataFrame = init
     // arrived-key state: (k, grp, status, tc, tp, fp) — fp kept so a
     // re-arrival can re-enter the max-struct resolve below
-    @volatile var state: DataFrame = spark.emptyDataFrame
-    val emissions = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // the ledger's counters/state live in the driver and restart from
-    // init — a resumed checkpoint would silently under-count
-    StreamGuards.requireFreshCheckpoint(spark, checkpoint)
-    val q = spark.readStream
-      .schema(IngestDedup.docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Drain.fold(spark, docDir, IngestDedup.docSchema, checkpoint)(
+        (init, Option.empty[DataFrame], Vector.empty[DataFrame])) {
+      case ((counters, state, emissions), batch, _) =>
         // per-key resolve: greatest (fp, n_tok, grp) wins — with each
         // re-arriving key's STORED winner as one more candidate, so the
         // rule is the same within and across commits (split-invariant)
         val cand = batch.select(col("doc_id").as("k"), col("source").as("grp_c"),
           md5(col("text")).as("fp_c"),
           size(graft.ops.TextOps.tokens(col("text"))).cast("long").as("tc"))
-        val withOld =
-          if (state.columns.isEmpty) cand
-          else cand.unionByName(
-            state.join(cand.select(col("k")), Seq("k"), "left_semi")
-              .select(col("k"), col("grp").as("grp_c"),
-                col("fp").as("fp_c"), col("tc")))
+        val withOld = state.fold(cand)(st => cand.unionByName(
+          st.join(cand.select(col("k")), Seq("k"), "left_semi")
+            .select(col("k"), col("grp").as("grp_c"),
+              col("fp").as("fp_c"), col("tc"))))
         val b = withOld
           .groupBy(col("k"))
           .agg(max(struct(col("fp_c"), col("tc"), col("grp_c"))).as("m"))
@@ -96,43 +84,36 @@ object SnapshotDiffStream {
         val delta = col("tc") - col("tp")
         val arrived = bj.select(col("grp"), col("status"),
           lit(1L).as("n_docs"), delta.as("token_delta"))
-        val transitions =
-          if (state.columns.isEmpty) {
+        val transitions = state match {
+          case None =>
             // first commit: every snapshot-backed arrival leaves 'deleted'
             arrived.unionByName(bj.filter(col("had_prev"))
               .select(col("grp_p").as("grp"), lit("deleted").as("status"),
                 lit(-1L).as("n_docs"), col("tp").as("token_delta")))
-          } else {
+          case Some(st) =>
             // re-arrivals replace their earlier verdict; only FIRST-time
             // snapshot-backed arrivals drain 'deleted'
-            val rearr = state.join(bj.select(col("k")), Seq("k"), "left_semi")
-            val fresh = bj.join(state.select(col("k")), Seq("k"), "left_anti")
+            val rearr = st.join(bj.select(col("k")), Seq("k"), "left_semi")
+            val fresh = bj.join(st.select(col("k")), Seq("k"), "left_anti")
             arrived
               .unionByName(rearr.select(col("grp"), col("status"),
                 lit(-1L).as("n_docs"), (col("tp") - col("tc")).as("token_delta")))
               .unionByName(fresh.filter(col("had_prev"))
                 .select(col("grp_p").as("grp"), lit("deleted").as("status"),
                   lit(-1L).as("n_docs"), col("tp").as("token_delta")))
-          }
-        counters = counters.unionByName(transitions)
+        }
+        val next = counters.unionByName(transitions)
           .groupBy(col("grp"), col("status"))
           .agg(sum(col("n_docs")).as("n_docs"),
             sum(col("token_delta")).as("token_delta"))
           .localCheckpoint()
         val keyed = bj.select(col("k"), col("grp"), col("status"),
           col("tc"), col("tp"), col("fp_c").as("fp"))
-        state =
-          (if (state.columns.isEmpty) keyed
-           else state.join(bj.select(col("k")), Seq("k"), "left_anti")
-             .unionByName(keyed)).localCheckpoint()
-        emissions += counters.filter(col("n_docs") > 0)
-          .orderBy(col("grp"), col("status")).localCheckpoint()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    emissions.toSeq
+        val nextState = state.fold(keyed)(
+          _.join(bj.select(col("k")), Seq("k"), "left_anti").unionByName(keyed))
+          .localCheckpoint()
+        (next, Some(nextState), emissions :+ next.filter(col("n_docs") > 0)
+          .orderBy(col("grp"), col("status")).localCheckpoint())
+    }._3
   }
 }

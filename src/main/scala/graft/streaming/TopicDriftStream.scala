@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 import graft.ops.TextAnalysis
 
@@ -33,14 +31,6 @@ import graft.ops.TextAnalysis
   */
 object TopicDriftStream {
 
-  /** Parquet schema of a documents-shaped arrival stream. */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** One observation per processed micro-batch: the worst per-source
     * drift and whether any source crossed the threshold.
     */
@@ -59,30 +49,19 @@ object TopicDriftStream {
       corpus: DataFrame,
       thresholdBp: Long = 2500L): (DataFrame, Seq[DriftObs]) = {
     val corpusC = corpus.localCheckpoint()
-    @volatile var acc: Option[DataFrame] = None
-    @volatile var standing: Option[DataFrame] = None
-    val obs = scala.collection.mutable.ArrayBuffer.empty[DriftObs]
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
+    val (_, standing, obs) = Drain.fold(spark, docDir, IngestDedup.docSchema, checkpoint)(
+        (Option.empty[DataFrame], Option.empty[DataFrame], Vector.empty[DriftObs])) {
+      case ((acc, _, obs), batch, bid) =>
         val b = batch.select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars")).localCheckpoint()
-        acc = Some(acc.fold(b)(_.union(b).localCheckpoint()))
-        val drift = TextAnalysis.topicDriftOf(corpusC, acc.get).localCheckpoint()
-        standing = Some(drift)
+        val arrived = acc.fold(b)(_.union(b).localCheckpoint())
+        val drift = TextAnalysis.topicDriftOf(corpusC, arrived).localCheckpoint()
         // 1-row control-plane scalar: the standing worst-source drift
         val worst = drift.agg(coalesce(max(col("drift_bp")), lit(0L)))
           .collect()(0).getLong(0)
-        obs += DriftObs(bid, worst, worst >= thresholdBp)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (standing.getOrElse(spark.emptyDataFrame), obs.toSeq)
+        (Some(arrived), Some(drift), obs :+ DriftObs(bid, worst, worst >= thresholdBp))
+    }
+    // no commit, no standing table: the drift table's columns, no rows
+    (standing.getOrElse(TextAnalysis.topicDriftOf(corpusC, corpusC).limit(0)), obs)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming ANN serving over a PERSISTED PQ index — the arrival-time dual
@@ -58,34 +57,14 @@ object VectorServeStream {
       corpus: DataFrame, id: Column, vec: Column,
       indexDir: String, threshold: Double,
       cfg: graft.ops.VectorSearch.IvfConfig = graft.ops.VectorSearch.IvfConfig()): DataFrame = {
-    import graft.ops.VectorSearch
-    @volatile var results: Option[DataFrame] = None
-    val stream = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(embDir)
     // honor the caller's id/vec binding: normalize the CORPUS side to the
     // stream's fixed (vec_id, embedding) schema once, so a corpus with any
     // column names probes correctly (the batch side is already pinned to
     // embeddingSchema by the reader)
     val corpusN = corpus.select(id.as("vec_id"), vec.as("embedding"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flagged = VectorSearch
-          .semDedupIncrementalFromIndex(
-            corpusN, batch, col("vec_id"), col("embedding"), indexDir, threshold, cfg)
-          .localCheckpoint()
-        results = Some(results.fold(flagged)(_.union(flagged).localCheckpoint()))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", LongType), StructField("dup_of", LongType),
-          StructField("best_cos", DoubleType), StructField("n_dups", LongType)))))
+    Drain.rows(spark, embDir, embeddingSchema, checkpoint)(graft.ops.VectorSearch
+      .semDedupIncrementalFromIndex(
+        corpusN, _, col("vec_id"), col("embedding"), indexDir, threshold, cfg))
   }
 
   /** Streaming INDEX INGEST — the arrival-time dual of
@@ -107,28 +86,15 @@ object VectorServeStream {
       embDir: String,
       checkpoint: String,
       indexDir: String,
-      cfg: graft.ops.VectorSearch.IvfConfig = graft.ops.VectorSearch.IvfConfig()): Long = {
-    val applied = new java.util.concurrent.atomic.AtomicLong()
-    val stream = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(embDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.VectorSearch.refreshIvfIndex(
-          batch, col("vec_id"), col("embedding"), indexDir, cfg)
-        applied.incrementAndGet()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    applied.get()
-  }
+      cfg: graft.ops.VectorSearch.IvfConfig = graft.ops.VectorSearch.IvfConfig()): Long =
+    Drain.loop(spark, embDir, embeddingSchema, checkpoint)(0L) { (applied, batch, _) =>
+      graft.ops.VectorSearch.refreshIvfIndex(
+        batch, col("vec_id"), col("embedding"), indexDir, cfg)
+      applied + 1
+    }
 
-  /** PQ dual of [[ingestIvfBatches]] (round 12 — completes the streaming
-    * ingest family across all three index kinds): embedding batches are
+  /** PQ dual of [[ingestIvfBatches]], completing the streaming ingest
+    * family across all three index kinds: embedding batches are
     * ENCODED with the frozen stored codebooks at O(batch) cost and their
     * codes appended. Same split-invariance contract: the final index is
     * bit-identical to a one-shot refresh of the union, because encode is
@@ -139,25 +105,12 @@ object VectorServeStream {
       embDir: String,
       checkpoint: String,
       indexDir: String,
-      cfg: graft.ops.VectorSearch.PqConfig = graft.ops.VectorSearch.PqConfig()): Long = {
-    val applied = new java.util.concurrent.atomic.AtomicLong()
-    val stream = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(embDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.VectorSearch.refreshPqIndex(
-          batch, col("vec_id"), col("embedding"), indexDir, cfg)
-        applied.incrementAndGet()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    applied.get()
-  }
+      cfg: graft.ops.VectorSearch.PqConfig = graft.ops.VectorSearch.PqConfig()): Long =
+    Drain.loop(spark, embDir, embeddingSchema, checkpoint)(0L) { (applied, batch, _) =>
+      graft.ops.VectorSearch.refreshPqIndex(
+        batch, col("vec_id"), col("embedding"), indexDir, cfg)
+      applied + 1
+    }
 
   /** LSH dual of [[ingestIvfBatches]]: batches append their banded
     * signatures — LSH carries no trained state, so the refreshed index is
@@ -169,25 +122,12 @@ object VectorServeStream {
       embDir: String,
       checkpoint: String,
       indexDir: String,
-      cfg: graft.ops.VectorSearch.LshConfig = graft.ops.VectorSearch.LshConfig()): Long = {
-    val applied = new java.util.concurrent.atomic.AtomicLong()
-    val stream = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(embDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.VectorSearch.refreshLshIndex(
-          batch, col("vec_id"), col("embedding"), indexDir, cfg)
-        applied.incrementAndGet()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    applied.get()
-  }
+      cfg: graft.ops.VectorSearch.LshConfig = graft.ops.VectorSearch.LshConfig()): Long =
+    Drain.loop(spark, embDir, embeddingSchema, checkpoint)(0L) { (applied, batch, _) =>
+      graft.ops.VectorSearch.refreshLshIndex(
+        batch, col("vec_id"), col("embedding"), indexDir, cfg)
+      applied + 1
+    }
 
   /** Serve every request file under `requestDir` (AvailableNow catch-up;
     * one file per micro-batch) and return the accumulated results.
@@ -199,38 +139,18 @@ object VectorServeStream {
       corpus: DataFrame, id: Column, vec: Column,
       indexDir: String, k: Int,
       shortlist: Int = 0): DataFrame = {
-    import graft.ops.VectorSearch
-    @volatile var results: Option[DataFrame] = None
     // cross-batch request dedup: a vec_id repeated in a later batch is
     // already answered (per-query results are deterministic functions of
     // the static index), so re-serving it would only duplicate output
     // rows — first batch wins. Driver-side set, bounded by distinct
     // request ids (control-plane sized, like the per-batch collect).
-    val served = scala.collection.mutable.Set.empty[Long]
-    val stream = spark.readStream
-      .schema(requestSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(requestDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Drain.rows(spark, requestDir, requestSchema, checkpoint, Set.empty[Long]) {
+      (served, batch) =>
         val ids = batch.select(col("vec_id")).distinct()
           .collect().map(_.getLong(0)).filterNot(served).toSeq
-        served ++= ids
-        if (ids.nonEmpty) {
-          val served = VectorSearch
-            .pqTopKFromIndex(corpus, id, vec, indexDir, ids, k, shortlist = shortlist)
-            .localCheckpoint()
-          results = Some(results.fold(served)(_.union(served).localCheckpoint()))
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    results.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("qid", LongType), StructField("rnk", IntegerType),
-          StructField("id", LongType), StructField("pq_score", DoubleType)))))
+        // pqTopKFromIndex materializes its result; no new ids serve no rows
+        (served ++ ids, graft.ops.VectorSearch
+          .pqTopKFromIndex(corpus, id, vec, indexDir, ids, k, shortlist = shortlist))
+    }._2
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming token-budget maintenance — the arrival-time face of
   * [[graft.ops.Corpus.qTokenWaterfill]]: as documents land, the gate
@@ -26,46 +25,28 @@ object WaterfillStream {
 
   /** Run the gate over `docDir` (documents-shaped arrivals) and return
     * the standing allocation plan after the final commit, plus the
-    * per-batch waterline trace.
+    * per-batch waterline trace. The plan is a pure function of the carried
+    * totals, so it is derived from the final totals (an empty plan when
+    * no file arrived).
     */
   def waterfillGate(
       spark: SparkSession,
       docDir: String,
       checkpoint: String): (DataFrame, Seq[Long]) = {
-    import IngestDedup.docSchema
-    @volatile var totals = Map.empty[String, Long]
-    @volatile var standing: Option[DataFrame] = None
-    val trace = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sess = batch.sparkSession
-        import sess.implicits._
-        totals = batch
-          .groupBy(col("source"))
-          .agg(sum(graft.functions.TokenCount(col("text")).cast("long")).as("n"))
-          .collect() // |sources|-row state update — control-plane
-          .foldLeft(totals) { case (m, r) =>
-            m.updated(r.getString(0), m.getOrElse(r.getString(0), 0L) + r.getLong(1))
-          }
-        val plan = graft.ops.Corpus.waterfillFrom(
-          totals.toSeq.toDF("source", "n")).localCheckpoint()
-        standing = Some(plan)
-        trace += plan.select(max(col("waterline"))).collect()(0).getLong(0)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("source", StringType), StructField("n_tokens", LongType),
-        StructField("alloc", LongType), StructField("spilled", LongType),
-        StructField("waterline", LongType), StructField("budget", LongType))))
-    (standing.getOrElse(empty), trace.toSeq)
+    import spark.implicits._
+    def plan(totals: Map[String, Long]): DataFrame =
+      graft.ops.Corpus.waterfillFrom(totals.toSeq.toDF("source", "n"))
+    val (totals, trace) = Drain.fold(spark, docDir, IngestDedup.docSchema, checkpoint)(
+        (Map.empty[String, Long], Vector.empty[Long])) { case ((totals, trace), batch, _) =>
+      val next = batch
+        .groupBy(col("source"))
+        .agg(sum(graft.functions.TokenCount(col("text")).cast("long")).as("n"))
+        .collect() // |sources|-row state update — control-plane
+        .foldLeft(totals) { case (m, r) =>
+          m.updated(r.getString(0), m.getOrElse(r.getString(0), 0L) + r.getLong(1))
+        }
+      (next, trace :+ plan(next).select(max(col("waterline"))).collect()(0).getLong(0))
+    }
+    (plan(totals), trace)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming semantics vs their batch duals at sf0.001, plus the hub
@@ -1413,6 +1414,41 @@ class StreamingSpec extends SparkFunSuite {
       QualityServeStream.run(spark, dir, ckpt, modelDir)
     }
     assert(e.getMessage.contains("fresh checkpoint"))
+  }
+
+  test("driver-state streams: empty-feed schema and used-checkpoint guard") {
+    import spark.implicits._
+    def docs(rows: (Long, String, String, String, Long)*) =
+      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
+    val oneFile = tmpDir("guard-feed")
+    docs((5L, "join the stream to the query plan", "en", "src0", 33L))
+      .coalesce(1).write.mode("append").parquet(oneFile)
+    val emptyFeed = tmpDir("guard-empty-feed")
+    val modelDir = graft.ops.Artifacts.ensureQualityNb(spark, sf)
+    val corpus = docs((1L, "join aa", "en", "src0", 7L), (2L, "scan bb", "en", "src1", 7L))
+    val prev = Seq((5L, "src0", "x y")).toDF("k", "grp", "text")
+      .select(col("k"), col("grp"), md5(col("text")).as("fp"),
+        size(split(lower(col("text")), "\\s+")).cast("long").as("n_tok"))
+    // (stream, run(feed, checkpoint) => its result frames)
+    val streams: Seq[(String, (String, String) => Seq[DataFrame])] = Seq(
+      "PackStream" -> ((f, c) => Seq(PackStream.packingGate(spark, f, c))),
+      "CompactionStream" -> ((f, c) => Seq(CompactionStream.compactionGate(spark, f, c))),
+      "WaterfillStream" -> ((f, c) => Seq(WaterfillStream.waterfillGate(spark, f, c)._1)),
+      "SketchStream.hll" -> ((f, c) => Seq(SketchStream.hllRegisterBatches(spark, f, c))),
+      "SketchStream.cms" -> ((f, c) => Seq(SketchStream.cmsCounterBatches(spark, f, c))),
+      "TopicDriftStream" -> ((f, c) => Seq(TopicDriftStream.driftGate(spark, f, c, corpus)._1)),
+      "QualityServeStream" -> ((f, c) => Seq(QualityServeStream.run(spark, f, c, modelDir))),
+      "SnapshotDiffStream" -> ((f, c) => SnapshotDiffStream.run(spark, f, c, prev)))
+    streams.foreach { case (name, run) =>
+      val ckpt = tmpDir(s"guard-ckpt-$name")
+      val one = run(oneFile, ckpt).map(_.schema)
+      val none = run(emptyFeed, tmpDir(s"guard-empty-ckpt-$name")).map(_.schema)
+      // the diff emits one ledger per commit, so an empty feed emits none
+      assert(none === (if (name == "SnapshotDiffStream") Nil else one),
+        s"$name: empty-feed schema differs from the one-file run")
+      val e = intercept[IllegalArgumentException](run(oneFile, ckpt))
+      assert(e.getMessage.contains("fresh checkpoint"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("snapshot diff resolves conflicting re-deliveries split-invariantly") {
