@@ -11,7 +11,8 @@ package graft.hub
   * Spark's `CAST(double AS STRING)` gives `"0.0"` / `"111.0"` /
   * `"1.0E-2"`-style output, so parity needs this formatter.
   *
-  * Rules (pinned empirically against pyarrow 16 in round 1):
+  * Rules (pyarrow 16's `cast(float64, string)` output; its goldens are
+  * pinned by ArrowFormatSpec "double → string matches Arrow cast goldens"):
   *  - shortest round-trip decimal digits D with decimal-point position dp
   *    (value = 0.D * 10^dp)
   *  - decimal notation iff -5 <= dp <= 10, else exponent notation

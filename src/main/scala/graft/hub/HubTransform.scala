@@ -1,7 +1,7 @@
 package graft.hub
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, lit, regexp_replace, sum, typedLit, when}
+import org.apache.spark.sql.functions.{input_file_name, lit, regexp_replace, typedLit}
 import org.apache.spark.sql.types.StructType
 
 import PathParser.UserWarning
@@ -78,30 +78,21 @@ final class ModelOutputHandler(
   def writeParquet(df: DataFrame): String =
     ModelOutputWriter.writeSingleParquet(df, outputPath, fileName)
 
-  /** Operational metrics of the last [[addModelOutput]] run, collected with
-    * `Dataset.observe` — aggregated ON the executors during the write pass
-    * itself (no second job, no extra scan): rows written and rows whose
-    * `output_type_id` is null after normalization. At scale these land in
-    * a metrics pipeline; an extra `count()` per file would double the read
-    * work.
+  /** Operational metrics of the last [[addModelOutput]] run, counted by the
+    * writing task itself as it writes (no second job, no extra scan): rows
+    * written and rows whose `output_type_id` is null after normalization.
+    * At scale these land in a metrics pipeline; an extra `count()` per file
+    * would double the read work.
     */
   @volatile var lastWriteMetrics: Option[Map[String, Any]] = None
 
   /** read → transform → write; returns the output path (add_model_output). */
   def addModelOutput(): String = {
-    val obs = new org.apache.spark.sql.Observation()
-    val df = addColumns(readFile())
-    val observed =
-      if (df.columns.contains("output_type_id"))
-        df.observe(obs, count(lit(1)).as("rows_written"),
-          coalesce(sum(when(col("output_type_id").isNull, 1L).otherwise(0L)), lit(0L))
-            .as("null_output_type_ids"))
-      else
-        df.observe(obs, count(lit(1)).as("rows_written"),
-          coalesce(sum(lit(0L)), lit(0L)).as("null_output_type_ids"))
-    val out = writeParquet(observed)
-    lastWriteMetrics = Some(obs.get)
-    out
+    val w = ModelOutputWriter.write(addColumns(readFile()), outputPath, fileName)
+    lastWriteMetrics = Some(Map(
+      "rows_written" -> w.rows,
+      "null_output_type_ids" -> w.nullCounts.getOrElse("output_type_id", 0L)))
+    w.path
   }
 
   /** op-5: delete the transformed counterpart (delete_model_output). */
@@ -260,10 +251,14 @@ object HubTransform {
     * stays the single parsing implementation, and no join is planned.
     * The map lookup scans its keys, so its per-row cost grows with the
     * group's file count: unmeasurable at 60 files, about 1.7 µs per row
-    * at 1000 files (4 cores). CSV type inference for un-schema'd columns
-    * runs once per group (over the group's union, matching what the
-    * former per-file union would widen to); it is the only job the build
-    * can run, and only when the hub schema leaves a CSV column untyped.
+    * at 1000 files (4 cores). Building the DataFrame runs a job in two
+    * cases. CSV type inference for un-schema'd columns runs once per group
+    * (over the group's union, matching what the former per-file union
+    * would widen to), only when the hub schema leaves a CSV column
+    * untyped. And a group of more than 32 files
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`) is listed
+    * by Spark's file index with a parallel listing job, which lists again
+    * the files [[rawFiles]] already listed.
     * For standing workloads, transform once and query the parquet store
     * partitioned by (round_id, model_id) instead of re-scanning raw CSV.
     */

@@ -26,8 +26,10 @@ import org.apache.spark.sql.types._
   * output follows SCHEMA order; physical columns are cast to the target
   * types (int64→string drops leading zeros, double→string uses Arrow float
   * formatting — see [[ArrowFormat]]); file columns absent from the schema are
-  * dropped; schema columns absent from the file materialize as nulls
-  * (pyarrow semantics pinned empirically in round 1).
+  * dropped; schema columns absent from the file materialize as nulls, as
+  * pyarrow's `read_table(f, schema=...)` fills them (pinned by
+  * ModelOutputReaderSpec "parquet: schema column missing from file
+  * materializes as nulls").
   *
   * Scale: both paths are a single narrow projection over a parallel file
   * scan — no shuffle, fully whole-stage codegen (the Arrow float→string
@@ -186,7 +188,8 @@ object ModelOutputReader {
   def readParquet(spark: SparkSession, paths: Seq[String], fileSchema: StructType, schema: StructType): DataFrame = {
     val raw = spark.read.schema(fileSchema).parquet(paths: _*)
     // pyarrow `read_table(f, schema=empty)` keeps the file schema unchanged
-    // (pinned empirically in round 1); mirror that.
+    // (pinned by ModelOutputReaderSpec "parquet keeps empty strings"); mirror
+    // that.
     if (schema.isEmpty) return raw
     val fileTypes = raw.schema.fields.map(f => f.name -> f.dataType).toMap
     raw.select(schema.fields.toIndexedSeq.map { f =>

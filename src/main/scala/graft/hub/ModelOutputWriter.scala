@@ -1,14 +1,37 @@
 package graft.hub
 
-import org.apache.hadoop.fs.Path
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.WriteBridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Single-file, exact-name parquet sink + delete (SURVEY.md §2 ops 4-5).
   *
   * The reference writes `<output_path>/<file_name>.parquet`
-  * (model_output.py:312-322) — one file in, one file out. Spark controls part
-  * file names, so we write to a hidden temp dir and rename the single part
-  * file into place via the Hadoop FileSystem (works for file:// and s3a://).
+  * (model_output.py:312-322) — one file in, one file out. The write is one
+  * Spark job of one task: the task writes the parquet file with Spark's own
+  * parquet writer (same codec, write support and footer metadata as
+  * `df.write.parquet`) straight to a hidden sibling of the target, and one
+  * rename via the Hadoop FileSystem then replaces the target (works for
+  * file:// and s3a://). No write command, commit protocol,
+  * `_temporary` tree or `_SUCCESS` marker is involved. The task also counts
+  * the rows it wrote and the nulls of each column, so the caller's metrics
+  * need no second pass. A failed write deletes its hidden files and leaves
+  * an earlier output of the same name untouched. (Unlike a commit
+  * protocol's `_temporary` tree, the file of an attempt whose executor died
+  * stays behind when a retry then succeeds; it is a dot file, which Spark
+  * and pyarrow readers skip.)
   *
   * Scale note: the one-file-per-input contract is the reference's API, so the
   * `coalesce(1)` here is semantic, not accidental — each model-output file is
@@ -17,28 +40,91 @@ import org.apache.spark.sql.DataFrame
   */
 object ModelOutputWriter {
 
+  /** One written file: its path, its row count and each column's null count. */
+  private[hub] final case class Written(path: String, rows: Long, nullCounts: Map[String, Long])
+
   /** Write `df` as exactly `<outputDir>/<fileName>.parquet`; returns the path. */
-  def writeSingleParquet(df: DataFrame, outputDir: String, fileName: String): String = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
+  def writeSingleParquet(df: DataFrame, outputDir: String, fileName: String): String =
+    write(df, outputDir, fileName).path
+
+  private[hub] def write(df: DataFrame, outputDir: String, fileName: String): Written = {
+    val spark = df.sparkSession
+    val schema = df.schema
+    val format = new ParquetFileFormat()
+    WriteBridge.checkWritable(spark, format, schema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    val taskConf = new SerializableConfiguration(job.getConfiguration)
     val outDir = new Path(outputDir)
-    val fs = outDir.getFileSystem(conf)
+    val fs = outDir.getFileSystem(job.getConfiguration)
     val target = new Path(outDir, s"$fileName.parquet")
-    val tmp = new Path(outDir, s".tmp-graft-$fileName-${java.util.UUID.randomUUID}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val tmpName = s".tmp-graft-$fileName-${java.util.UUID.randomUUID}"
+    val tmpStem = new Path(outDir, tmpName).toString
+    // coalesce(1) plans exactly one partition, also for an input without
+    // any, so one task writes one file even when there are no rows
+    val qe = df.coalesce(1).queryExecution
     try {
-      val part = fs.globStatus(new Path(tmp, "part-*.parquet")) match {
-        case parts if parts.nonEmpty => parts.head.getPath
-        case _ => throw new IllegalStateException(s"no part file written under $tmp")
+      // as a named SQL execution, the job carries an execution id, its tasks
+      // see the session's SQL conf, and QueryExecutionListeners hear of it
+      val (tmp, rows, nulls) = SQLExecution.withNewExecutionId(qe, Some("writeSingleParquet")) {
+        spark.sparkContext.runJob(
+          qe.toRdd, writeTask(factory, schema, taskConf, tmpStem) _).head
       }
-      if (fs.exists(target)) fs.delete(target, false)
-      if (!fs.rename(part, target))
-        throw new IllegalStateException(s"rename $part -> $target failed")
-      // local Hadoop FS tracks renamed checksum sidecars — the contract is
-      // ONE file out, so drop them (no-op on S3A)
-      val crc = new Path(target.getParent, s".${target.getName}.crc")
-      if (fs.exists(crc)) fs.delete(crc, false)
-    } finally fs.delete(tmp, true)
-    target.toString
+      fs.delete(target, false)
+      if (!fs.rename(new Path(tmp), target))
+        throw new IllegalStateException(s"rename $tmp -> $target failed")
+      // the local file system moves the checksum sidecar with the file; the
+      // contract is ONE file out, so drop it (S3A keeps none)
+      fs match {
+        case c: ChecksumFileSystem => c.getRawFileSystem.delete(c.getChecksumFile(target), false)
+        case _ =>
+      }
+      Written(target.toString, rows, schema.fieldNames.zip(nulls).toMap)
+    } catch {
+      case NonFatal(e) =>
+        // what a lost attempt left (listed, not globbed: the name may hold
+        // glob characters); the checksum sidecar goes with it
+        Try(fs.listStatus(outDir)).getOrElse(Array.empty[FileStatus])
+          .filter(_.getPath.getName.startsWith(tmpName)).foreach(s => fs.delete(s.getPath, false))
+        throw e
+    }
+  }
+
+  /** The one task: write `rows` to a file named for this attempt (so a
+    * retried or speculative attempt never collides with another) and count
+    * rows and per-column nulls on the way. A failed or killed attempt
+    * deletes its own file.
+    */
+  private def writeTask(factory: OutputWriterFactory, schema: StructType,
+      conf: SerializableConfiguration, tmpStem: String)(
+      ctx: TaskContext, rows: Iterator[InternalRow]): (String, Long, Array[Long]) = {
+    val hadoopConf = conf.value
+    val attempt = new TaskAttemptID(
+      new TaskID(new JobID("graft", ctx.stageId()), TaskType.MAP, ctx.partitionId()), ctx.attemptNumber())
+    val path = s"$tmpStem-${ctx.attemptNumber()}.parquet"
+    val writer = factory.newInstance(path, schema, new TaskAttemptContextImpl(hadoopConf, attempt))
+    val nulls = new Array[Long](schema.length)
+    var n = 0L
+    try {
+      while (rows.hasNext) {
+        val r = rows.next()
+        var i = 0
+        while (i < nulls.length) {
+          if (r.isNullAt(i)) nulls(i) += 1
+          i += 1
+        }
+        writer.write(r)
+        n += 1
+      }
+      writer.close()
+    } catch {
+      case NonFatal(e) =>
+        Try(writer.close())
+        val p = new Path(path)
+        p.getFileSystem(hadoopConf).delete(p, false)
+        throw e
+    }
+    (path, n, nulls)
   }
 
   /** Delete `<outputDir>/<fileName>.parquet`; missing file → UserWarning

@@ -2,7 +2,7 @@ package graft.hub
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Goldens pinned against pyarrow 16 `cast(float64, string)` (round 1), which
+/** Goldens pinned against pyarrow 16 `cast(float64, string)`, which
   * the reference relies on for parquet double→string casts
   * (test_model_output_integration.py:117-122, test_model_output.py:314-336).
   */

@@ -372,11 +372,34 @@ class HubTransformSpec extends SparkFunSuite {
       assert(jobs == 1, s"$f: $jobs jobs")
       assert(spark.read.parquet(written).count() > 0, f)
     }
+    // two files: under Spark's parallel-listing threshold (32 paths per
+    // scan group), above which building readHub runs a listing job
     val (all, planJobs) = org.apache.spark.JobCount(spark.sparkContext) {
       HubTransform.readHub(spark, hub)
     }
     assert(planJobs == 0, s"readHub ran $planJobs jobs before the caller's action")
     assert(all.count() == 3)
+  }
+
+  test("a failed add leaves the output directory as it was") {
+    val hub = tmpDir("hub-fail")
+    val out = tmpDir("hub-fail-out")
+    new java.io.File(s"$hub/raw").mkdirs()
+    val raw = java.nio.file.Paths.get(s"$hub/raw/2420-01-01-team-model.csv")
+    val schema = Some(StructType(Seq(StructField("location", StringType), StructField("horizon", LongType))))
+    def add() = HubTransform.dispatch(
+      spark, "ObjectCreated:Put", hub, "raw/2420-01-01-team-model.csv", out, schema)
+    java.nio.file.Files.writeString(raw, "location,horizon\nearth,1\n")
+    assert(add().action == "add")
+    def listing() = new java.io.File(out).listFiles().toSeq.map(f => f.getName ->
+      java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(f.toPath)))).sortBy(_._1)
+    val before = listing()
+    // "abc" fails the ANSI cast to bigint inside the write job
+    java.nio.file.Files.writeString(raw, "location,horizon\nearth,abc\n")
+    val failed = add()
+    assert(failed.action == "error", failed)
+    assert(listing() == before)
   }
 
   test("retrigger touches metadata and re-fires add for every raw file " +

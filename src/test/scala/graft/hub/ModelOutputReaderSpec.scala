@@ -181,10 +181,13 @@ class ModelOutputReaderSpec extends SparkFunSuite {
     assertThrows[IllegalArgumentException](ModelOutputReader.readCsv(spark, empty, new StructType()))
   }
 
-  test("rawSchema: parquet footers in the three hub physical layouts, as files and directories") {
-    val dir = tmpDir("raw-pq")
+  /** The three physical parquet layouts perfbench/hubgen.py writes, as
+    * (rows, column types); numeric columns non-nullable, as a Dataset of
+    * primitives writes them.
+    */
+  private val hubLayouts: Seq[(Seq[Row], Seq[DataType])] = {
     val d = java.sql.Date.valueOf("2025-01-25")
-    val layouts = Seq(
+    Seq(
       // narrow ints and floats, quantile id as double
       Seq(Row("2025-01-25", "ILI", 0, "NYC", "2025-01-25", "quantile", 0.5, 1.5f)) -> Seq(
         StringType, StringType, IntegerType, StringType, StringType, StringType, DoubleType, FloatType),
@@ -194,13 +197,20 @@ class ModelOutputReaderSpec extends SparkFunSuite {
       // 64-bit everything, dates as text
       Seq(Row("2025-01-25", "ILI", 0L, "NYC", "2025-01-25", "quantile", 0.5, 1.5)) -> Seq(
         StringType, StringType, LongType, StringType, StringType, StringType, DoubleType, DoubleType))
+  }
+
+  private def layoutFrame(rows: Seq[Row], types: Seq[DataType]) = {
     val names = Seq("reference_date", "target", "horizon", "location", "target_end_date",
       "output_type", "output_type_id", "value")
-    for (((rows, types), i) <- layouts.zipWithIndex) {
-      // numeric columns non-nullable, as a Dataset of primitives writes them
-      val physical = StructType(names.zip(types).map { case (n, t) =>
-        StructField(n, t, nullable = t == StringType || t == DateType) })
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), physical)
+    val physical = StructType(names.zip(types).map { case (n, t) =>
+      StructField(n, t, nullable = t == StringType || t == DateType) })
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), physical)
+  }
+
+  test("rawSchema: parquet footers in the three hub physical layouts, as files and directories") {
+    val dir = tmpDir("raw-pq")
+    for (((rows, types), i) <- hubLayouts.zipWithIndex) {
+      val df = layoutFrame(rows, types)
       val outputDir = s"$dir/layout$i.parquet"
       df.write.mode("overwrite").parquet(outputDir)
       val single = ModelOutputWriter.writeSingleParquet(df, s"$dir/single", s"layout$i")
@@ -210,6 +220,67 @@ class ModelOutputReaderSpec extends SparkFunSuite {
         assert(raw == spark.read.parquet(p).schema, p)
         assert(spark.read.schema(raw).parquet(p).collect().toSeq == rows, p)
       }
+    }
+  }
+
+  private def footer(file: String) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf()))
+    try r.getFooter finally r.close()
+  }
+
+  private def footerRows(f: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long =
+    f.getBlocks.toArray.map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.BlockMetaData].getRowCount).sum
+
+  private def entries(dir: String): Seq[String] = new java.io.File(dir).list().toSeq.sorted
+
+  test("writeSingleParquet writes the file Spark's own parquet write does, and nothing else") {
+    val dir = tmpDir("writer-contract")
+    val csv = ModelOutputReader.readCsv(
+      spark, unitCsv("2024-07-07-teamabc-output_type_ids_numeric.csv"), schemaOriginDate)
+    val inputs = hubLayouts.zipWithIndex.map { case ((rows, types), i) =>
+      s"layout$i" -> layoutFrame(rows, types) } :+ ("csv" -> csv)
+    for ((name, df) <- inputs) {
+      val sparkDir = s"$dir/spark-$name"
+      df.coalesce(1).write.parquet(sparkDir)
+      val Seq(part) = entries(sparkDir).filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+      val out = s"$dir/out-$name"
+      val single = ModelOutputWriter.writeSingleParquet(df, out, name)
+      assert(entries(out) == Seq(s"$name.parquet"), name)
+      val want = footer(s"$sparkDir/$part")
+      val got = footer(single)
+      assert(got.getFileMetaData.getSchema == want.getFileMetaData.getSchema, name)
+      assert(got.getFileMetaData.getKeyValueMetaData == want.getFileMetaData.getKeyValueMetaData, name)
+      assert(footerRows(got) == footerRows(want), name)
+      assert(spark.read.parquet(single).collect().toSeq ==
+        spark.read.parquet(s"$sparkDir/$part").collect().toSeq, name)
+    }
+  }
+
+  test("writeSingleParquet: zero rows and zero partitions still write one file with the schema") {
+    val dir = tmpDir("writer-empty")
+    // a header-only CSV add: zero rows
+    val header = writeCsv(s"$dir/2420-01-01-team-model.csv",
+      "origin_date,target,horizon,location,output_type,output_type_id,value\n")
+    val h = new ModelOutputHandler(spark, "/nonexistent-hub", header, s"$dir/out-csv", Some(schemaOriginDate))
+    val written = h.addModelOutput()
+    assert(entries(s"$dir/out-csv") == Seq("2420-01-01-team-model.parquet"))
+    // read back, every column is nullable; names and types are the add's
+    def typed(t: StructType) = t.map(f => f.name -> f.dataType)
+    assert(typed(spark.read.parquet(written).schema) == typed(h.addColumns(h.readFile()).schema))
+    assert(footerRows(footer(written)) == 0)
+    assert(h.lastWriteMetrics.get("rows_written") == 0L)
+
+    // an input with no partitions at all, and a relation known to be empty
+    val emptyRdd = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaNoModelRound)
+    assert(emptyRdd.rdd.getNumPartitions == 0)
+    val known = spark.createDataFrame(java.util.Collections.emptyList[Row](), schemaNoModelRound)
+    for ((name, df) <- Seq("empty-rdd" -> emptyRdd, "known-empty" -> known)) {
+      val single = ModelOutputWriter.writeSingleParquet(df, s"$dir/out-$name", name)
+      assert(entries(s"$dir/out-$name") == Seq(s"$name.parquet"))
+      assert(spark.read.parquet(single).schema == schemaNoModelRound)
+      assert(footerRows(footer(single)) == 0)
     }
   }
 }
