@@ -1,5 +1,9 @@
 package graft.hub
 
+import scala.collection.immutable.ListMap
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{input_file_name, lit, regexp_replace, typedLit}
 import org.apache.spark.sql.types.StructType
@@ -65,14 +69,14 @@ final class ModelOutputHandler(
     ModelOutputReader.read(spark, inputFile, fileType, schema)
 
   /** op-8/9: constant `round_id`/`model_id` columns from the file name.
-    * `withColumn` replaces in place (keeping column position) when the
-    * column already exists, else appends — exactly the reference's dict-merge
-    * semantics (model_output.py:298-308), with `lit()` instead of
-    * materialized arrays so Catalyst constant-folds it.
+    * `withColumns` replaces in place (keeping column position) when the
+    * column already exists, else appends in the map's order — exactly the
+    * reference's dict-merge semantics (model_output.py:298-308), with
+    * `lit()` instead of materialized arrays so Catalyst constant-folds it.
+    * One call is one analyzer pass for both columns.
     */
   def addColumns(df: DataFrame): DataFrame =
-    df.withColumn("round_id", lit(roundId))
-      .withColumn("model_id", lit(modelId))
+    df.withColumns(ListMap("round_id" -> lit(roundId), "model_id" -> lit(modelId)))
 
   /** op-4: write exactly `<output_path>/<file_name>.parquet`. */
   def writeParquet(df: DataFrame): String =
@@ -205,7 +209,9 @@ object HubTransform {
     * driver-side thread pool (`parallelism` concurrent Spark jobs) — the
     * scheduler interleaves their tasks across executors. This is how the
     * per-file one-file-out contract scales to thousands of files: across
-    * files, not within one (see SCALE.md).
+    * files, not within one (see SCALE.md). The files are listed once by
+    * [[rawFiles]]' `listStatus` walk, and no file's listing, read or
+    * write starts an OS process (see [[ModelOutputWriter]]).
     */
   def addDirectory(
       spark: SparkSession,
@@ -286,14 +292,14 @@ object HubTransform {
       HubSchema.deriveSchema(c)
     }
     // round_id/model_id set from the group's literal path → id map over
-    // input_file_name(): withColumn replaces a column the read already
+    // input_file_name(): withColumns replaces a column the read already
     // carries (the derived schema has both) and appends it otherwise, as
     // ModelOutputHandler.addColumns does for one file
     def withPathMeta(df: DataFrame, group: Seq[(String, String, PathParser.FileParts)]): DataFrame = {
       val file = regexp_replace(input_file_name(), "^file:/+", "/")
       def idOf(id: PathParser.FileParts => String) =
         typedLit(group.map { case (f, _, p) => f.replaceFirst("^file:/+", "/") -> id(p) }.toMap).apply(file)
-      df.withColumn("round_id", idOf(_.roundId)).withColumn("model_id", idOf(_.modelId))
+      df.withColumns(ListMap("round_id" -> idOf(_.roundId), "model_id" -> idOf(_.modelId)))
     }
 
     // group key = the file's raw schema from its own header or footer
@@ -351,7 +357,7 @@ object HubTransform {
     val (fs, files) = rawFiles(spark.sessionState.newHadoopConf(), hubPath, rawDir)
     val now = System.currentTimeMillis()
     files.map { f =>
-      fs.setTimes(new org.apache.hadoop.fs.Path(f), now, -1) // metadata touch
+      fs.setTimes(new Path(f), now, -1) // metadata touch
       dispatch(spark, "ObjectCreated:Copy", hubPath, f, outputPath, schemaOverride)
     }
   }
@@ -361,17 +367,18 @@ object HubTransform {
     * Local Hadoop paths stringify as "file:/..." — stripped so path
     * joining and stem parsing see a plain absolute path; remote schemes
     * ("s3a://...") keep their authority form.
+    *
+    * The walk is `listStatus`, one call per directory, which reads no
+    * permission. `listFiles` would build a `LocatedFileStatus` per entry,
+    * and that reads the entry's permission: on the local file system
+    * without libhadoop, one forked `ls -ld` process per listed file.
     */
-  private def rawFiles(conf: org.apache.hadoop.conf.Configuration, hubPath: String,
-      rawDir: String): (org.apache.hadoop.fs.FileSystem, Seq[String]) = {
-    val dir = new org.apache.hadoop.fs.Path(
-      PathParser.sanitizePath(ModelOutputHandler.joinPaths(hubPath, rawDir)))
+  private def rawFiles(conf: Configuration, hubPath: String, rawDir: String): (FileSystem, Seq[String]) = {
+    val dir = new Path(PathParser.sanitizePath(ModelOutputHandler.joinPaths(hubPath, rawDir)))
     val fs = dir.getFileSystem(conf)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(dir)) {
-      val it = fs.listFiles(dir, true)
-      while (it.hasNext) files += it.next().getPath.toString.stripPrefix("file:")
+    def walk(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap { s =>
+      if (s.isDirectory) walk(s.getPath) else Seq(s.getPath.toString.stripPrefix("file:"))
     }
-    (fs, files.sorted.toSeq)
+    (fs, if (fs.exists(dir)) walk(dir).sorted else Nil)
   }
 }

@@ -139,8 +139,11 @@ object ModelOutputReader {
         .otherwise(c)
     }
 
-    val inferredTypes = inferColumnTypes(
-      raw.select(raw.columns.filterNot(byName.contains).map(n => normalized(n).as(n)).toIndexedSeq: _*))
+    // no inference Dataset (and no analyzer pass) when the schema types every column
+    val untyped = raw.columns.filterNot(byName.contains).toIndexedSeq
+    val inferredTypes =
+      if (untyped.isEmpty) Map.empty[String, DataType]
+      else inferColumnTypes(raw.select(untyped.map(n => normalized(n).as(n)): _*))
 
     raw.select(raw.columns.toIndexedSeq.map { name =>
       byName.get(name) match {
@@ -156,7 +159,6 @@ object ModelOutputReader {
     * job over only the un-schema'd columns (usually none at scale).
     */
   private def inferColumnTypes(df: DataFrame): Map[String, DataType] = {
-    if (df.columns.isEmpty) return Map.empty
     val aggs = df.columns.toIndexedSeq.flatMap { n =>
       val c = col(n)
       Seq(

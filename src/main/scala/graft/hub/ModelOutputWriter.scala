@@ -1,12 +1,18 @@
 package graft.hub
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
@@ -33,6 +39,15 @@ import org.apache.spark.util.SerializableConfiguration
   * stays behind when a retry then succeeds; it is a dot file, which Spark
   * and pyarrow readers skip.)
   *
+  * Per-file cost: a local temp file is created through
+  * [[NioLocalFileSystem]], registered in the write job's own Hadoop conf
+  * only (`fs.file.impl`, uncached). It writes no `.crc` sidecar and sets the
+  * file's mode through NIO, where Hadoop's checksummed local file system
+  * forks a `chmod` process for the file and another for its `.crc` when
+  * libhadoop is not loaded. The prepared conf reaches the task as one
+  * broadcast, not inside the task closure, which would serialize it twice
+  * on the driver and deserialize it in the task.
+  *
   * Scale note: the one-file-per-input contract is the reference's API, so the
   * `coalesce(1)` here is semantic, not accidental — each model-output file is
   * small (Lambda envelope). Bulk backfills parallelize across files, not
@@ -52,17 +67,24 @@ object ModelOutputWriter {
     val schema = df.schema
     val format = new ParquetFileFormat()
     WriteBridge.checkWritable(spark, format, schema)
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val conf = spark.sessionState.newHadoopConf()
+    val job = Job.getInstance(conf)
+    // the task's file:// file system, in this job's conf only; uncached, so
+    // no other user of the FileSystem cache gets it
+    job.getConfiguration.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+    job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
     val factory = format.prepareWrite(spark, job, Map.empty, schema)
-    val taskConf = new SerializableConfiguration(job.getConfiguration)
     val outDir = new Path(outputDir)
-    val fs = outDir.getFileSystem(job.getConfiguration)
+    // the session's file system: for file:// it is checksummed, so deleting
+    // the target also drops a `.crc` an older writer may have left beside it
+    val fs = outDir.getFileSystem(conf)
     val target = new Path(outDir, s"$fileName.parquet")
     val tmpName = s".tmp-graft-$fileName-${java.util.UUID.randomUUID}"
     val tmpStem = new Path(outDir, tmpName).toString
     // coalesce(1) plans exactly one partition, also for an input without
     // any, so one task writes one file even when there are no rows
     val qe = df.coalesce(1).queryExecution
+    val taskConf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
     try {
       // as a named SQL execution, the job carries an execution id, its tasks
       // see the session's SQL conf, and QueryExecutionListeners hear of it
@@ -73,21 +95,15 @@ object ModelOutputWriter {
       fs.delete(target, false)
       if (!fs.rename(new Path(tmp), target))
         throw new IllegalStateException(s"rename $tmp -> $target failed")
-      // the local file system moves the checksum sidecar with the file; the
-      // contract is ONE file out, so drop it (S3A keeps none)
-      fs match {
-        case c: ChecksumFileSystem => c.getRawFileSystem.delete(c.getChecksumFile(target), false)
-        case _ =>
-      }
       Written(target.toString, rows, schema.fieldNames.zip(nulls).toMap)
     } catch {
       case NonFatal(e) =>
         // what a lost attempt left (listed, not globbed: the name may hold
-        // glob characters); the checksum sidecar goes with it
+        // glob characters)
         Try(fs.listStatus(outDir)).getOrElse(Array.empty[FileStatus])
           .filter(_.getPath.getName.startsWith(tmpName)).foreach(s => fs.delete(s.getPath, false))
         throw e
-    }
+    } finally taskConf.destroy()
   }
 
   /** The one task: write `rows` to a file named for this attempt (so a
@@ -96,9 +112,9 @@ object ModelOutputWriter {
     * deletes its own file.
     */
   private def writeTask(factory: OutputWriterFactory, schema: StructType,
-      conf: SerializableConfiguration, tmpStem: String)(
+      conf: Broadcast[SerializableConfiguration], tmpStem: String)(
       ctx: TaskContext, rows: Iterator[InternalRow]): (String, Long, Array[Long]) = {
-    val hadoopConf = conf.value
+    val hadoopConf = conf.value.value
     val attempt = new TaskAttemptID(
       new TaskID(new JobID("graft", ctx.stageId()), TaskType.MAP, ctx.partitionId()), ctx.attemptNumber())
     val path = s"$tmpStem-${ctx.attemptNumber()}.parquet"
@@ -139,5 +155,21 @@ object ModelOutputWriter {
     val fs = target.getFileSystem(conf)
     if (!fs.exists(target) || !fs.delete(target, false))
       throw new PathParser.UserWarning("Model output file not found for deletion")
+  }
+}
+
+/** Hadoop's raw local file system with `setPermission` done through NIO.
+  * Without libhadoop, [[RawLocalFileSystem]] forks a `chmod` process per
+  * call, and `create` calls it for every new file. Being raw, it writes no
+  * `.crc` sidecar. Only the model-output write task uses it, through its
+  * job's own Hadoop conf.
+  */
+private[hub] final class NioLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    // PosixFilePermission lists owner, group, others, each r/w/x: mode bits 8 down to 0
+    val bits = permission.toShort & 0x1ff
+    val all = PosixFilePermission.values
+    Files.setPosixFilePermissions(pathToFile(p).toPath,
+      all.indices.filter(i => (bits & (1 << (8 - i))) != 0).map(all(_)).toSet.asJava)
   }
 }

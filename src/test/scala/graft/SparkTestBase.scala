@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per suite via lazy singleton). */
@@ -19,12 +21,22 @@ object SparkTestBase {
   }
 }
 
-abstract class SparkFunSuite extends AnyFunSuite {
+abstract class SparkFunSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
 
   def resource(rel: String): String =
     new java.io.File(s"src/test/resources/$rel").getAbsolutePath
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** A fresh temp directory, deleted with its contents after the suite. */
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    tmpDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(d => FileUtils.deleteQuietly(new java.io.File(d)))
+    finally super.afterAll()
 }

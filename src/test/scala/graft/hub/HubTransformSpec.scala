@@ -381,6 +381,41 @@ class HubTransformSpec extends SparkFunSuite {
     assert(all.count() == 3)
   }
 
+  test("the hub path starts no OS process, and an add writes one rw-r--r-- file") {
+    import scala.jdk.CollectionConverters._
+    val hub = fluMetrocastHub("hub-nofork")
+    new java.io.File(s"$hub/raw/nested").mkdirs()
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$hub/raw/2025-01-25-teamA-modelX.csv"),
+      java.nio.file.Paths.get(s"$hub/raw/nested/2025-02-08-teamC-modelZ.csv"))
+    val out = tmpDir("hub-nofork-out")
+    val dirOut = tmpDir("hub-nofork-dir-out")
+    val dump = java.nio.file.Paths.get(tmpDir("hub-nofork-jfr"), "rec.jfr")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try {
+      HubTransform.add(spark, hub, "raw/2025-01-25-teamA-modelX.csv", out)
+      HubTransform.add(spark, hub, "raw/2025-02-01-teamB-modelY.parquet", out)
+      HubTransform.addDirectory(spark, hub, "raw", dirOut)
+      HubTransform.readHub(spark, hub)
+      rec.stop()
+      rec.dump(dump)
+    } finally rec.close()
+    val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.filter { e =>
+      e.getEventType.getName == "jdk.ProcessStart" && e.getStackTrace != null &&
+      e.getStackTrace.getFrames.asScala.exists(_.getMethod.getType.getName.startsWith("graft.hub."))
+    }
+    assert(forks.isEmpty, forks.map(_.getString("command")).mkString("forked: ", "; ", ""))
+
+    val added = Seq("2025-01-25-teamA-modelX.parquet", "2025-02-01-teamB-modelY.parquet")
+    assert(new java.io.File(out).list().sorted.toSeq == added)
+    assert(new java.io.File(dirOut).list().sorted.toSeq == added :+ "2025-02-08-teamC-modelZ.parquet")
+    for (f <- added)
+      assert(java.nio.file.attribute.PosixFilePermissions.toString(
+        java.nio.file.Files.getPosixFilePermissions(java.nio.file.Paths.get(out, f))) == "rw-r--r--", f)
+  }
+
   test("a failed add leaves the output directory as it was") {
     val hub = tmpDir("hub-fail")
     val out = tmpDir("hub-fail-out")
