@@ -9,9 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** [[ArrowFormat]]'s float/double → string cast as a native codegen'd
   * expression: the generated code calls the static formatter directly, so
   * the hub parquet cast-on-read path stays inside whole-stage codegen
-  * instead of breaking the stage at a Scala-UDF row boundary (the round-3
-  * plan carried the UDF; this is its §7.3 promotion, mirroring
-  * [[graft.functions.VecDot]]).
+  * instead of breaking the stage at a Scala-UDF row boundary, as
+  * [[graft.functions.VecDot]] does for its dot product.
   */
 case class ArrowFormatString(child: Expression) extends UnaryExpression {
 

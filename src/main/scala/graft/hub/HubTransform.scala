@@ -1,11 +1,15 @@
 package graft.hub
 
 import scala.collection.immutable.ListMap
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{input_file_name, lit, regexp_replace, typedLit}
+import org.apache.spark.sql.graftbridge.ThreadBridge
 import org.apache.spark.sql.types.StructType
 
 import PathParser.UserWarning
@@ -38,14 +42,12 @@ final class ModelOutputHandler(
   val inputFile: String = PathParser.sanitizePath(joinPaths(hubPath, moPath))
   val outputPath: String = PathParser.sanitizePath(outputPathRaw)
 
+  // the Hadoop conf of this handler's own steps (a batch hands every step
+  // its one conf instead)
+  private lazy val conf = spark.sessionState.newHadoopConf()
+
   val config: Option[HubConfig] =
-    if (schemaOverride.isDefined) None
-    else {
-      val c = HubConfig.load(hubPath, spark.sessionState.newHadoopConf())
-      if (c.isEmpty)
-        throw new java.io.FileNotFoundException(s"could not read tasks.json for hub_path=$hubPath")
-      c
-    }
+    if (schemaOverride.isDefined) None else Some(ModelOutputHandler.loadConfig(hubPath, conf))
 
   val fileName: String = PathParser.stem(inputFile)
   val fileType: String = PathParser.suffix(inputFile)
@@ -63,10 +65,13 @@ final class ModelOutputHandler(
     schemaOverride.getOrElse(HubSchema.deriveSchema(config.get))
 
   /** op-1/2/3: schema-directed read with sentinel null-normalization (CSV)
-    * or cast-on-read (parquet).
+    * or cast-on-read (parquet); the file is opened through `hadoopConf`.
     */
-  def readFile(): DataFrame =
-    ModelOutputReader.read(spark, inputFile, fileType, schema)
+  def readFile(hadoopConf: Configuration = conf): DataFrame = {
+    val raw = ModelOutputReader.rawSchema(spark, inputFile, fileType, hadoopConf)
+    if (fileType == ".csv") ModelOutputReader.readCsv(spark, Seq(inputFile), raw, schema)
+    else ModelOutputReader.readParquet(spark, Seq(inputFile), raw, schema)
+  }
 
   /** op-8/9: constant `round_id`/`model_id` columns from the file name.
     * `withColumns` replaces in place (keeping column position) when the
@@ -82,21 +87,13 @@ final class ModelOutputHandler(
   def writeParquet(df: DataFrame): String =
     ModelOutputWriter.writeSingleParquet(df, outputPath, fileName)
 
-  /** Operational metrics of the last [[addModelOutput]] run, counted by the
-    * writing task itself as it writes (no second job, no extra scan): rows
-    * written and rows whose `output_type_id` is null after normalization.
-    * At scale these land in a metrics pipeline; an extra `count()` per file
-    * would double the read work.
+  /** read → transform → write; returns the output path (add_model_output).
+    * A batch of one on [[HubTransform]]'s batch path; a failure is thrown
+    * as a `SparkException` carrying the file's error text.
     */
-  @volatile var lastWriteMetrics: Option[Map[String, Any]] = None
-
-  /** read → transform → write; returns the output path (add_model_output). */
   def addModelOutput(): String = {
-    val w = ModelOutputWriter.write(addColumns(readFile()), outputPath, fileName)
-    lastWriteMetrics = Some(Map(
-      "rows_written" -> w.rows,
-      "null_output_type_ids" -> w.nullCounts.getOrElse("output_type_id", 0L)))
-    w.path
+    val r = HubTransform.addAll(spark, conf, Seq(moPath -> Success(this))).head
+    r.outputPath.getOrElse(throw new SparkException(r.error.mkString))
   }
 
   /** op-5: delete the transformed counterpart (delete_model_output). */
@@ -110,6 +107,13 @@ object ModelOutputHandler {
   private[hub] def joinPaths(base: String, rel: String): String =
     if (rel.startsWith("/") || rel.contains("://")) rel
     else base.stripSuffix("/") + "/" + rel
+
+  /** The hub's `tasks.json`; a missing or unreadable one is fatal
+    * (model_output.py:105-106).
+    */
+  private[hub] def loadConfig(hubPath: String, conf: Configuration): HubConfig =
+    HubConfig.load(hubPath, conf).getOrElse(throw new java.io.FileNotFoundException(
+      s"could not read tasks.json for hub_path=$hubPath"))
 
   /** Factory mirroring `ModelOutputHandler.from_s3` (model_output.py:137-189).
     * Paths keep the reference's quirks (only the first `originPrefix`
@@ -131,13 +135,31 @@ object ModelOutputHandler {
 }
 
 /** Event-driven entry points mirroring the reference Lambda dispatch
-  * (faas/lambda_function.py:22-62): one storage event = one file = one batch
-  * run; `UserWarning`s and other per-file failures are logged and skipped so
-  * a bad file never takes down the pipeline.
+  * (faas/lambda_function.py:22-62): one storage event = one file;
+  * `UserWarning`s and other per-file failures are logged and skipped so a
+  * bad file never takes down the pipeline.
+  *
+  * Every add (an event, a backfill, a re-trigger, a stream batch, one
+  * handler's [[ModelOutputHandler.addModelOutput]]) runs the one batch
+  * path, [[addFiles]]: the hub config is loaded and the schema derived
+  * once, each file is planned on the driver, and all of them are written in
+  * one Spark job whose task i writes file i ([[ModelOutputWriter.write]]).
+  * An event is its batch of one.
   */
 object HubTransform {
 
-  final case class EventResult(key: String, action: String, outputPath: Option[String], error: Option[String])
+  /** One file's outcome; an add also carries the rows its task wrote and
+    * how many of them have a null `output_type_id` after normalization,
+    * counted as the task writes (no second job, no extra scan).
+    */
+  final case class EventResult(key: String, action: String, outputPath: Option[String], error: Option[String],
+      rowsWritten: Long = 0L, nullOutputTypeIds: Long = 0L)
+
+  /** `UserWarning` → skip the file; any other failure → error. */
+  private def failed(key: String, e: Throwable): EventResult = e match {
+    case w: UserWarning => EventResult(key, "skip", None, Some(w.getMessage))
+    case _              => EventResult(key, "error", None, Some(ModelOutputWriter.describe(e)))
+  }
 
   def handleEvent(
       spark: SparkSession,
@@ -154,16 +176,13 @@ object HubTransform {
         p.hubPath.replace("s3://", s"$scheme://"),
         p.moPath,
         p.outputPath.replace("s3://", s"$scheme://"))
-    } catch {
-      case w: UserWarning => EventResult(key, "skip", None, Some(w.getMessage))
-      case scala.util.control.NonFatal(e) =>
-        EventResult(key, "error", None, Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-    }
+    } catch { case NonFatal(e) => failed(key, e) }
   }
 
   /** Verb dispatch with explicit paths (the reference's lambda_handler body):
-    * `objectcreated` → add, `objectremoved` → delete, anything else → skip;
-    * `UserWarning` → skip the file; other failures → logged error, no rethrow.
+    * `objectcreated` → add (a batch of one), `objectremoved` → delete,
+    * anything else → skip; `UserWarning` → skip the file; other failures →
+    * logged error, no rethrow.
     */
   def dispatch(
       spark: SparkSession,
@@ -173,21 +192,14 @@ object HubTransform {
       outputPath: String,
       schemaOverride: Option[StructType] = None): EventResult = {
     val verb = eventName.toLowerCase
-    try {
-      if (verb.contains("objectcreated")) {
-        val out = new ModelOutputHandler(spark, hubPath, moPath, outputPath, schemaOverride).addModelOutput()
-        EventResult(moPath, "add", Some(out), None)
-      } else if (verb.contains("objectremoved")) {
+    if (verb.contains("objectcreated"))
+      addFiles(spark, spark.sessionState.newHadoopConf(), hubPath, Seq(moPath), outputPath, schemaOverride).head
+    else if (verb.contains("objectremoved"))
+      try {
         new ModelOutputHandler(spark, hubPath, moPath, outputPath, schemaOverride).deleteModelOutput()
         EventResult(moPath, "delete", None, None)
-      } else {
-        EventResult(moPath, "skip", None, Some(s"unsupported event $eventName"))
-      }
-    } catch {
-      case w: UserWarning => EventResult(moPath, "skip", None, Some(w.getMessage))
-      case scala.util.control.NonFatal(e) =>
-        EventResult(moPath, "error", None, Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-    }
+      } catch { case NonFatal(e) => failed(moPath, e) }
+    else EventResult(moPath, "skip", None, Some(s"unsupported event $eventName"))
   }
 
   /** Local/library entry (reference README.md:19-36): transform one file. */
@@ -201,17 +213,19 @@ object HubTransform {
 
   /** Batch backfill: transform every supported file under a directory —
     * the engine equivalent of the reference's re-trigger ops script
-    * (faas/lambda_retrigger_model_output_add.py:13-62). Each file goes
-    * through [[dispatch]] as an `ObjectCreated:Put` event, so skips and
-    * errors are reported exactly as the event loop reports them.
+    * (faas/lambda_retrigger_model_output_add.py:13-62). The files, listed
+    * once by [[rawFiles]]' `listStatus` walk, are ONE batch of
+    * [[addFiles]]: skips and errors are reported per file exactly as
+    * [[dispatch]] reports them, and every file is written by one task of
+    * one Spark job, which the scheduler spreads across executors. This is
+    * how the one-file-out contract scales to thousands of files: across
+    * files, not within one (see SCALE.md). There is no driver thread pool;
+    * the files are planned concurrently on the global execution context.
+    * No file's listing, read or write starts an OS process (see
+    * [[ModelOutputWriter]]).
     *
-    * Files are independent single-stage jobs, so they are submitted from a
-    * driver-side thread pool (`parallelism` concurrent Spark jobs) — the
-    * scheduler interleaves their tasks across executors. This is how the
-    * per-file one-file-out contract scales to thousands of files: across
-    * files, not within one (see SCALE.md). The files are listed once by
-    * [[rawFiles]]' `listStatus` walk, and no file's listing, read or
-    * write starts an OS process (see [[ModelOutputWriter]]).
+    * @param parallelism unused: Spark schedules the one write job. Kept so
+    *        callers that pass it by name still compile.
     */
   def addDirectory(
       spark: SparkSession,
@@ -220,19 +234,8 @@ object HubTransform {
       outputPath: String,
       parallelism: Int = 8,
       schemaOverride: Option[StructType] = None): Seq[EventResult] = {
-    val (_, files) = rawFiles(spark.sessionState.newHadoopConf(), hubPath, rawDir)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = files.map { rel =>
-        scala.concurrent.Future(
-          dispatch(spark, "ObjectCreated:Put", hubPath, rel, outputPath, schemaOverride))
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    val (conf, _, files) = rawFiles(spark, hubPath, rawDir)
+    addFiles(spark, conf, hubPath, files, outputPath, schemaOverride)
   }
 
   /** The whole hub as ONE queryable DataFrame: every supported
@@ -275,8 +278,7 @@ object HubTransform {
       roundIds: Seq[String] = Nil,
       modelIds: Seq[String] = Nil,
       schemaOverride: Option[StructType] = None): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val (_, files) = rawFiles(conf, hubPath, rawDir)
+    val (conf, _, files) = rawFiles(spark, hubPath, rawDir)
     val selected = files.flatMap { f =>
       val suffix = PathParser.suffix(f)
       if (!PathParser.SupportedFileTypes(suffix)) None
@@ -286,11 +288,7 @@ object HubTransform {
             (modelIds.isEmpty || modelIds.contains(p.modelId)))
         .map(p => (f, suffix, p))
     }
-    val schema = schemaOverride.getOrElse {
-      val c = HubConfig.load(hubPath, conf).getOrElse(throw new java.io.FileNotFoundException(
-        s"could not read tasks.json for hub_path=$hubPath"))
-      HubSchema.deriveSchema(c)
-    }
+    val schema = schemaOverride.getOrElse(HubSchema.deriveSchema(ModelOutputHandler.loadConfig(hubPath, conf)))
     // round_id/model_id set from the group's literal path → id map over
     // input_file_name(): withColumns replaces a column the read already
     // carries (the derived schema has both) and appends it otherwise, as
@@ -303,19 +301,14 @@ object HubTransform {
     }
 
     // group key = the file's raw schema from its own header or footer
-    // (ModelOutputReader.rawSchema, independent metadata reads run in a
-    // bounded pool); each group is scanned with that schema, so no scan
+    // (ModelOutputReader.rawSchema, independent metadata reads run
+    // concurrently); each group is scanned with that schema, so no scan
     // runs an inference job. CSV groups come first, then parquet.
-    val groups = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val keyed = Await.result(Future.traverse(selected)(t =>
-        Future((t._2 == ".csv", ModelOutputReader.rawSchema(spark, t._1, t._2)) -> t)), Duration.Inf)
-      keyed.groupBy(_._1).toSeq
-        .map { case ((isCsv, fileSchema), g) => (isCsv, fileSchema, g.map(_._2)) }
-        .sortBy { case (isCsv, _, g) => (!isCsv, g.head._1) }
-    }
+    val groups = ThreadBridge.parMap(spark, selected)(t =>
+        (t._2 == ".csv", ModelOutputReader.rawSchema(spark, t._1, t._2, conf)) -> t)
+      .groupBy(_._1).toSeq
+      .map { case ((isCsv, fileSchema), g) => (isCsv, fileSchema, g.map(_._2)) }
+      .sortBy { case (isCsv, _, g) => (!isCsv, g.head._1) }
 
     val parts = groups.map { case (isCsv, fileSchema, g) =>
       val paths = g.map(_._1)
@@ -339,12 +332,10 @@ object HubTransform {
     *
     * The filesystem translation does both halves of that trick
     * faithfully: each file's modification time is touched (the metadata
-    * update — content untouched, exactly like the script), and the add
-    * event is re-fired through the SAME event entrypoint the bus would
-    * hit, as `ObjectCreated:Copy` — the event name S3 produces for a
-    * copy-with-replace. Unsupported/unparseable files flow through
-    * dispatch's skip path, mirroring the Lambda re-processing everything
-    * the script touched.
+    * update — content untouched, exactly like the script), and the adds
+    * are re-run as ONE batch of [[addFiles]], the path every add event
+    * takes. Unsupported/unparseable files flow through its skip path,
+    * mirroring the Lambda re-processing everything the script touched.
     *
     * @return per-file results; touched-file count == results count
     */
@@ -354,16 +345,46 @@ object HubTransform {
       rawDir: String = "raw",
       outputPath: String,
       schemaOverride: Option[StructType] = None): Seq[EventResult] = {
-    val (fs, files) = rawFiles(spark.sessionState.newHadoopConf(), hubPath, rawDir)
+    val (conf, fs, files) = rawFiles(spark, hubPath, rawDir)
     val now = System.currentTimeMillis()
-    files.map { f =>
-      fs.setTimes(new Path(f), now, -1) // metadata touch
-      dispatch(spark, "ObjectCreated:Copy", hubPath, f, outputPath, schemaOverride)
+    files.foreach(f => fs.setTimes(new Path(f), now, -1)) // metadata touch
+    addFiles(spark, conf, hubPath, files, outputPath, schemaOverride)
+  }
+
+  /** The one add path. The schema is derived once (the hub config loaded
+    * with `conf` unless `schemaOverride` is given); if that fails, it is
+    * every file's error, as a handler's constructor reports it before it
+    * looks at the file. Each file then gets its handler: a skip or a parse
+    * error is reported as [[dispatch]] reports it. The rest are planned and
+    * written in one job by [[addAll]]. Results are in `moPaths` order, each
+    * keyed by its path.
+    */
+  private[graft] def addFiles(spark: SparkSession, conf: Configuration, hubPath: String, moPaths: Seq[String],
+      outputPath: String, schemaOverride: Option[StructType]): Seq[EventResult] = {
+    val schema = Try(schemaOverride.getOrElse(HubSchema.deriveSchema(ModelOutputHandler.loadConfig(hubPath, conf))))
+    addAll(spark, conf, moPaths.map(p =>
+      p -> schema.map(s => new ModelOutputHandler(spark, hubPath, p, outputPath, Some(s)))))
+  }
+
+  /** Every handler's file read, transformed and written by one
+    * [[ModelOutputWriter.write]] (one Spark job, task i writing file i);
+    * a handler that failed is that file's skip or error.
+    */
+  private[hub] def addAll(spark: SparkSession, conf: Configuration,
+      handlers: Seq[(String, Try[ModelOutputHandler])]): Seq[EventResult] = {
+    val written = ModelOutputWriter.write(spark, conf, handlers.collect { case (_, Success(h)) =>
+      (() => h.addColumns(h.readFile(conf)), h.outputPath, h.fileName)
+    }).iterator
+    handlers.map {
+      case (key, Failure(e)) => failed(key, e)
+      case (key, Success(_)) => written.next().fold(e => EventResult(key, "error", None, Some(e)),
+        w => EventResult(key, "add", Some(w.path), None, w.rows, w.nullCounts.getOrElse("output_type_id", 0L)))
     }
   }
 
   /** Every file under `<hubPath>/<rawDir>` (recursive, sorted) with the
-    * directory's file system; no files when the directory is missing.
+    * directory's file system and the Hadoop conf the caller's later steps
+    * share; no files when the directory is missing.
     * Local Hadoop paths stringify as "file:/..." — stripped so path
     * joining and stem parsing see a plain absolute path; remote schemes
     * ("s3a://...") keep their authority form.
@@ -373,12 +394,14 @@ object HubTransform {
     * and that reads the entry's permission: on the local file system
     * without libhadoop, one forked `ls -ld` process per listed file.
     */
-  private def rawFiles(conf: Configuration, hubPath: String, rawDir: String): (FileSystem, Seq[String]) = {
+  private def rawFiles(
+      spark: SparkSession, hubPath: String, rawDir: String): (Configuration, FileSystem, Seq[String]) = {
+    val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(PathParser.sanitizePath(ModelOutputHandler.joinPaths(hubPath, rawDir)))
     val fs = dir.getFileSystem(conf)
     def walk(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap { s =>
       if (s.isDirectory) walk(s.getPath) else Seq(s.getPath.toString.stripPrefix("file:"))
     }
-    (fs, if (fs.exists(dir)) walk(dir).sorted else Nil)
+    (conf, fs, if (fs.exists(dir)) walk(dir).sorted else Nil)
   }
 }

@@ -54,14 +54,6 @@ object ModelOutputReader {
     case _ => c.cast(to)
   }
 
-  def read(spark: SparkSession, path: String, fileType: String, schema: StructType): DataFrame =
-    fileType match {
-      case ".csv"             => readCsv(spark, path, schema)
-      case ".parquet" | ".pqt" => readParquet(spark, path, schema)
-      case other =>
-        throw new PathParser.UserWarning(s"Input file type $other is not supported")
-    }
-
   /** Options of every CSV read. [[rawSchema]] parses the header and
     * [[readCsv]] scans the file with these same options, so the two cannot
     * disagree on quoting, whitespace or the header line.
@@ -86,11 +78,13 @@ object ModelOutputReader {
     * A directory (a Spark output directory such as `f.parquet/`) stands for
     * its first data file in path order, skipping names that start with `_`
     * or `.` — the file Spark's inference reads when there are no summary
-    * files. `fileType` is the suffix as [[read]] takes it: `.csv`, else
-    * parquet.
+    * files. `fileType` is the file's suffix: `.csv`, else parquet. The file is read through `conf`; without one, through a new
+    * copy of the session's Hadoop conf.
     */
-  def rawSchema(spark: SparkSession, path: String, fileType: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
+  def rawSchema(spark: SparkSession, path: String, fileType: String): StructType =
+    rawSchema(spark, path, fileType, spark.sessionState.newHadoopConf())
+
+  def rawSchema(spark: SparkSession, path: String, fileType: String, conf: Configuration): StructType = {
     val sqlConf = spark.sessionState.conf
     firstDataFile(new Path(path), conf).fold(new StructType()) { file =>
       if (fileType == ".csv") {

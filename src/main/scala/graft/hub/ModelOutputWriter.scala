@@ -7,147 +7,185 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.UnionRDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graftbridge.WriteBridge
+import org.apache.spark.sql.graftbridge.{ThreadBridge, WriteBridge}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** Single-file, exact-name parquet sink + delete (SURVEY.md §2 ops 4-5).
   *
   * The reference writes `<output_path>/<file_name>.parquet`
-  * (model_output.py:312-322) — one file in, one file out. The write is one
-  * Spark job of one task: the task writes the parquet file with Spark's own
-  * parquet writer (same codec, write support and footer metadata as
-  * `df.write.parquet`) straight to a hidden sibling of the target, and one
-  * rename via the Hadoop FileSystem then replaces the target (works for
-  * file:// and s3a://). No write command, commit protocol,
-  * `_temporary` tree or `_SUCCESS` marker is involved. The task also counts
-  * the rows it wrote and the nulls of each column, so the caller's metrics
-  * need no second pass. A failed write deletes its hidden files and leaves
-  * an earlier output of the same name untouched. (Unlike a commit
+  * (model_output.py:312-322) — one file in, one file out. [[write]] writes
+  * a batch of such files as ONE Spark job whose task i writes file i, and
+  * [[writeSingleParquet]] is its batch of one. Each task writes its parquet
+  * file with Spark's own parquet writer (same codec, write support and
+  * footer metadata as `df.write.parquet`) straight to a hidden sibling of
+  * its target, and the driver then renames each file into place via the
+  * Hadoop FileSystem (works for file:// and s3a://). No write command,
+  * commit protocol, `_temporary` tree or `_SUCCESS` marker is involved.
+  * Each task also counts the rows it wrote and the nulls of each column, so
+  * the caller's metrics need no second pass.
+  *
+  * A failure is the file's own: a task catches its write failure, deletes
+  * its file and returns the error, so one bad file does not fail the batch,
+  * and a failed file leaves an earlier output of the same name untouched.
+  * Such a task is not retried (a lost executor still is). (Unlike a commit
   * protocol's `_temporary` tree, the file of an attempt whose executor died
   * stays behind when a retry then succeeds; it is a dot file, which Spark
   * and pyarrow readers skip.)
   *
-  * Per-file cost: a local temp file is created through
-  * [[NioLocalFileSystem]], registered in the write job's own Hadoop conf
-  * only (`fs.file.impl`, uncached). It writes no `.crc` sidecar and sets the
+  * Per-batch cost: one Hadoop conf prepared per distinct output schema
+  * (`prepareWrite` writes the row schema into it), all sent to the tasks as
+  * one broadcast rather than inside the task closure. A local temp file is
+  * created through [[NioLocalFileSystem]], registered in those confs only
+  * (`fs.file.impl`, uncached). It writes no `.crc` sidecar and sets the
   * file's mode through NIO, where Hadoop's checksummed local file system
   * forks a `chmod` process for the file and another for its `.crc` when
-  * libhadoop is not loaded. The prepared conf reaches the task as one
-  * broadcast, not inside the task closure, which would serialize it twice
-  * on the driver and deserialize it in the task.
+  * libhadoop is not loaded.
   *
   * Scale note: the one-file-per-input contract is the reference's API, so the
   * `coalesce(1)` here is semantic, not accidental — each model-output file is
-  * small (Lambda envelope). Bulk backfills parallelize across files, not
-  * within one.
+  * small (Lambda envelope). A batch parallelizes across files, one task
+  * each, not within one.
   */
 object ModelOutputWriter {
 
   /** One written file: its path, its row count and each column's null count. */
   private[hub] final case class Written(path: String, rows: Long, nullCounts: Map[String, Long])
 
-  /** Write `df` as exactly `<outputDir>/<fileName>.parquet`; returns the path. */
-  def writeSingleParquet(df: DataFrame, outputDir: String, fileName: String): String =
-    write(df, outputDir, fileName).path
+  /** What a write task returns: its temp file, rows and per-column nulls. */
+  private type TaskResult = (String, Long, Array[Long])
 
-  private[hub] def write(df: DataFrame, outputDir: String, fileName: String): Written = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val format = new ParquetFileFormat()
-    WriteBridge.checkWritable(spark, format, schema)
-    val conf = spark.sessionState.newHadoopConf()
-    val job = Job.getInstance(conf)
-    // the task's file:// file system, in this job's conf only; uncached, so
-    // no other user of the FileSystem cache gets it
-    job.getConfiguration.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
-    job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
-    val factory = format.prepareWrite(spark, job, Map.empty, schema)
-    val outDir = new Path(outputDir)
-    // the session's file system: for file:// it is checksummed, so deleting
-    // the target also drops a `.crc` an older writer may have left beside it
-    val fs = outDir.getFileSystem(conf)
-    val target = new Path(outDir, s"$fileName.parquet")
-    val tmpName = s".tmp-graft-$fileName-${java.util.UUID.randomUUID}"
-    val tmpStem = new Path(outDir, tmpName).toString
-    // coalesce(1) plans exactly one partition, also for an input without
-    // any, so one task writes one file even when there are no rows
-    val qe = df.coalesce(1).queryExecution
-    val taskConf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
-    try {
-      // as a named SQL execution, the job carries an execution id, its tasks
-      // see the session's SQL conf, and QueryExecutionListeners hear of it
-      val (tmp, rows, nulls) = SQLExecution.withNewExecutionId(qe, Some("writeSingleParquet")) {
-        spark.sparkContext.runJob(
-          qe.toRdd, writeTask(factory, schema, taskConf, tmpStem) _).head
-      }
-      fs.delete(target, false)
-      if (!fs.rename(new Path(tmp), target))
-        throw new IllegalStateException(s"rename $tmp -> $target failed")
-      Written(target.toString, rows, schema.fieldNames.zip(nulls).toMap)
-    } catch {
-      case NonFatal(e) =>
-        // what a lost attempt left (listed, not globbed: the name may hold
-        // glob characters)
-        Try(fs.listStatus(outDir)).getOrElse(Array.empty[FileStatus])
-          .filter(_.getPath.getName.startsWith(tmpName)).foreach(s => fs.delete(s.getPath, false))
-        throw e
-    } finally taskConf.destroy()
+  /** A failure as a per-file result reports it. */
+  private[hub] def describe(e: Throwable): String = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+
+  /** Write `df` as exactly `<outputDir>/<fileName>.parquet`; returns the path. */
+  def writeSingleParquet(df: DataFrame, outputDir: String, fileName: String): String = {
+    write(df.sparkSession, df.sparkSession.sessionState.newHadoopConf(), Seq((() => df, outputDir, fileName)))
+      .head.fold(e => throw new SparkException(e), _.path)
   }
 
-  /** The one task: write `rows` to a file named for this attempt (so a
-    * retried or speculative attempt never collides with another) and count
-    * rows and per-column nulls on the way. A failed or killed attempt
-    * deletes its own file.
+  /** Write each `(df, outputDir, fileName)` target as exactly
+    * `<outputDir>/<fileName>.parquet`, all in one Spark job. Each target's
+    * DataFrame is built (by its function) and planned on the driver,
+    * concurrently on the global execution context. Returns, in input
+    * order, each target's written file or its error text
+    * (`<SimpleClassName>: <message>` of the exception that failed it).
     */
-  private def writeTask(factory: OutputWriterFactory, schema: StructType,
-      conf: Broadcast[SerializableConfiguration], tmpStem: String)(
-      ctx: TaskContext, rows: Iterator[InternalRow]): (String, Long, Array[Long]) = {
-    val hadoopConf = conf.value.value
+  private[hub] def write(spark: SparkSession, conf: Configuration,
+      targets: Seq[(() => DataFrame, String, String)]): Seq[Either[String, Written]] = {
+    val format = new ParquetFileFormat()
+    // coalesce(1) plans exactly one partition, also for an input without
+    // any, so one task writes one file even when there are no rows. An
+    // input whose plan shuffles runs its adaptive query stages while it is
+    // planned here, outside the write's SQL execution
+    val plans = ThreadBridge.parMap(spark, targets) { case (df, _, _) =>
+      Try {
+        val one = df().coalesce(1)
+        WriteBridge.checkWritable(spark, format, one.schema)
+        one.queryExecution.toRdd
+        (one.schema, one.queryExecution)
+      }
+    }
+    val live = targets.indices.filter(plans(_).isSuccess)
+    val planned = live.map(plans(_).get)
+    val schemas = planned.map(_._1).distinct
+    val tmps = live.map(i => new Path(targets(i)._2, s".tmp-graft-${targets(i)._3}-${java.util.UUID.randomUUID}"))
+    val out: Seq[Either[String, TaskResult]] = if (live.isEmpty) Nil else try {
+      val prepared = schemas.map { schema =>
+        val job = Job.getInstance(conf)
+        // the task's file:// file system, in this job's conf only; uncached,
+        // so no other user of the FileSystem cache gets it
+        job.getConfiguration.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+        job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
+        (format.prepareWrite(spark, job, Map.empty, schema), schema, new SerializableConfiguration(job.getConfiguration))
+      }
+      val tasks = planned.zip(tmps).map { case ((schema, _), tmp) => (schemas.indexOf(schema), tmp.toString) }
+      val shared = spark.sparkContext.broadcast(prepared.toArray)
+      // as a named SQL execution, the job carries an execution id, its tasks
+      // see the session's SQL conf, and QueryExecutionListeners hear of it;
+      // a union RDD keeps one partition per plan, so task k writes file k
+      try SQLExecution.withNewExecutionId(planned.head._2, Some("writeSingleParquet")) {
+        spark.sparkContext.runJob(new UnionRDD(spark.sparkContext, planned.map(_._2.toRdd)), writeTask(tasks, shared) _)
+      }.toSeq finally shared.destroy()
+    } catch { case NonFatal(e) => live.map(_ => Left(describe(e))) }
+    val done = live.indices.map { k =>
+      val (_, outputDir, fileName) = targets(live(k))
+      val target = new Path(outputDir, s"$fileName.parquet")
+      // the session's file system: for file:// it is checksummed, so deleting
+      // the target also drops a `.crc` an older writer may have left beside it
+      val fs = target.getFileSystem(conf)
+      live(k) -> out(k).flatMap { case (tmp, rows, nulls) =>
+        Try {
+          fs.delete(target, false)
+          if (!fs.rename(new Path(tmp), target)) throw new IllegalStateException(s"rename $tmp -> $target failed")
+          Written(target.toString, rows, planned(k)._1.fieldNames.zip(nulls).toMap)
+        }.toEither.left.map(describe)
+      }.left.map { e =>
+        // what a failed or lost attempt left (listed, not globbed: the name
+        // may hold glob characters)
+        Try(fs.listStatus(tmps(k).getParent)).getOrElse(Array.empty[FileStatus])
+          .filter(_.getPath.getName.startsWith(tmps(k).getName)).foreach(s => Try(fs.delete(s.getPath, false)))
+        e
+      }
+    }.toMap
+    targets.indices.map(i => plans(i).toEither.left.map(describe).flatMap(_ => done(i)))
+  }
+
+  /** Task k of the batch: write its rows, with the writer prepared for its
+    * schema (shared by every task of that schema), to a file named for this
+    * attempt (so a retried or speculative attempt never collides with
+    * another) and count rows and per-column nulls on the way. A failure
+    * deletes the attempt's file and is returned, not thrown.
+    */
+  private def writeTask(
+      tasks: IndexedSeq[(Int, String)],
+      shared: Broadcast[Array[(OutputWriterFactory, StructType, SerializableConfiguration)]])(
+      ctx: TaskContext, rows: Iterator[InternalRow]): Either[String, TaskResult] = {
+    val (k, tmpStem) = tasks(ctx.partitionId())
+    val (factory, schema, conf) = shared.value(k)
+    val hadoopConf = conf.value
     val attempt = new TaskAttemptID(
       new TaskID(new JobID("graft", ctx.stageId()), TaskType.MAP, ctx.partitionId()), ctx.attemptNumber())
     val path = s"$tmpStem-${ctx.attemptNumber()}.parquet"
-    val writer = factory.newInstance(path, schema, new TaskAttemptContextImpl(hadoopConf, attempt))
     val nulls = new Array[Long](schema.length)
     var n = 0L
+    var writer: OutputWriter = null
     try {
+      writer = factory.newInstance(path, schema, new TaskAttemptContextImpl(hadoopConf, attempt))
       while (rows.hasNext) {
         val r = rows.next()
-        var i = 0
-        while (i < nulls.length) {
-          if (r.isNullAt(i)) nulls(i) += 1
-          i += 1
-        }
+        nulls.indices.foreach(i => if (r.isNullAt(i)) nulls(i) += 1)
         writer.write(r)
         n += 1
       }
       writer.close()
+      Right((path, n, nulls))
     } catch {
       case NonFatal(e) =>
-        Try(writer.close())
-        val p = new Path(path)
-        p.getFileSystem(hadoopConf).delete(p, false)
-        throw e
+        if (writer != null) Try(writer.close())
+        Try { val p = new Path(path); p.getFileSystem(hadoopConf).delete(p, false) }
+        Left(describe(e))
     }
-    (path, n, nulls)
   }
 
   /** Delete `<outputDir>/<fileName>.parquet`; missing file → UserWarning
     * (reference delete_model_output, model_output.py:333-340).
     */
   def deleteSingleParquet(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       outputDir: String,
       fileName: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()

@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.hub.{HubTransform, PathParser}
+import graft.hub.HubTransform
 
 /** Directory-watch mode for the hub transform: the streaming equivalent of
   * the reference's S3-event → Lambda loop (SURVEY.md §2.8). A file source
-  * discovers new model-output files under `raw/`; each discovered file runs
-  * the SAME per-file batch transform (`HubTransform.dispatch`) — deletes
-  * stay an explicit API call, exactly like the reference, because file
-  * sources cannot observe removals.
+  * discovers new model-output files under `raw/`, and each micro-batch's
+  * files run the SAME batch path as a backfill (`HubTransform.addFiles`:
+  * one write job, one task per file), so a stream differs from a backfill
+  * only in how it finds files — deletes stay an explicit API call, exactly
+  * like the reference, because file sources cannot observe removals.
   *
   * The stream is a control plane over file NAMES (binaryFile source with
   * the content column pruned away) — payload bytes are only read by the
@@ -20,8 +21,6 @@ import graft.hub.{HubTransform, PathParser}
   * across restarts.
   */
 object HubStream {
-
-  final case class WatchResult(processed: Seq[HubTransform.EventResult])
 
   /** Process every new file under `<hubPath>/<rawDir>` exactly once
     * (Trigger.AvailableNow — returns when caught up). Call repeatedly (or
@@ -50,12 +49,9 @@ object HubStream {
     val q = files.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         // file list is control-plane metadata (one row per new file)
-        val paths = batch.select("path").collect().map(_.getString(0)).sorted
-        paths.foreach { p =>
-          val local = p.stripPrefix("file:")
-          results += HubTransform.dispatch(
-            spark, "ObjectCreated:Put", hubPath, local, outputPath, schemaOverride)
-        }
+        val paths = batch.select("path").collect().map(_.getString(0).stripPrefix("file:")).sorted
+        results ++= HubTransform.addFiles(
+          spark, spark.sessionState.newHadoopConf(), hubPath, paths.toSeq, outputPath, schemaOverride)
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -72,11 +72,11 @@ class HubTransformSpec extends SparkFunSuite {
 
   test("observed write metrics match the written file (no extra scan)") {
     val out = tmpDir("mo-out")
-    val h = handler(integ("2024-07-07-teamabc-output_type_ids_numeric.csv"), out, schemaOriginDate)
-    val written = spark.read.parquet(h.addModelOutput())
-    val m = h.lastWriteMetrics.get
-    assert(m("rows_written") === written.count())
-    assert(m("null_output_type_ids") ===
+    val r = HubTransform.dispatch(spark, "ObjectCreated:Put", "/nonexistent-hub",
+      integ("2024-07-07-teamabc-output_type_ids_numeric.csv"), out, Some(schemaOriginDate))
+    val written = spark.read.parquet(r.outputPath.get)
+    assert(r.rowsWritten === written.count())
+    assert(r.nullOutputTypeIds ===
       written.filter(col("output_type_id").isNull).count())
   }
 
@@ -235,6 +235,16 @@ class HubTransformSpec extends SparkFunSuite {
     assert(errors.map(_.key.split('/').last) == Seq("2420-01-05.csv"))
     assert(errors.head.error.exists(_.startsWith("IllegalArgumentException:")), errors)
     assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) == 4)
+
+    // the backfill is one write job with one task per file; under a schema
+    // that types every column no file needs a CSV inference job (under the
+    // empty schema above, each file runs its own)
+    val typed = StructType(Seq(StructField("location", StringType), StructField("value", DoubleType)))
+    val (typedResults, tasks) = org.apache.spark.JobCount.tasksPerJob(spark.sparkContext) {
+      HubTransform.addDirectory(spark, hub, "raw", tmpDir("hub-dir-typed-out"), schemaOverride = Some(typed))
+    }
+    assert(tasks == Seq(4), s"tasks per job: $tasks")
+    assert(typedResults.map(_.action) == results.map(_.action))
   }
 
   test("event dispatch skips bad files, routes verbs (faas/lambda_function.py:22-62)") {
@@ -435,6 +445,21 @@ class HubTransformSpec extends SparkFunSuite {
     val failed = add()
     assert(failed.action == "error", failed)
     assert(listing() == before)
+
+    // in a backfill the bad file fails alone, inside the one write job: the
+    // good one is added, and the bad one's error names what its task caught
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$hub/raw/2420-01-02-team-model.csv"), "location,horizon\nearth,2\n")
+    val (results, tasks) = org.apache.spark.JobCount.tasksPerJob(spark.sparkContext) {
+      HubTransform.addDirectory(spark, hub, "raw", out, schemaOverride = schema)
+    }
+    assert(tasks == Seq(2), s"tasks per job: $tasks")
+    assert(results.map(r => r.key.split('/').last -> r.action) ==
+      Seq("2420-01-01-team-model.csv" -> "error", "2420-01-02-team-model.csv" -> "add"))
+    assert(results.head.error.exists(_.startsWith("SparkNumberFormatException: ")), results.head)
+    val after = listing()
+    assert(after.map(_._1) == (before.map(_._1) :+ "2420-01-02-team-model.parquet").sorted)
+    assert(after.filter(f => before.exists(_._1 == f._1)) == before)
   }
 
   test("retrigger touches metadata and re-fires add for every raw file " +

@@ -264,13 +264,15 @@ class ModelOutputReaderSpec extends SparkFunSuite {
     val header = writeCsv(s"$dir/2420-01-01-team-model.csv",
       "origin_date,target,horizon,location,output_type,output_type_id,value\n")
     val h = new ModelOutputHandler(spark, "/nonexistent-hub", header, s"$dir/out-csv", Some(schemaOriginDate))
-    val written = h.addModelOutput()
+    val r = HubTransform.dispatch(spark, "ObjectCreated:Put", "/nonexistent-hub", header, s"$dir/out-csv",
+      Some(schemaOriginDate))
+    val written = r.outputPath.get
     assert(entries(s"$dir/out-csv") == Seq("2420-01-01-team-model.parquet"))
     // read back, every column is nullable; names and types are the add's
     def typed(t: StructType) = t.map(f => f.name -> f.dataType)
     assert(typed(spark.read.parquet(written).schema) == typed(h.addColumns(h.readFile()).schema))
     assert(footerRows(footer(written)) == 0)
-    assert(h.lastWriteMetrics.get("rows_written") == 0L)
+    assert(r.rowsWritten == 0L)
 
     // an input with no partitions at all, and a relation known to be empty
     val emptyRdd = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaNoModelRound)

@@ -1,6 +1,8 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -13,19 +15,27 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 object JobCount {
 
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val (result, tasks) = tasksPerJob(sc)(body)
+    (result, tasks.size)
+  }
+
+  /** The block's result and, per job it started (in job id order), the
+    * number of tasks of the job's stages.
+    */
+  def tasksPerJob[T](sc: SparkContext)(body: => T): (T, Seq[Int]) = {
     val group = s"job-count-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger()
+    val jobs = new ConcurrentLinkedQueue[(Int, Int)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
-          jobs.incrementAndGet()
+          jobs.add(e.jobId -> e.stageInfos.map(_.numTasks).sum)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "job count", interruptOnCancel = false)
       val result = try body finally sc.clearJobGroup()
       sc.listenerBus.waitUntilEmpty()
-      (result, jobs.get)
+      (result, jobs.asScala.toSeq.sortBy(_._1).map(_._2))
     } finally sc.removeSparkListener(listener)
   }
 }
