@@ -28,8 +28,9 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The reference writes `<output_path>/<file_name>.parquet`
   * (model_output.py:312-322) — one file in, one file out. [[write]] writes
-  * a batch of such files as ONE Spark job whose task i writes file i, and
-  * [[writeSingleParquet]] is its batch of one. Each task writes its parquet
+  * a batch of such files as ONE Spark job over a few plans, where partition
+  * i of a plan writes that plan's file i; [[writeSingleParquet]] is its
+  * batch of one (`df.coalesce(1)`, one file). Each task writes its parquet
   * file with Spark's own parquet writer (same codec, write support and
   * footer metadata as `df.write.parquet`) straight to a hidden sibling of
   * its target, and the driver then renames each file into place via the
@@ -46,7 +47,17 @@ import org.apache.spark.util.SerializableConfiguration
   * stays behind when a retry then succeeds; it is a dot file, which Spark
   * and pyarrow readers skip.)
   *
-  * Per-batch cost: one Hadoop conf prepared per distinct output schema
+  * Per-batch cost: the plans are planned once each and unioned into one
+  * job, whose task binary holds every plan once; what differs per task
+  * (its input file, inside its partition; its temp file and writer, in the
+  * broadcast) is not in that binary, so a task deserializes the same bytes
+  * whatever the batch's size. A hub batch brings one plan per raw-schema
+  * group ([[ModelOutputReader.readFiles]]), not one per file, which is why
+  * it scans the files itself: a `spark.read` scan packs and splits files
+  * into partitions as it sees fit, while here partition i must be exactly
+  * file i. (`readHub`'s query has the opposite needs: pruning, pushdown and
+  * packing, so it keeps `spark.read`.) Tasks are launched largest input
+  * first. One Hadoop conf is prepared per distinct output schema
   * (`prepareWrite` writes the row schema into it), all sent to the tasks as
   * one broadcast rather than inside the task closure. A local temp file is
   * created through [[NioLocalFileSystem]], registered in those confs only
@@ -55,9 +66,9 @@ import org.apache.spark.util.SerializableConfiguration
   * forks a `chmod` process for the file and another for its `.crc` when
   * libhadoop is not loaded.
   *
-  * Scale note: the one-file-per-input contract is the reference's API, so the
-  * `coalesce(1)` here is semantic, not accidental — each model-output file is
-  * small (Lambda envelope). A batch parallelizes across files, one task
+  * Scale note: the one-file-per-input contract is the reference's API, so
+  * one task per file is semantic, not accidental — each model-output file
+  * is small (Lambda envelope). A batch parallelizes across files, one task
   * each, not within one.
   */
 object ModelOutputWriter {
@@ -71,39 +82,47 @@ object ModelOutputWriter {
   /** A failure as a per-file result reports it. */
   private[hub] def describe(e: Throwable): String = s"${e.getClass.getSimpleName}: ${e.getMessage}"
 
-  /** Write `df` as exactly `<outputDir>/<fileName>.parquet`; returns the path. */
-  def writeSingleParquet(df: DataFrame, outputDir: String, fileName: String): String = {
-    write(df.sparkSession, df.sparkSession.sessionState.newHadoopConf(), Seq((() => df, outputDir, fileName)))
-      .head.fold(e => throw new SparkException(e), _.path)
-  }
+  /** One output file, `<outputDir>/<fileName>.parquet`, and the bytes of
+    * the input its task reads, which orders the tasks.
+    */
+  private[hub] final case class Target(outputDir: String, fileName: String, inputBytes: Long = 0L)
 
-  /** Write each `(df, outputDir, fileName)` target as exactly
-    * `<outputDir>/<fileName>.parquet`, all in one Spark job. Each target's
-    * DataFrame is built (by its function) and planned on the driver,
-    * concurrently on the global execution context. Returns, in input
-    * order, each target's written file or its error text
-    * (`<SimpleClassName>: <message>` of the exception that failed it).
+  /** Write `df` as exactly `<outputDir>/<fileName>.parquet`; returns the path. */
+  def writeSingleParquet(df: DataFrame, outputDir: String, fileName: String): String =
+    write(df.sparkSession, df.sparkSession.sessionState.newHadoopConf(),
+      Seq((() => df.coalesce(1), Seq(Target(outputDir, fileName))))).head.head.fold(e => throw new SparkException(e), _.path)
+
+  /** Write every plan's targets in one Spark job: partition i of a plan
+    * writes its target i as exactly `<outputDir>/<fileName>.parquet`. Each
+    * plan is built (by its function) and planned on the driver,
+    * concurrently on the global execution context; one that fails, or does
+    * not have one partition per target, is each of its targets' error. The
+    * job runs its tasks largest input first, so the biggest files do not
+    * finish in the last wave. Returns, per plan and target in input order,
+    * the written file or its error text (`<SimpleClassName>: <message>` of
+    * the exception that failed it).
     */
   private[hub] def write(spark: SparkSession, conf: Configuration,
-      targets: Seq[(() => DataFrame, String, String)]): Seq[Either[String, Written]] = {
+      plans: Seq[(() => DataFrame, Seq[Target])]): Seq[Seq[Either[String, Written]]] = {
     val format = new ParquetFileFormat()
-    // coalesce(1) plans exactly one partition, also for an input without
-    // any, so one task writes one file even when there are no rows. An
-    // input whose plan shuffles runs its adaptive query stages while it is
-    // planned here, outside the write's SQL execution
-    val plans = ThreadBridge.parMap(spark, targets) { case (df, _, _) =>
+    // an input whose plan shuffles runs its adaptive query stages while it
+    // is planned here, outside the write's SQL execution
+    val planned = ThreadBridge.parMap(spark, plans) { case (df, targets) =>
       Try {
-        val one = df().coalesce(1)
-        WriteBridge.checkWritable(spark, format, one.schema)
-        one.queryExecution.toRdd
-        (one.schema, one.queryExecution)
+        val d = df()
+        WriteBridge.checkWritable(spark, format, d.schema)
+        val parts = d.queryExecution.toRdd.getNumPartitions
+        if (parts != targets.size)
+          throw new IllegalStateException(s"plan has $parts partitions for ${targets.size} files")
+        (d.schema, d.queryExecution)
       }
     }
-    val live = targets.indices.filter(plans(_).isSuccess)
-    val planned = live.map(plans(_).get)
-    val schemas = planned.map(_._1).distinct
-    val tmps = live.map(i => new Path(targets(i)._2, s".tmp-graft-${targets(i)._3}-${java.util.UUID.randomUUID}"))
-    val out: Seq[Either[String, TaskResult]] = if (live.isEmpty) Nil else try {
+    val live = plans.indices.filter(planned(_).isSuccess)
+    // partition k of the job's union: its plan's schema and its target
+    val slots = live.flatMap(i => plans(i)._2.map(planned(i).get._1 -> _))
+    val schemas = slots.map(_._1).distinct
+    val tmps = slots.map { case (_, t) => new Path(t.outputDir, s".tmp-graft-${t.fileName}-${java.util.UUID.randomUUID}") }
+    val out: Seq[Either[String, TaskResult]] = if (slots.isEmpty) Nil else try {
       val prepared = schemas.map { schema =>
         val job = Job.getInstance(conf)
         // the task's file:// file system, in this job's conf only; uncached,
@@ -112,26 +131,34 @@ object ModelOutputWriter {
         job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
         (format.prepareWrite(spark, job, Map.empty, schema), schema, new SerializableConfiguration(job.getConfiguration))
       }
-      val tasks = planned.zip(tmps).map { case ((schema, _), tmp) => (schemas.indexOf(schema), tmp.toString) }
-      val shared = spark.sparkContext.broadcast(prepared.toArray)
+      // each task's writer and temp file reach it in the broadcast, which
+      // an executor fetches once, not in the task closure every task
+      // deserializes
+      val tasks = slots.zip(tmps).map { case ((schema, _), tmp) => (schemas.indexOf(schema), tmp.toString) }
+      val shared = spark.sparkContext.broadcast((prepared.toArray, tasks.toArray))
+      val order = slots.indices.sortBy(k => -slots(k)._2.inputBytes)
       // as a named SQL execution, the job carries an execution id, its tasks
       // see the session's SQL conf, and QueryExecutionListeners hear of it;
-      // a union RDD keeps one partition per plan, so task k writes file k
-      try SQLExecution.withNewExecutionId(planned.head._2, Some("writeSingleParquet")) {
-        spark.sparkContext.runJob(new UnionRDD(spark.sparkContext, planned.map(_._2.toRdd)), writeTask(tasks, shared) _)
-      }.toSeq finally shared.destroy()
-    } catch { case NonFatal(e) => live.map(_ => Left(describe(e))) }
-    val done = live.indices.map { k =>
-      val (_, outputDir, fileName) = targets(live(k))
+      // the union keeps each plan's partitions, so task k writes slot k. Its
+      // task binary holds each plan once; a task's own file travels in its
+      // partition
+      val results = try SQLExecution.withNewExecutionId(planned(live.head).get._2, Some("writeSingleParquet")) {
+        spark.sparkContext.runJob(new UnionRDD(spark.sparkContext, live.map(planned(_).get._2.toRdd)),
+          writeTask(shared) _, order)
+      } finally shared.destroy()
+      order.zip(results).sortBy(_._1).map(_._2)
+    } catch { case NonFatal(e) => slots.map(_ => Left(describe(e))) }
+    val done = slots.indices.map { k =>
+      val Target(outputDir, fileName, _) = slots(k)._2
       val target = new Path(outputDir, s"$fileName.parquet")
       // the session's file system: for file:// it is checksummed, so deleting
       // the target also drops a `.crc` an older writer may have left beside it
       val fs = target.getFileSystem(conf)
-      live(k) -> out(k).flatMap { case (tmp, rows, nulls) =>
+      out(k).flatMap { case (tmp, rows, nulls) =>
         Try {
           fs.delete(target, false)
           if (!fs.rename(new Path(tmp), target)) throw new IllegalStateException(s"rename $tmp -> $target failed")
-          Written(target.toString, rows, planned(k)._1.fieldNames.zip(nulls).toMap)
+          Written(target.toString, rows, slots(k)._1.fieldNames.zip(nulls).toMap)
         }.toEither.left.map(describe)
       }.left.map { e =>
         // what a failed or lost attempt left (listed, not globbed: the name
@@ -140,8 +167,8 @@ object ModelOutputWriter {
           .filter(_.getPath.getName.startsWith(tmps(k).getName)).foreach(s => Try(fs.delete(s.getPath, false)))
         e
       }
-    }.toMap
-    targets.indices.map(i => plans(i).toEither.left.map(describe).flatMap(_ => done(i)))
+    }.iterator
+    plans.indices.map(i => planned(i).fold(e => plans(i)._2.map(_ => Left(describe(e))), _ => plans(i)._2.map(_ => done.next())))
   }
 
   /** Task k of the batch: write its rows, with the writer prepared for its
@@ -151,11 +178,10 @@ object ModelOutputWriter {
     * deletes the attempt's file and is returned, not thrown.
     */
   private def writeTask(
-      tasks: IndexedSeq[(Int, String)],
-      shared: Broadcast[Array[(OutputWriterFactory, StructType, SerializableConfiguration)]])(
+      shared: Broadcast[(Array[(OutputWriterFactory, StructType, SerializableConfiguration)], Array[(Int, String)])])(
       ctx: TaskContext, rows: Iterator[InternalRow]): Either[String, TaskResult] = {
-    val (k, tmpStem) = tasks(ctx.partitionId())
-    val (factory, schema, conf) = shared.value(k)
+    val (k, tmpStem) = shared.value._2(ctx.partitionId())
+    val (factory, schema, conf) = shared.value._1(k)
     val hadoopConf = conf.value
     val attempt = new TaskAttemptID(
       new TaskID(new JobID("graft", ctx.stageId()), TaskType.MAP, ctx.partitionId()), ctx.attemptNumber())

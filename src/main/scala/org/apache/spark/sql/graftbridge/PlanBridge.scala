@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` Dataset construction so custom
   * logical operators can surface as user-facing DataFrames (sibling of
@@ -16,6 +19,17 @@ object PlanBridge {
   /** Wrap a custom LogicalPlan as a DataFrame on this session. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `rdd`, whose rows have the layout of `schema`, as a DataFrame, with
+    * one column per field that refers to its attribute directly (no name
+    * resolution, so duplicate or dotted names are fine). The scan plans as
+    * an `RDDScanExec`, which whole-stage codegen takes as its input.
+    */
+  def ofRdd(spark: SparkSession, schema: StructType, rdd: RDD[InternalRow]): (DataFrame, Seq[Column]) = {
+    val output = schema.map(f => AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
+    (ofRows(spark, LogicalRDD(output, rdd)(spark.asInstanceOf[classic.SparkSession])),
+      output.map(ColumnBridge.column))
+  }
 
   /** EAGER Column → catalyst Expression conversion via the session's
     * converter. Unlike [[ColumnBridge.expression]]'s lazy

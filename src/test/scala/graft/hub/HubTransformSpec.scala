@@ -227,8 +227,9 @@ class HubTransformSpec extends SparkFunSuite {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$hub/raw/junk.txt"), "x")
     java.nio.file.Files.writeString( // supported type, unparseable name
       java.nio.file.Paths.get(s"$hub/raw/2420-01-05.csv"), "location,value\nmars,3.5\n")
-    val results = HubTransform.addDirectory(
-      spark, hub, "raw", out, parallelism = 4, schemaOverride = Some(new StructType()))
+    val (results, inferTasks) = org.apache.spark.JobCount.tasksPerJob(spark.sparkContext) {
+      HubTransform.addDirectory(spark, hub, "raw", out, parallelism = 4, schemaOverride = Some(new StructType()))
+    }
     assert(results.count(_.action == "add") == 4)
     assert(results.count(_.action == "skip") == 1)
     val errors = results.filter(_.action == "error")
@@ -236,15 +237,90 @@ class HubTransformSpec extends SparkFunSuite {
     assert(errors.head.error.exists(_.startsWith("IllegalArgumentException:")), errors)
     assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) == 4)
 
-    // the backfill is one write job with one task per file; under a schema
-    // that types every column no file needs a CSV inference job (under the
-    // empty schema above, each file runs its own)
+    // under the empty schema above, the four like-headed files infer their
+    // untyped columns in one aggregation (a map-stage job and a result job
+    // under AQE) before the one write job of one task per file
+    assert(inferTasks.size <= 3 && inferTasks.last == 4, s"tasks per job: $inferTasks")
+    // under a schema that types every column there is no inference job
     val typed = StructType(Seq(StructField("location", StringType), StructField("value", DoubleType)))
     val (typedResults, tasks) = org.apache.spark.JobCount.tasksPerJob(spark.sparkContext) {
       HubTransform.addDirectory(spark, hub, "raw", tmpDir("hub-dir-typed-out"), schemaOverride = Some(typed))
     }
     assert(tasks == Seq(4), s"tasks per job: $tasks")
     assert(typedResults.map(_.action) == results.map(_.action))
+  }
+
+  test("files sharing a header keep the types each one infers; a headerless file fails alone") {
+    val hub = tmpDir("hub-infer")
+    val out = tmpDir("hub-infer-out")
+    new java.io.File(s"$hub/raw").mkdirs()
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$hub/raw/2420-01-01-team-model.csv"), "location,count\nearth,1\nmars,NA\n")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$hub/raw/2420-01-02-team-model.csv"), "location,count\nearth,abc\n")
+    java.nio.file.Files.writeString( // a header and no rows: every untyped column a string
+      java.nio.file.Paths.get(s"$hub/raw/2420-01-03-team-model.csv"), "location,count\n")
+    for ((d, text) <- Seq("2420-01-04" -> "", "2420-01-05" -> "\n\n")) // no header line
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$hub/raw/$d-team-model.csv"), text)
+    val results = HubTransform.addDirectory(spark, hub, "raw", out, schemaOverride = Some(new StructType()))
+    assert(results.map(_.action) == Seq("add", "add", "add", "error", "error"), results)
+    // each headerless file fails alone, naming its own path
+    for (r <- results.drop(3))
+      assert(r.error.contains(s"IllegalArgumentException: requirement failed: CSV file has no header line: ${r.key}"), r)
+    def read(d: String) = spark.read.parquet(s"$out/$d-team-model.parquet")
+    assert(read("2420-01-01").schema("count").dataType == LongType)
+    assert(read("2420-01-01").collect().map(r => Option(r.get(1))).toSeq == Seq(Some(1L), None))
+    assert(read("2420-01-02").schema("count").dataType == StringType)
+    assert(read("2420-01-02").collect().map(_.getString(1)).toSeq == Seq("abc"))
+    assert(read("2420-01-03").schema("count").dataType == StringType && read("2420-01-03").count() == 0)
+    for (d <- Seq("2420-01-01", "2420-01-02", "2420-01-03")) {
+      assert(read(d).columns.toSeq == Seq("location", "count", "round_id", "model_id"))
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(s"$out/$d-team-model.parquet"), spark.sessionState.newHadoopConf()))
+      val written = footer.getFooter.getFileMetaData.getSchema
+      try for (c <- Seq("round_id", "model_id")) assert(written.getType(written.getFieldIndex(c))
+        .isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED), s"$d: $c")
+      finally footer.close()
+    }
+  }
+
+  /** `n` two-column CSVs of one row each under `<hub>/raw`, the last one
+    * `bigRows` rows long; returns the hub and its typed schema.
+    */
+  private def likeShapedHub(prefix: String, n: Int, bigRows: Int = 1): (String, Option[StructType]) = {
+    val hub = tmpDir(prefix)
+    new java.io.File(s"$hub/raw").mkdirs()
+    for (i <- 1 to n)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f"$hub/raw/2420-01-$i%02d-team-model.csv"),
+        "location,value\n" + "earth,1.5\n" * (if (i == n) bigRows else 1))
+    (hub, Some(StructType(Seq(StructField("location", StringType), StructField("value", DoubleType)))))
+  }
+
+  test("a backfill's write stage holds one plan per raw-schema group, whatever the file count") {
+    val lineage = for (n <- Seq(2, 24)) yield {
+      val (hub, schema) = likeShapedHub(s"hub-lineage-$n", n)
+      val (results, jobs) = org.apache.spark.JobCount.tasksAndRddsPerJob(spark.sparkContext) {
+        HubTransform.addDirectory(spark, hub, "raw", tmpDir(s"hub-lineage-$n-out"), schemaOverride = schema)
+      }
+      assert(results.map(_.action).distinct == Seq("add"), results)
+      assert(jobs.map(_._1) == Seq(n), s"$n files: tasks per job ${jobs.map(_._1)}")
+      jobs.head._2
+    }
+    assert(lineage.distinct.size == 1, s"RDDs in the write stage at 2 and 24 files: $lineage")
+  }
+
+  test("a backfill launches its largest file's task first") {
+    val slots = spark.sparkContext.defaultParallelism
+    val n = 2 * slots + 2
+    val (hub, schema) = likeShapedHub("hub-largest", n, bigRows = 5000)
+    val (results, launched) = org.apache.spark.JobCount.taskLaunchOrder(spark.sparkContext) {
+      HubTransform.addDirectory(spark, hub, "raw", tmpDir("hub-largest-out"), schemaOverride = schema)
+    }
+    assert(results.map(_.action).distinct == Seq("add"), results)
+    assert(launched.size == n, launched)
+    // one group, so partition i is the i-th file in path order: the big one is last
+    assert(launched.take(slots).contains(n - 1), s"launch order: $launched")
+    assert(spark.read.parquet(results.last.outputPath.get).count() == 5000)
   }
 
   test("event dispatch skips bad files, routes verbs (faas/lambda_function.py:22-62)") {
