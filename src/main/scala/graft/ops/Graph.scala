@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import Tables._
 
@@ -18,17 +22,115 @@ import Tables._
   * remainder of each DIV) stays in the damping constant's favor and is
   * identical in both engines.
   *
-  * Scale: each iteration is one join of the edge list with the rank
-  * vector (shuffle on src) plus one aggregation (shuffle on dst) — the
-  * standard distributed PageRank shape. The edge list is iteration-
-  * invariant: persist it once, and pre-partition edges and ranks on the
-  * same key so the join exchange is reused each round. Results are
-  * localCheckpointed per iteration to keep the plan from growing
-  * exponentially.
+  * Iteration: the eight iterative algorithms (PageRank, personalized
+  * PageRank, HITS, k-core, label propagation, BFS, multi-source BFS,
+  * SSSP) supply only their per-round step. [[distributed]] computes the
+  * edge relation once, laid out on the key the step joins it with the
+  * state; [[iterate]] runs the rounds, stops after an empty frontier and
+  * decides when a round's state is materialized.
   */
 object Graph {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Rounds between two materializations of a state that nothing probes
+    * or re-reads: a returned plan holds at most this many rounds.
+    */
+  private val CheckpointEvery = 4
+
+  /** The edge rule: `edges` computed once, as a local checkpoint, for
+    * rounds that join it with a state on `key`.
+    *
+    * An edge relation too big to broadcast (by its plan's size estimate)
+    * is distributed on `key` first: an input whose planned output
+    * partitioning already satisfies `key` keeps its layout, any other is
+    * hash-repartitioned at the session's shuffle partition count. The
+    * checkpoint records the layout the plan produced, so a round's join
+    * with a state hashed on `key` exchanges only the state
+    * (`Dataset.localCheckpoint` under adaptive execution records none,
+    * and every round would re-shuffle the edges). The count is fixed
+    * because adaptive execution may coalesce a layout without one, and a
+    * coalesced layout matches no state: an input pre-partitioned by
+    * `repartition(col)` alone may get its edges re-shuffled each round.
+    *
+    * A relation small enough to broadcast needs no layout, and keeps
+    * none: Spark never reuses an exchange over a scan that records one,
+    * so rounds left live would each re-broadcast it.
+    */
+  private def distributed(edges: DataFrame, key: String): DataFrame = {
+    val spark = edges.sparkSession.asInstanceOf[classic.SparkSession]
+    val conf = spark.sessionState.conf
+    if (edges.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold)
+      edges.localCheckpoint()
+    else {
+      val planned = edges.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      val laidOut =
+        if (planned.outputPartitioning.satisfies(
+            ClusteredDistribution(planned.output.filter(_.name == key)))) edges
+        else edges.repartition(conf.numShufflePartitions, col(key))
+      val cp = laidOut.localCheckpoint().queryExecution.analyzed.asInstanceOf[LogicalRDD]
+      val done = laidOut.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+      PlanBridge.ofRows(spark, LogicalRDD(cp.output, cp.rdd, done.outputPartitioning,
+        done.outputOrdering)(spark, Some(cp.stats), Some(cp.constraints)))
+    }
+  }
+
+  /** The round loop: round `i`'s state is `step(state of round i - 1, i)`
+    * for `i` = 1..`rounds`, starting from `init`.
+    *
+    * With a `probe`, every round's state is materialized and handed to
+    * it (a frontier-empty check, k-core's stats); the loop stops after
+    * the first round for which it returns false. Without one, a state the
+    * next round reads twice (`rereads`) is materialized after every
+    * round, any other every [[CheckpointEvery]]th round; neither after the
+    * last round, whose plan the caller gets live.
+    */
+  private def iterate(init: DataFrame, rounds: Int, rereads: Boolean = false,
+      probe: Option[(DataFrame, Int) => Boolean] = None)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var state = init
+    var i = 1
+    var more = rounds > 0
+    while (more) {
+      state = step(state, i)
+      more = i < rounds
+      if (probe.isDefined || (more && (rereads || i % CheckpointEvery == 0)))
+        state = state.localCheckpoint()
+      probe.foreach(p => more = p(state, i) && more)
+      i += 1
+    }
+    state
+  }
+
+  /** The PageRank edge relation `e ⨝ outdeg`: each edge with its source's
+    * out-degree, distributed on `src`. The repartition sits below the
+    * out-degree aggregate, so the aggregate, the join and the edge rule
+    * share its one exchange.
+    */
+  private def outDegreeEdges(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
+    distributed(e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src"), "src")
+  }
+
+  /** The endpoints of an edge relation, as `v`. */
+  private def vertexSet(e: DataFrame): DataFrame =
+    e.select(col("src").as("v")).union(e.select(col("dst").as("v"))).distinct()
+
+  /** One PageRank contribution step: each vertex's `in_mass`, the sum of
+    * `rank DIV outdeg` over its in-edges, keyed by `dst`.
+    */
+  private def inMass(eo: DataFrame, ranks: DataFrame): DataFrame =
+    eo.join(ranks.select(col("v"), col("rank")), eo("src") === col("v"))
+      .select(col("dst"), expr("rank DIV outdeg").as("c"))
+      .groupBy(col("dst"))
+      .agg(sum(col("c")).as("in_mass"))
 
   /** Integer PageRank over a directed edge list `(src, dst)`, WITH
     * dangling-mass redistribution: each round the rank mass sitting on
@@ -39,78 +141,44 @@ object Graph {
     * node has out-edges) the term is exactly zero and the recurrence
     * reduces to the classic one.
     *
-    * `outdeg` is iteration-invariant, so it is fused into the edge relation
-    * ONCE up front — each round is a single `edges ⨝ ranks` join (not
-    * `edges ⨝ ranks ⨝ outdeg`) plus the one unavoidable shuffle of the
-    * aggregation on dst. Both iteration-invariant relations are
-    * hash-partitioned on their join key before checkpointing so the
-    * per-round joins find both sides already distributed on the key and
-    * add no exchange of their own. The dangling set and |V| are likewise
+    * Each round is one `(e ⨝ outdeg) ⨝ ranks` join plus the aggregation
+    * on dst ([[inMass]]). The vertex set, the dangling set and |V| are
     * iteration-invariant (node-dimension-sized, computed once); the
     * per-round dangling sum stays in-plan as a broadcast 1-row relation —
     * every term an exact long, so the result is bit-identical at any
     * parallelism and the oracle replays it as chained CTEs.
     */
   def pageRankInt(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // eager localCheckpoint: materializes the fused relation, truncates
-    // lineage, and preserves its hash partitioning for every later join —
-    // the e ⨝ outdeg join already distributes on src (no explicit
-    // repartition needed), and distinct leaves vertices distributed on v
-    val eo = e.join(outdeg, "src").localCheckpoint()
-    val vertices = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct()
-      .localCheckpoint()
-    // sinks: vertices with no out-edges (absent from outdeg's key set)
-    val dangling = vertices
-      .join(outdeg.select(col("src")), vertices("v") === col("src"), "left_anti")
-      .localCheckpoint()
+    val eo = outDegreeEdges(edges)
+    val vertices = vertexSet(eo).localCheckpoint()
+    // sinks: vertices that are no edge's src
+    val dangling = vertices.join(eo, vertices("v") === eo("src"), "left_anti").localCheckpoint()
     // |V| is a control-plane scalar (one long) baked into the per-round
     // integer division below — not data-plane collection
     val nV = vertices.count()
     // Control-plane probe (one limit-1 job on the node-sized checkpoint):
     // on a graph with no sinks the dangling share is STRUCTURALLY zero
-    // every round, so the branch — and the per-round checkpoint its
-    // second rank reference forces — is skipped and the classic
+    // every round, so the branch — and the second read of the ranks that
+    // makes every round's state a checkpoint — is skipped and the classic
     // single-reference recurrence runs unchanged. The oracle always
     // replays the full term (it evaluates to zero on such graphs).
     val hasDangling = !dangling.isEmpty
-    e.unpersist()
     val base = (15L * scale) / 100L
-
-    var ranks = vertices.withColumn("rank", lit(scale))
-    for (i <- 1 to iters) {
-      val contribs = eo
-        .join(ranks, eo("src") === ranks("v"))
-        .select(col("dst"), expr("rank DIV outdeg").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("in_mass"))
-      val withMass = vertices
-        .join(contribs, vertices("v") === contribs("dst"), "left")
-      ranks =
-        if (hasDangling) {
-          // per-round dangling mass as a broadcast 1-row relation: exact
-          // long sum, one integer division — truncation mirrored in the
-          // oracle
-          val share = ranks.join(dangling, Seq("v"), "left_semi")
-            .agg(expr(s"coalesce(sum(rank), CAST(0 AS BIGINT)) DIV $nV").as("dshare"))
-          withMass.crossJoin(broadcast(share))
-            .select(col("v"),
-              (lit(base) + expr("(85 * (coalesce(in_mass, 0L) + dshare)) DIV 100")).as("rank"))
-        } else withMass
+    iterate(vertices.withColumn("rank", lit(scale)), iters, rereads = hasDangling) { (ranks, _) =>
+      val withMass = vertices.join(inMass(eo, ranks), vertices("v") === col("dst"), "left")
+      if (hasDangling) {
+        // per-round dangling mass as a broadcast 1-row relation: exact
+        // long sum, one integer division — truncation mirrored in the
+        // oracle
+        val share = ranks.join(dangling, Seq("v"), "left_semi")
+          .agg(expr(s"coalesce(sum(rank), CAST(0 AS BIGINT)) DIV $nV").as("dshare"))
+        withMass.crossJoin(broadcast(share))
           .select(col("v"),
-            (lit(base) + expr("(85 * coalesce(in_mass, 0L)) DIV 100")).as("rank"))
-      // the dangling branch references ranks TWICE next round
-      // (contribution join + dangling sum): checkpoint each round so both
-      // branches re-read a node-sized materialization instead of doubling
-      // the join chain per round. The single-reference sink-free path
-      // only cuts lineage before a 4-round chain compounds.
-      val cut = if (hasDangling) i < iters else i % 4 == 0 && i < iters
-      if (cut) ranks = ranks.localCheckpoint()
+            (lit(base) + expr("(85 * (coalesce(in_mass, 0L) + dshare)) DIV 100")).as("rank"))
+      } else withMass
+        .select(col("v"),
+          (lit(base) + expr("(85 * coalesce(in_mass, 0L)) DIV 100")).as("rank"))
     }
-    ranks
   }
 
   /** Default per-order basket cap for the co-order edge builders: the
@@ -307,8 +375,8 @@ object Graph {
     val strategy = triangleStrategy(nEdges, broadcastCap)
     // Past the cap the joins fall back to SHUFFLED HASH, not sort-merge:
     // the closing join's stream side is the ~Σdeg²-row wedge relation, and
-    // an SMJ would SORT it — measured at the r12 sf10 probe (119.6M edges,
-    // 4.1B wedges) as a spill that exceeded local disk outright. A hash
+    // an SMJ would SORT it — at sf10 (119.6M edges, 4.1B wedges) that
+    // sort spilled more than the local disk held. A hash
     // build on the edge side (the provably smaller relation) lets the
     // wedge stream flow through both the exchange and the probe unsorted —
     // one compressed shuffle write is the only disk the stream ever takes.
@@ -509,41 +577,39 @@ object Graph {
     * coreness k). `k` is derived from the input itself (¾ of the average
     * degree, exact integer arithmetic) so the query is scale-free.
     *
-    * Each round is one degree aggregate plus two semi-joins against the
-    * (shrinking) alive set, localCheckpointed so the plan doesn't stack
-    * across rounds — the same iterative-relational shape as
-    * [[pageRankInt]], but with a monotonically SHRINKING edge relation
-    * (peeling only deletes). The per-round scalars collected to the
-    * driver are control-plane (2 longs/round), not data-plane.
+    * Each round is two semi-joins of the edge list (the state) against
+    * the alive set plus one degree aggregate — the same
+    * iterative-relational shape as [[pageRankInt]], but with a
+    * monotonically SHRINKING edge relation (peeling only deletes). The
+    * stats are [[iterate]]'s probe, so every round's edge list is
+    * materialized; the per-round scalars collected to the driver are
+    * control-plane (2 longs/round), not data-plane.
     */
   def kCoreProfile(edges: DataFrame, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    var e = edges.select(col("src"), col("dst")).localCheckpoint()
-    // ONE degree aggregate per round serves both the peel filter and the
-    // profile stats (the node-count/edge-sum of a degree relation ARE the
-    // round's stats) — no separate stats pass over the edge list.
-    def degrees(df: DataFrame): DataFrame =
-      df.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val profile = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
+    // ONE degree aggregate per round serves both the profile stats and the
+    // next round's peel filter (the node-count/edge-sum of a degree
+    // relation ARE the round's stats) — no separate stats pass over the
+    // edge list. The probe keeps it persisted until the next one.
+    var deg: DataFrame = null
+    def stats(e: DataFrame, r: Int): Boolean = {
+      if (deg != null) deg.unpersist(blocking = false)
+      deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def stats(deg: DataFrame): (Long, Long) = {
-      val r = deg.agg(count(lit(1)).as("v"),
-        coalesce(sum(col("deg")), lit(0L)).as("n")).head()
-      (r.getLong(0), r.getLong(1))
+      val row = deg.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L))).head()
+      profile += ((r, row.getLong(0), row.getLong(1)))
+      true
     }
-    var deg = degrees(e)
-    val (v0, n0) = stats(deg)
+    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
+    stats(e0, 0)
+    val (_, v0, n0) = profile.head
     val k = (n0 / v0) * 3 / 4
-    val profile = scala.collection.mutable.ArrayBuffer((0, v0, n0))
-    for (r <- 1 to rounds) {
+    iterate(e0, rounds, probe = Some(stats _)) { (e, _) =>
       val alive = deg.filter(col("deg") >= k).select(col("src"))
-      e = e.join(alive.toDF("src"), Seq("src"), "left_semi")
+      e.join(alive.toDF("src"), Seq("src"), "left_semi")
         .join(alive.toDF("dst"), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint()
-      deg.unpersist(blocking = false)
-      deg = degrees(e)
-      val (v, n) = stats(deg)
-      profile += ((r, v, n))
     }
     deg.unpersist(blocking = false)
     import spark.implicits._
@@ -583,40 +649,30 @@ object Graph {
     * tie-break variant is reproducible at any parallelism, the same
     * discipline as [[pageRankInt]]).
     *
-    * Each round is one join (labels into edges — the edge side is cached
-    * PRE-PARTITIONED on src, so only the node-sized label relation
+    * Each round is one join (labels into edges — the edges are
+    * [[distributed]] on src, so only the node-sized label relation
     * exchanges per round), one count aggregate on (dst,label), and one
     * per-node argmax as a second HASH aggregate: `max(struct(c, -label))`
     * picks the highest count then the smallest label — same result as
-    * the row_number window it replaces, without the window's
-    * per-partition SORT over the edge-sized (v,label,c) relation. That
-    * sort was the r11 scale defect (q_label_prop sf1 14.55×, the suite's
-    * worst ratio): at 10× data over a fixed partition count the sort
-    * runs spill passes that grow super-linearly, while a hash argmax
-    * stays one linear probe — and it partially combines map-side, which
-    * the sort never did. Labels localCheckpoint per round. Round count
+    * a row_number window, without the window's per-partition SORT over
+    * the edge-sized (v,label,c) relation. At 10× data over a fixed
+    * partition count that sort runs spill passes that grow
+    * super-linearly, while a hash argmax stays one linear probe — and it
+    * partially combines map-side, which the sort never did. Round count
     * is fixed — LPA oscillates on bipartite structures, so bounded
     * rounds is the standard production choice.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = e.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      labels = e.join(labels, e("src") === labels("v"))
-        .groupBy(e("dst").as("v"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("v"))
-        .agg(max(struct(col("c"), (-col("label")).as("neg_label"))).as("m"))
-        .select(col("v"), (-col("m.neg_label")).as("label"))
-        .localCheckpoint()
+    val e = distributed(edges.select(col("src"), col("dst")), "src")
+    iterate(e.select(col("src").as("v")).distinct().withColumn("label", col("v")), rounds) {
+      (labels, _) =>
+        e.join(labels, col("src") === col("v"))
+          .groupBy(col("dst").as("v"), col("label"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("v"))
+          .agg(max(struct(col("c"), (-col("label")).as("neg_label"))).as("m"))
+          .select(col("v"), (-col("m.neg_label")).as("label"))
     }
-    // the final labels are already materialized by the eager checkpoint
-    // above, so the edge cache can be dropped before returning
-    e.unpersist(blocking = false)
-    labels
   }
 
   /** Top-20 co-order communities by size after 2 LPA rounds. */
@@ -660,38 +716,27 @@ object Graph {
     * The seed (min vertex id, same convention as [[bfsDistances]]) rides
     * the checkpointed vertex relation as a broadcast-attached column, so
     * the per-round restart term is a map-side `when` — no extra join per
-    * round. Sink mass is dropped (the co-order graph is symmetric, so the
-    * term is structurally zero here; on sink-heavy graphs compose with
-    * [[pageRankInt]]'s dangling machinery).
+    * round. Each round shares [[pageRankInt]]'s edge relation and
+    * contribution step ([[outDegreeEdges]], [[inMass]]); only the
+    * teleport term differs, and sink mass is dropped (the co-order graph
+    * is symmetric, so the term is structurally zero here; on sink-heavy
+    * graphs compose with [[pageRankInt]]'s dangling machinery).
     */
   def personalizedPageRankInt(edges: DataFrame, iters: Int,
       scale: Long = 1000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val eo = e.join(outdeg, "src").localCheckpoint()
-    val seed = e.agg(min(col("src")).as("sv"))
-    val vertices = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct()
-      .crossJoin(broadcast(seed)).localCheckpoint()
-    e.unpersist(blocking = false)
+    val eo = outDegreeEdges(edges)
+    val vertices = vertexSet(eo)
+      .crossJoin(broadcast(eo.agg(min(col("src")).as("sv")))).localCheckpoint()
     val base = (15L * scale) / 100L
-    var ranks = vertices.select(col("v"), col("sv"),
-      when(col("v") === col("sv"), lit(scale)).otherwise(lit(0L)).as("rank"))
-    for (i <- 1 to iters) {
-      val contribs = eo
-        .join(ranks.select(col("v"), col("rank")), eo("src") === col("v"))
-        .select(col("dst"), expr("rank DIV outdeg").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("in_mass"))
-      ranks = vertices
-        .join(contribs, vertices("v") === contribs("dst"), "left")
-        .select(vertices("v"), vertices("sv"),
-          (when(vertices("v") === vertices("sv"), lit(base)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(in_mass, CAST(0 AS BIGINT))) DIV 100")).as("rank"))
-      if (i % 4 == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks.select(col("v"), col("rank"))
+    iterate(vertices.select(col("v"), col("sv"),
+        when(col("v") === col("sv"), lit(scale)).otherwise(lit(0L)).as("rank")), iters) {
+      (ranks, _) =>
+        vertices
+          .join(inMass(eo, ranks), vertices("v") === col("dst"), "left")
+          .select(vertices("v"), vertices("sv"),
+            (when(vertices("v") === vertices("sv"), lit(base)).otherwise(lit(0L)) +
+              expr("(85 * coalesce(in_mass, CAST(0 AS BIGINT))) DIV 100")).as("rank"))
+    }.select(col("v"), col("rank"))
   }
 
   /** Top-20 parts by 3-round personalized PageRank from the smallest part
@@ -741,12 +786,13 @@ object Graph {
   /** Frontier BFS from a seed node: per-round shortest hop distances up to
     * `rounds` hops. Classic Pregel-style expansion expressed relationally —
     * each round joins the edge list with ONLY the newly-discovered frontier
-    * (not the whole distance relation), so per-round work is proportional
-    * to the frontier's out-edges; the anti-join against the accumulated
-    * distance relation is what keeps re-expansion out. Frontiers are
-    * localCheckpointed (node-dimension-sized) and the distance relation is
-    * a union of those materialized leaves — lineage depth stays at
-    * `rounds`, never compounds.
+    * (the previous round's rows of the distance relation, not all of it),
+    * so per-round work is proportional to the frontier's out-edges; the
+    * anti-join against the accumulated distance relation is what keeps
+    * re-expansion out. The distance relation (node-dimension-sized) is
+    * the state [[iterate]] materializes every round to probe the frontier,
+    * so lineage depth stays at one round; the loop stops after the first
+    * round that discovers nothing.
     *
     * Determinism: hop distances are graph properties (no FP, no
     * tie-breaks); the oracle replays the same recurrence as chained
@@ -756,75 +802,54 @@ object Graph {
     * Scale: the standard distributed BFS — one equi-join (shuffle on src)
     * plus one distinct and one anti-join per round, all on frontier-sized
     * relations. On a 100 TB graph the edge relation is the only big side
-    * and it is iteration-invariant: persist once, joined `rounds` times.
+    * and it is iteration-invariant: [[distributed]] once, joined `rounds`
+    * times.
     */
   /** One BFS expansion round: frontier out-neighbors minus already-settled
-    * nodes, at distance `k`. Exposed for the plan guard — the per-round
-    * join must stay a frontier-sized EQUI join on src (the edge relation
-    * is the persisted big side; the frontier is the small probe), with an
-    * anti-join to stop re-expansion. A regression to a non-equi join here
-    * multiplies by |E| per round at 100 TB.
+    * nodes, at distance `k`. The frontier's columns other than `v` and
+    * `d` are keys carried through (multi-source BFS: the seed `s`), and
+    * settled means settled under the same keys. Exposed for the plan
+    * guard — the per-round join must stay a frontier-sized EQUI join on
+    * src (the edge relation is the materialized big side; the frontier is
+    * the small probe), with an anti-join to stop re-expansion. A
+    * regression to a non-equi join here multiplies by |E| per round at
+    * 100 TB.
     */
   private[ops] def bfsRound(
-      e: DataFrame, frontier: DataFrame, dist: DataFrame, k: Long): DataFrame =
-    e.join(frontier.select(col("v").as("src")), Seq("src"))
-      .select(col("dst").as("v")).distinct()
-      .join(dist, Seq("v"), "left_anti")
+      e: DataFrame, frontier: DataFrame, dist: DataFrame, k: Long): DataFrame = {
+    val keys = frontier.columns.toSeq.filterNot(Set("v", "d"))
+    e.join(frontier.select(keys.map(col) :+ col("v").as("src"): _*), Seq("src"))
+      .select(keys.map(col) :+ col("dst").as("v"): _*).distinct()
+      .join(dist, keys :+ "v", "left_anti")
       .withColumn("d", lit(k))
+  }
 
-  def bfsDistances(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def bfsDistances(edges: DataFrame, rounds: Int): DataFrame =
     // seed = min vertex id, kept in-plan as a 1-row relation (control-plane
     // scalar; never collected)
-    var frontier = e.agg(min(col("src")).as("v"))
-      .withColumn("d", lit(0L)).localCheckpoint()
-    var dist = frontier
-    var k = 1
-    var active = true
-    while (k <= rounds && active) {
-      frontier = bfsRound(e, frontier, dist, k.toLong).localCheckpoint()
-      // early exit once the frontier empties (k exceeded the component's
-      // eccentricity): a control-plane probe on the just-materialized
-      // node-sized checkpoint — every later round would join the full
-      // edge list against nothing. The oracle replays all rounds; empty
-      // frontiers add no rows, so the results are identical.
-      if (frontier.isEmpty) active = false
-      else dist = dist.union(frontier)
-      k += 1
-    }
-    e.unpersist(blocking = false)
-    dist
-  }
+    bfs(edges, rounds)(_.agg(min(col("src")).as("s"))).drop("s")
 
   /** MULTI-SOURCE frontier BFS: the [[bfsDistances]] expansion with the
     * frontier keyed by (seed, node) — all seeds advance in the SAME
     * per-round jobs, so k seeds cost one edge-join per round over the
     * union of their frontiers instead of k sequential BFS runs (the edge
-    * relation is persisted once and reused across rounds AND seeds).
+    * relation is distributed once and reused across rounds AND seeds).
     */
   def multiBfsDistances(edges: DataFrame, seeds: Seq[Long], rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var frontier = seeds.toDF("s")
-      .select(col("s"), col("s").as("v"), lit(0L).as("d")).localCheckpoint()
-    var dist = frontier
-    var k = 1
-    var active = true
-    while (k <= rounds && active) {
-      frontier = e.join(frontier.select(col("s"), col("v").as("src")), Seq("src"))
-        .select(col("s"), col("dst").as("v")).distinct()
-        .join(dist, Seq("s", "v"), "left_anti")
-        .withColumn("d", lit(k.toLong))
-        .localCheckpoint()
-      if (frontier.isEmpty) active = false
-      else dist = dist.union(frontier)
-      k += 1
+    bfs(edges, rounds)(_ => seeds.toDF("s"))
+  }
+
+  /** `(s, v, d)`: hop distance `d` from seed `s` to `v`, for the seeds
+    * (column `s`) that `seeds` derives from the distributed edges.
+    */
+  private def bfs(edges: DataFrame, rounds: Int)(seeds: DataFrame => DataFrame): DataFrame = {
+    val e = distributed(edges.select(col("src"), col("dst")), "src")
+    iterate(seeds(e).select(col("s"), col("s").as("v"), lit(0L).as("d")), rounds,
+        probe = Some((dist, k) => !dist.filter(col("d") === k).isEmpty)) { (dist, k) =>
+      dist.union(bfsRound(e, dist.filter(col("d") === k - 1), dist, k.toLong))
     }
-    e.unpersist(blocking = false)
-    dist
   }
 
   /** Seeds for [[qHarmonicCentrality]] — the four smallest part keys
@@ -931,15 +956,17 @@ object Graph {
     *
     * Scale: the delta-stepping-style frontier keeps per-round work
     * proportional to the improved vertices' out-edges, not |E|; the edge
-    * list is iteration-invariant (persist once, join `rounds` times), and
-    * the distance/frontier relations are node-dimension-sized and
-    * localCheckpointed so lineage depth stays at `rounds`.
+    * list is iteration-invariant ([[distributed]] once, joined `rounds`
+    * times). The state is one round's merge `(v, d, cd)` — previous
+    * distance and best candidate — which [[iterate]] materializes every
+    * round to probe for improved vertices, so lineage depth stays at one
+    * round; the loop stops after the first round that improves nothing.
     */
   /** One Bellman–Ford relaxation round pre-materialization: the frontier's
     * out-edges relaxed (equi join on src, min-combine per target) and
     * full-outer-merged with the accumulated distances. Exposed for the
     * plan guard — both joins must stay EQUI joins (src, then v) with the
-    * persisted edge relation as the only big side.
+    * materialized edge relation as the only big side.
     */
   private[ops] def ssspRound(
       e: DataFrame, frontier: DataFrame, dist: DataFrame): DataFrame = {
@@ -951,27 +978,18 @@ object Graph {
 
   def ssspDistances(edges: DataFrame, rounds: Int): DataFrame = {
     val far = Long.MaxValue
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = e.agg(min(col("src")).as("v"))
-      .withColumn("d", lit(0L)).localCheckpoint()
-    var frontier = dist
-    var k = 1
-    var active = true
-    while (k <= rounds && active) {
-      val joined = ssspRound(e, frontier, dist).localCheckpoint()
-      frontier = joined
-        .filter(col("cd") < coalesce(col("d"), lit(far)))
-        .select(col("v"), col("cd").as("d"))
-      // control-plane probe on the just-materialized node-sized relation:
-      // once no vertex improves, every further round is a no-op
-      if (frontier.isEmpty) active = false
-      dist = joined.select(col("v"),
-        least(coalesce(col("d"), lit(far)), coalesce(col("cd"), lit(far))).as("d"))
-      k += 1
-    }
-    e.unpersist(blocking = false)
-    dist
+    val e = distributed(edges.select(col("src"), col("dst"), col("w")), "src")
+    def frontier(merged: DataFrame): DataFrame = merged
+      .filter(col("cd") < coalesce(col("d"), lit(far)))
+      .select(col("v"), col("cd").as("d"))
+    def dist(merged: DataFrame): DataFrame = merged.select(col("v"),
+      least(coalesce(col("d"), lit(far)), coalesce(col("cd"), lit(far))).as("d"))
+    // round 0: the seed (min vertex id) as a candidate at distance 0
+    val seed = e.agg(min(col("src")).as("v"))
+      .select(col("v"), lit(null).cast("long").as("d"), lit(0L).as("cd"))
+    dist(iterate(seed, rounds, probe = Some((merged, _) => !frontier(merged).isEmpty)) {
+      (merged, _) => ssspRound(e, frontier(merged), dist(merged))
+    })
   }
 
   /** Weighted order↔part bipartite graph from lineitem: order node
@@ -1033,61 +1051,48 @@ object Graph {
     * the oracle replays the rounds as chained CTEs with scalar-subquery
     * maxima.
     *
-    * Scale: each half-round is one edge⨝score join (shuffle on the join
-    * key) plus one aggregation — the same shape as a PageRank round; the
-    * per-round max is a broadcast 1-row relation. The edge relation is
-    * iteration-invariant: localCheckpointed once, hash-distributed by the
-    * `hub` join key (the `auth`-keyed join accepts one exchange per round
-    * rather than duplicating the edges both ways). Overflow envelope:
-    * `raw · scale` must fit a long, so max in-degree ≤ ~9·10⁶ at the
-    * default millionth scale — re-scale down for denser graphs.
+    * Scale: each half-round is one edge⨝score join plus one aggregation
+    * — the same shape as a PageRank round; the per-round max is a
+    * broadcast 1-row relation. The edge relation is iteration-invariant
+    * and [[distributed]] once on `hub`, so the hub-keyed joins of edges
+    * too big to broadcast run against scores hashed on the same key
+    * without an exchange of the edges (the `auth`-keyed join accepts one
+    * exchange per round rather than duplicating the edges both ways).
+    * [[iterate]] runs `2·iters` rounds: the half-rounds, whose state is
+    * their RAW sums, then one that normalizes the last authority sums
+    * (the hub half of the last round feeds nothing and is skipped). Each
+    * round reads the previous raw sums twice (the broadcast max and the
+    * normalized projection), so every state but the returned one is
+    * materialized. Overflow envelope: `raw · scale` must fit a long, so
+    * max in-degree ≤ ~9·10⁶ at the default millionth scale — re-scale
+    * down for denser graphs.
     *
-    * Input layout: `edges` must already be hash-partitioned by `hub` at
-    * the session's shuffle partition count (`repartition(col("hub"))`, as
-    * [[qHits]] does below its dedup); that is what makes every
-    * hub-keyed join exchange-free, since this method does not
-    * repartition. Any other layout still gives the same scores, but pays
-    * an extra exchange of the edge relation every round. Each
+    * Input layout: an edge list already hash-partitioned by `hub` at a
+    * fixed count (as [[qHits]] builds it below its dedup) is used as it
+    * is; any other too big to broadcast is repartitioned once. Each
     * `(hub, auth)` pair counts once per occurrence, so pass distinct
     * pairs for a simple graph.
     */
   def hitsInt(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
-    // the hub-keyed layout is established by the CALLER's repartition
-    // below its dedup (see qHits — one shared exchange, guide §2.4);
-    // re-partitioning here would add a second full exchange of the edges
-    val e = edges.select(col("hub"), col("auth")).localCheckpoint()
-    var hubs = e.select(col("hub")).distinct()
-      .withColumn("h", lit(scale)).localCheckpoint()
-    var auths: DataFrame = null
-    for (i <- 1 to iters) {
-      // Checkpoint the RAW sums, not the normalized scores: `rawA` feeds
-      // both the broadcast max and the normalized projection, and an
-      // unmaterialized rawA executed its edge⨝score join + aggregate TWICE
-      // per half-round (once under each consumer — guide §7.2 duplicated
-      // subtrees). The normalize step itself is a node-sized projection
-      // over the checkpointed leaf, cheap to leave live.
-      // hub scores are CO-PARTITIONED with the edges (both hash(hub) —
-      // the caller's exchange and the groupBy(hub) below), so a
-      // shuffled-hash join runs with zero exchanges; the default
-      // broadcast choice would instead collect the node-sized score
-      // relation to the driver every round (guide §3.1 — pick the
-      // strategy deliberately; broadcast also caps at the 8 GB/512M-row
-      // relation limit on billion-node graphs)
-      val rawA = e.join(hubs.hint("shuffle_hash"), "hub")
-        .groupBy(col("auth")).agg(sum(col("h")).as("ra"))
-        .localCheckpoint()
-      auths = rawA.crossJoin(broadcast(rawA.agg(max(col("ra")).as("ma"))))
-        .select(col("auth"), expr(s"(ra * $scale) DIV ma").as("a"))
-      // the hub half of the LAST round feeds nothing (only `auths` is
-      // returned) — don't compute what is thrown away (guide §1.2)
-      if (i < iters) {
-        val rawH = e.join(auths, "auth").groupBy(col("hub")).agg(sum(col("a")).as("rh"))
-          .localCheckpoint()
-        hubs = rawH.crossJoin(broadcast(rawH.agg(max(col("rh")).as("mh"))))
-          .select(col("hub"), expr(s"(rh * $scale) DIV mh").as("h"))
-      }
+    val e = distributed(edges.select(col("hub"), col("auth")), "hub")
+    // (raw · scale) DIV max(raw): the scores of one side
+    def normalized(raw: DataFrame, key: String, score: String): DataFrame =
+      raw.crossJoin(broadcast(raw.agg(max(col("raw")).as("m"))))
+        .select(col(key), expr(s"(raw * $scale) DIV m").as(score))
+    val hubs0 = e.select(col("hub")).distinct().withColumn("h", lit(scale))
+    iterate(hubs0, 2 * iters, rereads = true) { (s, j) =>
+      if (j == 2 * iters) normalized(s, "auth", "a")
+      else if (j % 2 == 1) {
+        // hub scores are CO-PARTITIONED with edges too big to broadcast
+        // (both hashed on hub), so a shuffled-hash join runs with no
+        // exchange of the edges; the default broadcast choice would
+        // instead collect the node-sized score relation to the driver
+        // every round (and broadcast caps at the 8 GB/512M-row relation
+        // limit on billion-node graphs)
+        val hubs = if (j == 1) s else normalized(s, "hub", "h")
+        e.join(hubs.hint("shuffle_hash"), "hub").groupBy(col("auth")).agg(sum(col("h")).as("raw"))
+      } else e.join(normalized(s, "auth", "a"), "auth").groupBy(col("hub")).agg(sum(col("a")).as("raw"))
     }
-    auths
   }
 
   /** Top-20 authoritative parts by 3-round integer HITS over the
@@ -1132,9 +1137,8 @@ object Graph {
     val e = o.union(o.select(col("dst").as("src"), col("src").as("dst")))
     val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
     def d(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = Tables.big(c)
-    // Round-16 envelope escape (VERDICT r15 item 1b): the quadratic
-    // moments Σx², Σxy are PER-TERM decimal products summed in
-    // DECIMAL(38,0) — the old long accumulation wrapped at 10^9 edges
+    // The quadratic moments Σx², Σxy are PER-TERM decimal products
+    // summed in DECIMAL(38,0) — a long accumulation wraps at 10^9 edges
     // with 10^5-degree hubs, squarely inside the crawl-graph shape. The
     // decimal form is safe while m·maxdeg² < 10^38 (10^10 edges with
     // hubs to ~7·10^8 degree — 3+ orders past any crawl hub); the
@@ -1249,8 +1253,9 @@ object Graph {
         // repartition BELOW the dedup: hashpartitioning(hub) satisfies the
         // distinct's clustered distribution on (hub, auth), so the edge
         // build and the iteration's hub-keyed layout share ONE exchange
-        // (guide §2.4) instead of a distinct exchange plus a repartition
-        .repartition(col("hub"))
+        // instead of a distinct exchange plus a repartition; the fixed
+        // count keeps adaptive execution from coalescing the layout away
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("hub"))
         .distinct(),
       iters = 3)
       .select(col("auth").as("part"), col("a").as("authority"))

@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.SparkFunSuite
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 
 /** Pins integer-PageRank semantics the oracle can't see: a hand-computed
@@ -37,6 +40,104 @@ class GraphSpec extends SparkFunSuite {
     // round 1: a = (10:1e6, 11:5e5, 12:5e5); h = (1:1e6, 2:5e5)
     // round 2 raw: 10→1.5e6, 11→1e6, 12→1e6; a = raw·1e6 DIV 1.5e6
     assert(a2 === Map(10L -> 1000000L, 11L -> 666666L, 12L -> 666666L))
+  }
+
+  test("HITS distributes an unpartitioned edge list once and keeps a hub-partitioned one") {
+    // the regime of an edge list too big to broadcast, where the edges
+    // keep a hub layout across rounds
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val li = Tables.table(spark, "/root/testdata/sf0.001", "lineitem")
+        .select(col("l_orderkey").as("hub"), col("l_partkey").as("auth"))
+      def run(e: DataFrame) = JobCount.shuffleMapStages(spark.sparkContext) {
+        Graph.hitsInt(e, iters = 3).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      }
+      val (plain, plainStages) = run(li.distinct())
+      // qHits' layout: hashed on hub at a fixed count below the dedup
+      val (laidOut, laidOutStages) = run(
+        li.repartition(spark.sessionState.conf.numShufflePartitions, col("hub")).distinct())
+      assert(plain === laidOut)
+      // the unpartitioned list costs one repartition; after it, no round
+      // re-shuffles the edges on hub, whichever layout came in
+      assert(plainStages <= laidOutStages + 1, s"$plainStages vs $laidOutStages")
+      assert(laidOutStages < plainStages, s"$laidOutStages vs $plainStages")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("nine rounds: the plan holds one round's aggregates and the rows equal a driver loop") {
+    import spark.implicits._
+    def aggregates(df: DataFrame): Int =
+      df.queryExecution.analyzed.collect { case a: Aggregate => a }.size
+    def rows(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // driver-side integer PageRank: (85·(in_mass + sink share)) DIV 100
+    // plus the teleport term, every value an exact long
+    def pageRank(es: Seq[(Long, Long)], teleport: (Long, Long) => Long,
+        r0: Long => Long, sinks: Boolean): Map[Long, Long] = {
+      val vs = es.flatMap(e => Seq(e._1, e._2)).distinct
+      val outdeg = es.groupBy(_._1).map { case (v, out) => v -> out.size.toLong }
+      val seed = es.map(_._1).min
+      (1 to 9).foldLeft(vs.map(v => v -> r0(v)).toMap) { (r, _) =>
+        val share = if (sinks) vs.filterNot(outdeg.contains).map(r).sum / vs.size else 0L
+        val in = es.groupBy(_._2).map { case (v, in) => v -> in.map(e => r(e._1) / outdeg(e._1)).sum }
+        vs.map(v => v -> (teleport(v, seed) + 85 * (in.getOrElse(v, 0L) + share) / 100)).toMap
+      }
+    }
+    val star = Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L))
+    val sinkPath = Seq((1L, 2L), (2L, 3L))
+    for ((es, sinks) <- Seq(star -> false, sinkPath -> true)) {
+      val pr = Graph.pageRankInt(es.toDF("src", "dst"), iters = 9)
+      // the sink share is a second aggregate per round
+      assert(aggregates(pr) === (if (sinks) 2 else 1), pr.queryExecution.analyzed)
+      assert(rows(pr) === pageRank(es, (_, _) => 150000L, _ => 1000000L, sinks))
+    }
+    val ppr = Graph.personalizedPageRankInt(star.toDF("src", "dst"), iters = 9)
+    assert(aggregates(ppr) === 1, ppr.queryExecution.analyzed)
+    assert(rows(ppr) === pageRank(star, (v, s) => if (v == s) 150000L else 0L,
+      v => if (v == 1L) 1000000L else 0L, sinks = false))
+    // driver-side synchronous LPA: most frequent in-neighbor label, then
+    // the smallest; only nodes with a labeled in-neighbor keep a label
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
+    val es = und ++ und.map(_.swap)
+    val lpaRef = (1 to 9).foldLeft(es.map(e => e._1 -> e._1).toMap) { (labels, _) =>
+      es.filter(e => labels.contains(e._1)).groupBy(_._2).map { case (v, in) =>
+        v -> in.groupBy(e => labels(e._1)).toSeq
+          .map { case (l, n) => (-n.size, l) }.min._2
+      }
+    }
+    val lpa = Graph.labelPropagation(es.toDF("src", "dst"), rounds = 9)
+    assert(aggregates(lpa) === 2, lpa.queryExecution.analyzed)
+    assert(rows(lpa) === lpaRef)
+  }
+
+  test("the round loop stops after the first empty frontier: 3 and 20 rounds agree") {
+    import spark.implicits._
+    // 3-hop path 2-1-3-4 whose smallest id (the BFS and SSSP seed) is
+    // second: every node is within 2 hops of seeds 1 and 3, so round 3
+    // finds nothing and both round caps run the same three rounds
+    val und = Seq((2L, 1L), (1L, 3L), (3L, 4L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val weighted = edges.withColumn("w", lit(1L))
+    def run(df: Int => DataFrame, rounds: Int) = JobCount(spark.sparkContext) {
+      df(rounds).collect().map(_.toSeq).toSet
+    }
+    for ((name, df) <- Seq[(String, Int => DataFrame)](
+        "bfs" -> (r => Graph.bfsDistances(edges, r)),
+        "multi-bfs" -> (r => Graph.multiBfsDistances(edges, Seq(1L, 3L), r)),
+        "sssp" -> (r => Graph.ssspDistances(weighted, r)))) {
+      val (rows3, jobs3) = run(df, 3)
+      val (rows20, jobs20) = run(df, 20)
+      assert(rows3 === rows20, name)
+      assert(jobs3 === jobs20, name)
+    }
+    assert(run(r => Graph.bfsDistances(edges, r), 3)._1 ===
+      Set(Seq(1L, 0L), Seq(2L, 1L), Seq(3L, 1L), Seq(4L, 2L)))
   }
 
   test("star graph: hand-computed one-iteration ranks") {
