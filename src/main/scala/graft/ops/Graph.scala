@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
-import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, UnknownPartitioning}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,17 +43,24 @@ object Graph {
   /** The edge rule: `edges` computed once, as a local checkpoint, for
     * rounds that join it with a state on `key`.
     *
-    * An edge relation too big to broadcast (by its plan's size estimate)
-    * is distributed on `key` first: an input whose planned output
-    * partitioning already satisfies `key` keeps its layout, any other is
-    * hash-repartitioned at the session's shuffle partition count. The
-    * checkpoint records the layout the plan produced, so a round's join
-    * with a state hashed on `key` exchanges only the state
-    * (`Dataset.localCheckpoint` under adaptive execution records none,
-    * and every round would re-shuffle the edges). The count is fixed
-    * because adaptive execution may coalesce a layout without one, and a
-    * coalesced layout matches no state: an input pre-partitioned by
-    * `repartition(col)` alone may get its edges re-shuffled each round.
+    * The checkpoint's job counts the rows, and the relation carries its
+    * exact size (rows times Spark's row-width estimate) into the rounds'
+    * planning; a plan's own estimate can be far off (the sf0.1 co-order
+    * edge list, 2.4M rows, is estimated at 3 MB, and with that estimate
+    * the rounds would broadcast it).
+    *
+    * An edge relation too big to broadcast is hashed on `key` at the
+    * session's shuffle partition count, and the checkpoint records that
+    * layout, so a round's join with a state hashed on `key` exchanges
+    * only the state (`Dataset.localCheckpoint` under adaptive execution
+    * records none, and every round would re-shuffle the edges). The
+    * repartition runs before the checkpoint when the plan's estimate is
+    * above the broadcast threshold and its planned layout is not already
+    * on `key`. The layout the job actually produced is checked after it:
+    * adaptive execution may have coalesced the input's own exchange (a
+    * repartition by column without a count), and a coalesced layout
+    * matches no state, so such a relation, and one the estimate called
+    * small, is repartitioned from its checkpoint once more.
     *
     * A relation small enough to broadcast needs no layout, and keeps
     * none: Spark never reuses an exchange over a scan that records one,
@@ -60,24 +69,40 @@ object Graph {
   private def distributed(edges: DataFrame, key: String): DataFrame = {
     val spark = edges.sparkSession.asInstanceOf[classic.SparkSession]
     val conf = spark.sessionState.conf
-    if (edges.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold)
-      edges.localCheckpoint()
-    else {
-      val planned = edges.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.inputPlan
-        case p => p
+    def onKey(plan: SparkPlan): Boolean =
+      plan.outputPartitioning.numPartitions == conf.numShufflePartitions &&
+        plan.outputPartitioning.satisfies(ClusteredDistribution(plan.output.filter(_.name == key)))
+    def hashed(df: DataFrame): DataFrame = df.repartition(conf.numShufflePartitions, col(key))
+    // the checkpoint of `df`, and whether it is too big to broadcast but
+    // not laid out on `key`
+    def checkpoint(df: DataFrame): (DataFrame, Boolean) = {
+      val qe = df.queryExecution
+      val (rdd, rows) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+        val rdd = qe.executedPlan.execute().map(_.copy()).localCheckpoint()
+        (rdd, rdd.count())
       }
-      val laidOut =
-        if (planned.outputPartitioning.satisfies(
-            ClusteredDistribution(planned.output.filter(_.name == key)))) edges
-        else edges.repartition(conf.numShufflePartitions, col(key))
-      val cp = laidOut.localCheckpoint().queryExecution.analyzed.asInstanceOf[LogicalRDD]
-      val done = laidOut.queryExecution.executedPlan match {
+      val done = qe.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
         case p => p
       }
-      PlanBridge.ofRows(spark, LogicalRDD(cp.output, cp.rdd, done.outputPartitioning,
-        done.outputOrdering)(spark, Some(cp.stats), Some(cp.constraints)))
+      val output = qe.analyzed.output
+      val size = EstimationUtils.getSizePerRow(output) * rows
+      val big = size > conf.autoBroadcastJoinThreshold
+      (PlanBridge.ofRows(spark, LogicalRDD(output, rdd,
+        if (big) done.outputPartitioning else UnknownPartitioning(0),
+        if (big) done.outputOrdering else Nil)(
+        spark, Some(Statistics(size, Some(BigInt(rows)))), Some(qe.optimizedPlan.constraints))),
+        big && !onKey(done))
+    }
+    val (cp, misplaced) = checkpoint(
+      if (edges.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold ||
+          onKey(edges.queryExecution.sparkPlan)) edges
+      else hashed(edges))
+    if (!misplaced) cp
+    else {
+      val (laidOut, _) = checkpoint(hashed(cp))
+      cp.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.unpersist(blocking = false)
+      laidOut
     }
   }
 
@@ -666,7 +691,10 @@ object Graph {
     val e = distributed(edges.select(col("src"), col("dst")), "src")
     iterate(e.select(col("src").as("v")).distinct().withColumn("label", col("v")), rounds) {
       (labels, _) =>
-        e.join(labels, col("src") === col("v"))
+        // the node-sized labels are the build side of a shuffled hash
+        // join, as in hitsInt; by size estimate alone the planner may
+        // broadcast the edges instead, or sort them for a sort-merge join
+        e.join(labels.hint("shuffle_hash"), col("src") === col("v"))
           .groupBy(col("dst").as("v"), col("label"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("v"))
@@ -825,9 +853,9 @@ object Graph {
   }
 
   def bfsDistances(edges: DataFrame, rounds: Int): DataFrame =
-    // seed = min vertex id, kept in-plan as a 1-row relation (control-plane
+    // seed = min vertex id, a 1-row relation computed once (control-plane
     // scalar; never collected)
-    bfs(edges, rounds)(_.agg(min(col("src")).as("s"))).drop("s")
+    bfs(edges, rounds)(_.agg(min(col("src")).as("s")).localCheckpoint()).drop("s")
 
   /** MULTI-SOURCE frontier BFS: the [[bfsDistances]] expansion with the
     * frontier keyed by (seed, node) — all seeds advance in the SAME
@@ -842,14 +870,21 @@ object Graph {
   }
 
   /** `(s, v, d)`: hop distance `d` from seed `s` to `v`, for the seeds
-    * (column `s`) that `seeds` derives from the distributed edges.
+    * (column `s`) that `seeds` derives from the distributed edges. The
+    * round state is the frontier, materialized by the probe; the
+    * distances are the union of the seeds and every non-empty frontier,
+    * so each round's checkpoint holds only what that round discovered.
     */
   private def bfs(edges: DataFrame, rounds: Int)(seeds: DataFrame => DataFrame): DataFrame = {
     val e = distributed(edges.select(col("src"), col("dst")), "src")
-    iterate(seeds(e).select(col("s"), col("s").as("v"), lit(0L).as("d")), rounds,
-        probe = Some((dist, k) => !dist.filter(col("d") === k).isEmpty)) { (dist, k) =>
-      dist.union(bfsRound(e, dist.filter(col("d") === k - 1), dist, k.toLong))
+    var dist = seeds(e).select(col("s"), col("s").as("v"), lit(0L).as("d"))
+    val settle = (frontier: DataFrame, _: Int) => {
+      val found = !frontier.isEmpty
+      if (found) dist = dist.union(frontier)
+      found
     }
+    iterate(dist, rounds, probe = Some(settle))((frontier, k) => bfsRound(e, frontier, dist, k))
+    dist
   }
 
   /** Seeds for [[qHarmonicCentrality]] — the four smallest part keys

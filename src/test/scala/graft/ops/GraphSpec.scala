@@ -59,10 +59,15 @@ class GraphSpec extends SparkFunSuite {
       // qHits' layout: hashed on hub at a fixed count below the dedup
       val (laidOut, laidOutStages) = run(
         li.repartition(spark.sessionState.conf.numShufflePartitions, col("hub")).distinct())
+      // hashed on hub without a count: adaptive execution may coalesce
+      // that exchange, so the layout it leaves is not kept
+      val (coalesced, coalescedStages) = run(li.repartition(col("hub")).distinct())
       assert(plain === laidOut)
-      // the unpartitioned list costs one repartition; after it, no round
-      // re-shuffles the edges on hub, whichever layout came in
+      assert(coalesced === laidOut)
+      // an input not in the fixed layout costs one repartition; after it,
+      // no round re-shuffles the edges on hub, whichever layout came in
       assert(plainStages <= laidOutStages + 1, s"$plainStages vs $laidOutStages")
+      assert(coalescedStages <= laidOutStages + 1, s"$coalescedStages vs $laidOutStages")
       assert(laidOutStages < plainStages, s"$laidOutStages vs $plainStages")
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
