@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   *    (dup-rate and max-df invariant while the corpus grows 10×);
   *  - embeddings ×10: per-replica component rotation (within-replica
   *    geometry preserved, cross-replica decorrelated);
-  *  - orders ×10 (round 11): per-replica orderkey offsets on the SAME
+  *  - orders ×10: per-replica orderkey offsets on the SAME
   *    base as lineitem so the lineitem⋈orders FK stays aligned; custkey,
   *    dates and amounts unchanged (each customer simply owns 10× orders);
-  *  - events ×10 (round 11): per-replica event-id and user-id namespaces —
+  *  - events ×10: per-replica event-id and user-id namespaces —
   *    10× more user series with identical per-series temporal shape, the
   *    scaling under which the VARIANT / interpolate / M4 / funnel / CUSUM
   *    family is designed to be linear (per-series state constant);
@@ -42,7 +42,7 @@ object ScaleProbe {
       "region", "nation", "customer", "supplier", "part")
 
   /** Bump when the replication recipe changes: a stale `_SYNTH_DONE`
-    * from an older recipe must not be reused (ADVICE r14).
+    * from an older recipe must not be reused.
     */
   private val RecipeVersion = 1
 
@@ -54,8 +54,8 @@ object ScaleProbe {
     * LAST step of [[synthesizeTables]]. Gating skips on the marker (not
     * on the first table file) means an interrupted prior synthesis, or a
     * dir built from a different source/recipe, resynthesizes instead of
-    * silently serving stale or partial bytes (ADVICE r14: lineitem is
-    * written FIRST, so its existence proves nothing about the rest).
+    * silently serving stale or partial bytes (lineitem is written FIRST,
+    * so its existence proves nothing about the rest).
     */
   def isSynthesized(srcDir: String, dstDir: String, tables: Set[String]): Boolean = {
     val m = java.nio.file.Paths.get(dstDir, "_SYNTH_DONE")
@@ -67,7 +67,7 @@ object ScaleProbe {
   def synthesize(spark: SparkSession, srcDir: String, dstDir: String): Unit =
     synthesizeTables(spark, srcDir, dstDir, AllTables)
 
-  /** Subset synthesis (round 12): the sf10 probe only needs the tables
+  /** Subset synthesis: the sf10 probe only needs the tables
     * its worst-family queries read (lineitem → co-order graph, documents
     * → dedup pair relation, embeddings → embedding near-dup), so the
     * second scale decade stays disk-bounded instead of replicating the
@@ -85,10 +85,10 @@ object ScaleProbe {
     // lineitem's max — customers whose order shipped nothing yet).
     val liOpt =
       if (tables("lineitem") || new java.io.File(s"$srcDir/lineitem.parquet").exists())
-        Some(spark.read.parquet(s"$srcDir/lineitem.parquet")) else None
+        Some(graft.ops.Tables.parquet(spark, s"$srcDir/lineitem.parquet")) else None
     val ordOpt =
       if (tables("orders") || new java.io.File(s"$srcDir/orders.parquet").exists())
-        Some(spark.read.parquet(s"$srcDir/orders.parquet")) else None
+        Some(graft.ops.Tables.parquet(spark, s"$srcDir/orders.parquet")) else None
     lazy val maxOk = (
       liOpt.map(_.agg(max(col("l_orderkey"))).collect()(0).getLong(0)) ++
       ordOpt.map(_.agg(max(col("o_orderkey"))).collect()(0).getLong(0))).max + 1
@@ -105,7 +105,7 @@ object ScaleProbe {
     }
 
     if (tables("documents")) {
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
+    val docs = graft.ops.Tables.parquet(spark, s"$srcDir/documents.parquet")
     val maxDoc = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1
     docs.crossJoin(reps(spark))
       .withColumn("doc_id", col("doc_id") + col("k") * maxDoc)
@@ -123,7 +123,7 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$dstDir/orders.parquet")
 
     if (tables("events")) {
-    val ev = spark.read.parquet(s"$srcDir/events.parquet")
+    val ev = graft.ops.Tables.parquet(spark, s"$srcDir/events.parquet")
     val maxEid = ev.agg(max(col("event_id"))).collect()(0).getLong(0) + 1
     val maxUid = ev.agg(max(col("user_id"))).collect()(0).getLong(0) + 1
     ev.crossJoin(reps(spark))
@@ -134,7 +134,7 @@ object ScaleProbe {
     }
 
     if (tables("embeddings")) {
-    val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
+    val emb = graft.ops.Tables.parquet(spark, s"$srcDir/embeddings.parquet")
     val dim = emb.select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
     val maxVec = emb.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
     emb.crossJoin(reps(spark))
@@ -156,7 +156,7 @@ object ScaleProbe {
             java.nio.file.Paths.get(s"$dstDir/$name.parquet"),
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         else // directory-shaped source: rewrite through the engine
-          spark.read.parquet(src.toString)
+          graft.ops.Tables.parquet(spark, src.toString)
             .write.mode("overwrite").parquet(s"$dstDir/$name.parquet")
       }
     // completion marker LAST — see [[isSynthesized]]

@@ -5,16 +5,13 @@ import scala.util.{Failure, Success, Try}
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.{CSVFileFormat, CSVUtils}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge, ThreadBridge}
 import org.apache.spark.sql.types._
@@ -86,9 +83,8 @@ object ModelOutputReader {
     *    settings and made unique the way Spark names header columns
     *    (`a,a,,b` → `a0, a1, _c2, b`); every column is a string. A file
     *    without a header line has an empty schema.
-    *  - parquet: the footer, converted as Spark's schema inference does
-    *    (the Spark schema stored in the footer when there is one), with
-    *    every field nullable as the scan exposes it.
+    *  - parquet: the footer, read by the same function as every parquet
+    *    read of the operator packs ([[graft.ops.Tables.footerSchema]]).
     *
     * A directory (a Spark output directory such as `f.parquet/`) stands for
     * its first data file in path order, skipping names that start with `_`
@@ -113,12 +109,7 @@ object ModelOutputReader {
             StructType(CSVUtils.makeSafeHeader(header, sqlConf.caseSensitiveAnalysis, opts).toSeq
               .map(StructField(_, StringType)))
           }
-      } else {
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        ColumnBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
-          new Footer(file, footer), new ParquetToSparkSchemaConverter(sqlConf)))
-      }
+      } else graft.ops.Tables.footerSchema(spark, file, conf)
     }
   }
 

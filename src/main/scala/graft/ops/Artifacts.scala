@@ -32,7 +32,7 @@ object Artifacts {
     * (key, dir) per session, and every call returns the stored read-back.
     */
   private[ops] def stored(spark: SparkSession, key: String, dir: String)(df: => DataFrame): DataFrame =
-    spark.read.parquet(graft.ServingIndexes.ensure(key, dir)(df.write.mode("overwrite").parquet(_)))
+    Tables.parquet(spark, graft.ServingIndexes.ensure(key, dir)(df.write.mode("overwrite").parquet(_)))
 
   /** MinHash-LSH dedup index over the standing documents (doc_id % 5 != 0). */
   def ensureDedupLsh(spark: SparkSession, dir: String): String =
@@ -143,7 +143,7 @@ object Artifacts {
 
   /** Load one [[ensureLayoutZoneMaps]] relation back. */
   private[ops] def layoutRelation(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"${ensureLayoutZoneMaps(spark, dir)}/$name.parquet")
+    Tables.parquet(spark, s"${ensureLayoutZoneMaps(spark, dir)}/$name.parquet")
 
   /** Stored BM25 inverted index over the full documents table. */
   def ensureBm25Index(spark: SparkSession, dir: String): String =
@@ -188,7 +188,7 @@ object Artifacts {
     tables.foreach { case (name, t, key) =>
       if (!spark.catalog.tableExists(name)) {
         val path = s"$d/${t}_b"
-        spark.sql(s"CREATE TABLE $name (${spark.read.parquet(path).schema.toDDL}) USING parquet " +
+        spark.sql(s"CREATE TABLE $name (${Tables.parquetSchema(spark, path).toDDL}) USING parquet " +
           s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS LOCATION '$path'")
       }
     }
@@ -223,8 +223,8 @@ object Artifacts {
   private[ops] def dedupCommons(spark: SparkSession, dir: String): TextDedup.CappedCommons = {
     val d = ensureDedupCommons(spark, dir)
     TextDedup.CappedCommons(
-      spark.read.parquet(s"$d/commons.parquet"),
-      spark.read.parquet(s"$d/sizes.parquet"),
+      Tables.parquet(spark, s"$d/commons.parquet"),
+      Tables.parquet(spark, s"$d/sizes.parquet"),
       Seq.empty)
   }
 

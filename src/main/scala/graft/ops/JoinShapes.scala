@@ -223,7 +223,7 @@ object JoinShapes {
     val baseDir = graft.ScratchDirs("agg-refresh-view")
     aggOf(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
       .write.mode("overwrite").parquet(s"$baseDir/view.parquet")
-    val base = spark.read.parquet(s"$baseDir/view.parquet")
+    val base = Tables.parquet(spark, s"$baseDir/view.parquet")
       .select(col("source"), col("n_docs").as("b_docs"), col("n_tokens").as("b_tokens"))
     val delta = aggOf(docs.filter(pmod(col("doc_id"), lit(5)) === 0))
       .select(col("source"), col("n_docs").as("d_docs"), col("n_tokens").as("d_tokens"))
@@ -394,7 +394,7 @@ object JoinShapes {
     counts.crossJoin(broadcast(totals))
       .select(col("o_custkey"), col("cnt"),
         expr("cnt * 10000 DIV n_rows").as("share_bp"),
-        // cnt·n_keys·10^4 in DECIMAL(38,0) (the r16 envelope
+        // cnt·n_keys·10^4 in DECIMAL(38,0) (the Tables.big envelope
         // discipline): a hot key over a billion-key fact table wraps
         // the long product; the quotient is ≤ 10^4·n_keys — long-safe
         expr("(CAST(cnt AS DECIMAL(38,0)) * n_keys * 10000) DIV n_rows")

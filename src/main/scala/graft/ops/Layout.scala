@@ -246,7 +246,7 @@ object Layout {
     * granule boundaries — are engine-identical.
     */
   /** One stored [[graft.ops.Artifacts.ensureLayoutZoneMaps]] relation —
-    * the registered layout queries' serving path (round 16): zone maps,
+    * the registered layout queries' serving path: zone maps,
     * domain and restore manifest are table-format metadata, built once
     * per (corpus, session) instead of 2–3 rank passes per query run.
     */
@@ -688,7 +688,7 @@ object Layout {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(inDir)
+    val df = Tables.parquet(spark, inDir)
     val arranged =
       if (sortCols.isEmpty) df.repartition(nFiles)
       else df.repartitionByRange(nFiles, sortCols: _*).sortWithinPartitions(sortCols: _*)

@@ -128,8 +128,8 @@ object Pipeline {
     * sense?" check a pipeline runs before trusting embedding dedup. The
     * join keys are the (already tiny) pair ids, so the enrichment joins
     * shuffle pair-sized relations, not the corpus. The pair source is the
-    * cluster-bounded [[VectorSearch.clusterCosinePairs]] (round 10 — the
-    * exact all-pairs scan measured 103× at the 10× probe; see
+    * cluster-bounded [[VectorSearch.clusterCosinePairs]] (the exact
+    * all-pairs scan costs 103× at the 10× probe; see
     * [[Dedup.qDedupEmbedding]]).
     */
   def qPipelineCrossmodal(spark: SparkSession, dir: String): DataFrame = {
@@ -177,7 +177,7 @@ object Pipeline {
        |ORDER BY va, vb""".stripMargin
   }
 
-  /** THE END-TO-END CORPUS BUILD (round 11): every stage a 100 TB
+  /** THE END-TO-END CORPUS BUILD: every stage a 100 TB
     * training-data pipeline runs, chained as one registered query —
     *
     *   0. eval-set exclusion (doc_id ≡ 0 mod 20 is the benchmark stand-in)
@@ -762,9 +762,9 @@ object Pipeline {
     val standing = Artifacts.ensureIntakeStanding(spark, dir)
     cascade(
       table(spark, dir, "documents").filter(pmod(col("doc_id"), lit(5)) === 0),
-      spark.read.parquet(s"$standing/fps.parquet"), lshDir,
+      Tables.parquet(spark, s"$standing/fps.parquet"), lshDir,
       emb, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), ivfDir,
-      spark.read.parquet(s"$standing/grams.parquet"))
+      Tables.parquet(spark, s"$standing/grams.parquet"))
   }
 
   /** [[intakeBatch]] bound to the standing split ([[standingIntake]]). */
@@ -910,8 +910,8 @@ object Pipeline {
     val (weights, totals) = TextAnalysis.nbLoad(spark, Artifacts.ensureQualityNb(spark, dir))
     val geo = Artifacts.ensureGeoCells(spark, dir)
     standingIntake(spark, dir)(intakeBatchFull(_, weights, totals, _, _, _, _, _, _,
-      spark.read.parquet(s"$geo/photoCells.parquet"),
-      spark.read.parquet(s"$geo/rates.parquet")))
+      Tables.parquet(spark, s"$geo/photoCells.parquet"),
+      Tables.parquet(spark, s"$geo/rates.parquet")))
   }
 
   /** DuckDB replay of the full cascade: the gated CTE chain plus the

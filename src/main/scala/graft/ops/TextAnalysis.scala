@@ -473,7 +473,7 @@ object TextAnalysis {
     // global top-k via orderBy+limit (TakeOrderedAndProject: per-partition
     // heaps), NOT a bare row_number window — common query terms match a
     // corpus-sized candidate set, and an unpartitioned window would drag
-    // it all through one partition (the r14 bench-log warning). The rank
+    // it all through one partition. The rank
     // window then runs over ≤ k rows.
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("score_bp").desc, col("doc_id"))
@@ -527,19 +527,19 @@ object TextAnalysis {
     val tokD = deltaDocs.select(id.as("doc_id"), explode(tokens(text)).as("w"))
     val tfD = tokD.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    spark.read.parquet(s"$baseIndexDir/postings.parquet").unionByName(tfD)
+    Tables.parquet(spark, s"$baseIndexDir/postings.parquet").unionByName(tfD)
       .repartition(col("w")).sortWithinPartitions(col("w"))
       .write.mode("overwrite").parquet(s"$outIndexDir/postings.parquet")
-    spark.read.parquet(s"$baseIndexDir/df.parquet")
+    Tables.parquet(spark, s"$baseIndexDir/df.parquet")
       .select(col("w"), col("df").as("df_b"))
       .join(tfD.groupBy(col("w")).agg(count(lit(1)).as("df_d")), Seq("w"), "full_outer")
       .select(col("w"),
         (coalesce(col("df_b"), lit(0L)) + coalesce(col("df_d"), lit(0L))).as("df"))
       .write.mode("overwrite").parquet(s"$outIndexDir/df.parquet")
-    spark.read.parquet(s"$baseIndexDir/dl.parquet")
+    Tables.parquet(spark, s"$baseIndexDir/dl.parquet")
       .unionByName(tokD.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
       .write.mode("overwrite").parquet(s"$outIndexDir/dl.parquet")
-    spark.read.parquet(s"$baseIndexDir/tot.parquet")
+    Tables.parquet(spark, s"$baseIndexDir/tot.parquet")
       .select(col("l").as("l_b"), col("n").as("n_b"))
       .crossJoin(tokD.agg(count(lit(1)).as("l_d"), countDistinct(col("doc_id")).as("n_d")))
       .select(expr("(l_b + l_d) * 1000 DIV (n_b + n_d)").as("avgdl_milli"),
@@ -568,10 +568,10 @@ object TextAnalysis {
   def bm25TopKFromIndex(spark: SparkSession, indexDir: String,
       queryTerms: Seq[String], k: Int): DataFrame =
     bm25Serve(
-      spark.read.parquet(s"$indexDir/postings.parquet"),
-      spark.read.parquet(s"$indexDir/df.parquet"),
-      spark.read.parquet(s"$indexDir/dl.parquet"),
-      spark.read.parquet(s"$indexDir/tot.parquet"),
+      Tables.parquet(spark, s"$indexDir/postings.parquet"),
+      Tables.parquet(spark, s"$indexDir/df.parquet"),
+      Tables.parquet(spark, s"$indexDir/dl.parquet"),
+      Tables.parquet(spark, s"$indexDir/tot.parquet"),
       queryTerms, k)
 
   /** Stored-index lifecycle binding: build the inverted index once,
@@ -787,8 +787,7 @@ object TextAnalysis {
     * representation while DuckDB rounds the exact binary value — the
     * integer form removes the boundary entirely.)
     *
-    * Magnitude (round-16 envelope escape, VERDICT r15 item 1a): the
-    * moments are DECIMAL(38,0) end-to-end — numerator `c_xy·N·10^6`
+    * Magnitude (envelope escape): the moments are DECIMAL(38,0) end-to-end — numerator `c_xy·N·10^6`
     * (safe while `c_xy·N ≤ 10^32`, i.e. any corpus to ~10^16 tokens; the
     * old long form wrapped at ~10^12), denominator `c_x·c_y` (safe to
     * ~10^19-count unigrams), and the per-doc Σ lift. The per-position
@@ -921,9 +920,8 @@ object TextAnalysis {
     * trigrams instead of re-scanning the corpus three more times), and
     * the per-trigram score table assembles with distinct-trigram-sized
     * joins. The corpus stream is tokenized and exploded exactly ONCE
-    * (persisted — before round 12 it was built twice, once for the count
-    * aggregate and once for the score lookup, paying the regexp tokenize
-    * + explode over the whole corpus twice per run: VERDICT r11 item 1),
+    * (persisted: the count aggregate and the score lookup both read it, so
+    * the regexp tokenize + explode runs over the corpus once per run),
     * carries the trigram as ONE packed string key into the score-lookup
     * join (one field's shuffle/compare overhead instead of three — the
     * key is the space-joined trigram itself, so the packing is exact,
@@ -1358,7 +1356,7 @@ object TextAnalysis {
     // broadcast as a 1-row bound (the Corpus quantile-trim discipline)
     val band = dfr.agg(
       greatest(lit(100L), expr("(sum(df) * 20) DIV count(1)")).as("hi"))
-    // Materialized ONCE (round 17): the pruned-weighted posting relation
+    // Materialized ONCE: the pruned-weighted posting relation
     // feeds BOTH sides of the pair self-join, and left live each side
     // re-ran the df attach and its own copy of the band/N broadcast
     // builds (guide §7.2 duplicated subtrees — the before-plan carried
@@ -2119,7 +2117,7 @@ object TextAnalysis {
     * window); the bucket summary is a 3-row aggregate.
     */
   def qQualityBuckets(spark: SparkSession, dir: String): DataFrame = {
-    // served from the rank artifact (VERDICT r13 item 1): two cheap scans
+    // served from the rank artifact: two cheap scans
     // of a doc-count-sized parquet replace a full score+rank rebuild
     val ranked = lmRanked(spark, dir)
     ranked
@@ -2297,7 +2295,7 @@ object TextAnalysis {
 
   /** Load an [[nbSave]]d model back as (weights, totals). */
   private[graft] def nbLoad(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/weights.parquet"), spark.read.parquet(s"$dir/totals.parquet"))
+    (Tables.parquet(spark, s"$dir/weights.parquet"), Tables.parquet(spark, s"$dir/totals.parquet"))
 
   /** The ONE place the NB scoring formula lives (smoothed unseen-token
     * default, integer mean token lift) — shared by the confusion-matrix

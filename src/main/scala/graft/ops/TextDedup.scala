@@ -488,9 +488,9 @@ object TextDedup {
       cfg: MinHashConfig = MinHashConfig(), threshold: Double = 0.8): DataFrame = {
     val spark = incoming.sparkSession
     incrementalProbe(
-      spark.read.parquet(s"$indexDir/banded.parquet"),
-      spark.read.parquet(s"$indexDir/shingles.parquet"),
-      spark.read.parquet(s"$indexDir/sizes.parquet"),
+      Tables.parquet(spark, s"$indexDir/banded.parquet"),
+      Tables.parquet(spark, s"$indexDir/shingles.parquet"),
+      Tables.parquet(spark, s"$indexDir/sizes.parquet"),
       incoming, id, text, cfg, threshold)
   }
 

@@ -19,8 +19,8 @@ object VectorSearch {
   /** Spread a narrow corpus across the session's cores. A few-MB parquet
     * file scans as ONE input split, and everything downstream of the
     * trainers (k×VecDot assignment, probe ranking) is COMPUTE-bound per
-    * row — the r10 probe measured the whole IVF family serialized on one
-    * task at the 10× scale. Only widens (never coalesces a corpus that
+    * row, so a one-split corpus runs the whole IVF family serialized on
+    * one task. Only widens (never coalesces a corpus that
     * already has parallelism), and every consumer is order-invariant by
     * construction (exact-integer sums, keyed joins, id-ordered inits), so
     * the values are partitioning-independent — spec-pinned.
@@ -47,9 +47,8 @@ object VectorSearch {
   }
 
   /** Exact all-pairs cosine via upper-triangle BLOCK pairing — the
-    * distributed spelling of [[cosinePairs]], bit-identical results. Since
-    * round 10 this is the LOSSLESS SPEC BASELINE, not a registered query
-    * shape: even evenly distributed, an exact low-threshold pair scan is
+    * distributed spelling of [[cosinePairs]], bit-identical results. This is the
+    * LOSSLESS SPEC BASELINE, not a registered query shape: even evenly distributed, an exact low-threshold pair scan is
     * Ω(n²) compares (103× at the 10× probe) — the registered pair source
     * is the cluster-bounded [[clusterCosinePairs]].
     *
@@ -115,8 +114,7 @@ object VectorSearch {
   }
 
   /** CLUSTER-BOUNDED near-dup pairs — the 100 TB spelling of the
-    * low-threshold pair scan, and since round 10 the registered shape
-    * behind `q_dedup_embedding` / `q_pipeline_crossmodal` (the exact
+    * low-threshold pair scan, and the registered shape behind `q_dedup_embedding` / `q_pipeline_crossmodal` (the exact
     * [[cosinePairsBlocked]] stays as the spec-only lossless baseline, the
     * same relationship [[cosinePairs]] has to it).
     *
@@ -155,8 +153,8 @@ object VectorSearch {
     * (for plan-shape specs). `model` is an optional pre-trained session
     * model ([[graft.ops.Artifacts.ivfModel]]) — training is query-free and
     * deterministic, so passing it is bit-identical to training inline
-    * (the [[ivfTopKWithModel]] discipline, extended round 16 to the pair
-    * operators that retrained the same full-corpus model per run).
+    * (the [[ivfTopKWithModel]] discipline, applied to the pair operators
+    * so they do not retrain the same full-corpus model per run).
     */
   private[ops] def clusterCosinePairsPlan(df: DataFrame, id: Column, vec: Column,
       threshold: Double, cfg: IvfConfig, probes: Int,
@@ -194,7 +192,7 @@ object VectorSearch {
     * cosine, so precision is always exact; only recall is probabilistic.
     *
     * Candidate generation rides the SAME hot-bucket cap as the text-side
-    * banding ([[TextDedup.cappedBucketCandidates]], round 10): a band
+    * banding ([[TextDedup.cappedBucketCandidates]]): a band
     * bucket over `bucketCap` members — and near-identical floods are
     * exactly this operator's target workload — emits a CHAIN (k−1 pairs)
     * instead of the k² clique, bounding a degenerate bucket to O(k). The
@@ -301,8 +299,8 @@ object VectorSearch {
     */
   private[ops] final case class Centroid(s: Array[Long], n: Long)
 
-  /** Floor decomposition of a centroid's component means — the round-15
-    * overflow-free reformulation of every distance/score compare.
+  /** Floor decomposition of a centroid's component means — the
+    * overflow-free form of every distance/score compare.
     *
     * `s_d / n = g_d + r_d / n` with integer `g_d = floor(s_d / n)` and
     * remainder `r_d = s_d − n·g_d ∈ [0, n)`, computed on BOTH engines as
@@ -312,8 +310,8 @@ object VectorSearch {
     * DuckDB `//` floors; they only coincide for non-negative operands).
     *
     * The derived exact-long sufficient statistics replace `ΣS²` (whose
-    * long envelope bound cluster size to N ≈ 2^13 at quantBits = 14 — the
-    * r14 sf10 abort): |g_d| ≤ 2^(quantBits+2) is N-FREE, so
+    * long envelope bound cluster size to N ≈ 2^13 at quantBits = 14, below
+    * sf10's ~31k-member cells): |g_d| ≤ 2^(quantBits+2) is N-FREE, so
     *   `sumG2 = Σg² ≤ dim·2^(2·quantBits+4)`          (N-free),
     *   `sumGR = Σg·r ≤ dim·2^(quantBits+2)·N`          (long-safe to N ≈ 2^40),
     *   `sumR2 = Σr² ≤ dim·N²`                          (long-safe to N ≈ 2^28.5,
@@ -348,7 +346,7 @@ object VectorSearch {
         "needs more/rebalanced IVF cells, not a wider integer")
       v.toLong
     }
-    // ADVICE r15 (medium): bound the single-dot path's Σx·s DIRECTLY.
+    // Bound the single-dot path's Σx·s DIRECTLY.
     // The g/r remainder sums alone are not airtight for VecDotLong — a
     // degenerate oversized cell of near-identical members (exactly the
     // dedup regime) has r_d ≈ 0, so sumR2/sumGR stay tiny while the long
@@ -375,7 +373,7 @@ object VectorSearch {
     * oracle computes the same longs via HUGEINT sums and the same final
     * expression (see Similarity.ivfDistSelectSql). Replaces the
     * `(N²·Σx² − 2N·ΣSx + ΣS²)/N²` form whose `2N·ΣSx` long product bound
-    * cells to N ≈ 2^13 (the r14 sf10 abort).
+    * cells to N ≈ 2^13, below sf10's ~31k-member cells.
     */
   private[ops] def partsDist(p: CentroidParts, x: Column, a2: Column): Column = {
     val (aP, bP) = partsAB(p, x, a2)
@@ -393,15 +391,15 @@ object VectorSearch {
     (p.sumG2.toDouble + 2.0 * (p.sumGR.toDouble / nD)) + p.sumR2.toDouble / (nD * nD)
   }
 
-  /** The HOT-PATH distance form (one dot per centroid — the r15 A/B
-    * measured the two-dot [[partsDist]] at ~+25% on the IVF-assignment
-    * family, so the assignment/probe/serve paths use this instead):
+  /** The HOT-PATH distance form (one dot per centroid; the two-dot
+    * [[partsDist]] costs ~+25% on the IVF-assignment family, so the
+    * assignment/probe/serve paths use this instead):
     *   `dist = Σx² − 2·(Σx·S / n) + ΣS²/N²`
     * with `Σx·S` an exact LONG dot ([[graft.functions.VecDotLong]] —
     * operand-cast long products, bounded DIRECTLY by the Σ|s|·xmax guard
     * [[centroidParts]] raises loud, so even a degenerate near-identical
-    * cell that slips the remainder sums cannot wrap the dot — ADVICE
-    * r15 medium) and the rec term a driver-precomputed
+    * cell that slips the remainder sums cannot wrap the dot) and the rec
+    * term a driver-precomputed
     * scalar over the g/r decomposition. Same pinned IEEE op sequence as
     * the oracle's `(Σx² − 2.0·(Σx·s / n)) + rec`; same overflow-free
     * envelope as [[partsDist]] (which remains the recon audit's per-term
@@ -447,8 +445,8 @@ object VectorSearch {
     * is the same IEEE-754 op sequence in Spark and DuckDB, so the compared
     * doubles (and argmin tie-breaks on centroid index) are deterministic.
     * Cell-size envelope: long-safe to N ≈ 2^28 members per cell (~380M;
-    * the `Σr² ≤ dim·N²` term), guarded LOUDLY on the driver — the r14
-    * `N ≈ 2^13` ANSI-overflow ceiling (`2N·ΣSx`) is gone.
+    * the `Σr² ≤ dim·N²` term), guarded LOUDLY on the driver; there is no
+    * `2N·ΣSx` product and so no `N ≈ 2^13` ANSI-overflow ceiling.
     */
   def ivfTopK(df: DataFrame, id: Column, vec: Column, queryIds: Seq[Long], k: Int,
       cfg: IvfConfig = IvfConfig()): DataFrame = {
@@ -461,7 +459,7 @@ object VectorSearch {
     result
   }
 
-  /** Train-only IVF entry (VERDICT r12 item 2): the Lloyd loop of
+  /** Train-only IVF entry: the Lloyd loop of
     * [[ivfTopK]] with no serving — returns the resolved config plus the
     * exact-integer centroids, a driver-side object small enough
     * (numCentroids × dim longs) to memoize for a whole session
@@ -694,7 +692,7 @@ object VectorSearch {
     val centroids = loadCentroids(spark, indexDir)
     val corpusC = ivfCorpus(corpus, id, vec, cfg)
     val assignedC = corpusC.join(
-      spark.read.parquet(s"$indexDir/buckets.parquet"), Seq("id"))
+      Tables.parquet(spark, s"$indexDir/buckets.parquet"), Seq("id"))
     val (plan, caches) = semProbePlan(assignedC, centroids, incoming, id, vec, threshold, cfg)
     (plan, caches :+ corpusC)
   }
@@ -749,7 +747,7 @@ object VectorSearch {
     */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Array[Centroid] =
-    spark.read.parquet(s"$indexDir/centroids.parquet").collect()
+    Tables.parquet(spark, s"$indexDir/centroids.parquet").collect()
       .sortBy(_.getAs[Int]("j"))
       .map(r => Centroid(r.getSeq[Long](r.fieldIndex("s")).toArray, r.getAs[Long]("n")))
 
@@ -759,7 +757,7 @@ object VectorSearch {
     val centroids = loadCentroids(spark, indexDir)
     val corpus = ivfCorpus(df, id, vec, cfg)
     val assigned = corpus.join(
-      spark.read.parquet(s"$indexDir/buckets.parquet"), Seq("id"))
+      Tables.parquet(spark, s"$indexDir/buckets.parquet"), Seq("id"))
     val result = ivfServe(assigned, centroids, queryIds, k, cfg)
     corpus.unpersist()
     result
@@ -860,7 +858,7 @@ object VectorSearch {
     // covered by the same N ≈ 2^28.5 guard centroidParts raises) and
     // ΣS²/N² the pinned-order per-centroid scalar the ADC rec term uses —
     // every double op replayed identically by the DuckDB oracle's
-    // crec/cdot CTEs, so the round-6 value is bit-equal cross-engine with
+    // crec/cdot CTEs, so the value is bit-equal cross-engine with
     // no cluster-size ceiling below the loud driver guard.
     val centSims = centroids.map { c =>
       val p = centroidParts(c, rcfg.quantBits)
@@ -1017,7 +1015,7 @@ object VectorSearch {
       indexDir: String, queryIds: Seq[Long], k: Int,
       cfg: LshConfig = LshConfig()): DataFrame = {
     val spark = df.sparkSession
-    val sigs = spark.read.parquet(s"$indexDir/sigs.parquet")
+    val sigs = Tables.parquet(spark, s"$indexDir/sigs.parquet")
     val qSigs = sigs.filter(col("id").isin(queryIds: _*))
       .select(col("id").as("qid"), col("band"), col("bv"))
     val cands = broadcast(qSigs)
@@ -1085,7 +1083,7 @@ object VectorSearch {
     result
   }
 
-  /** Train-only PQ entry (VERDICT r12 item 2): the per-subspace Lloyd
+  /** Train-only PQ entry: the per-subspace Lloyd
     * loop of [[pqTopK]] with no encode/serve — returns the exact-integer
     * codebooks, driver-side metadata (subspaces × codebookSize × subDim
     * longs) memoized per session by [[Artifacts.pqModel]].
@@ -1128,8 +1126,8 @@ object VectorSearch {
     * relation: every centroid branch of every assignment references them
     * as plain column reads. Left as inline expressions, each of the
     * codebookSize branches would re-slice the vector and re-evaluate the
-    * Σx² dot (16× per subspace per row — the dominant cost of the r4
-    * training jobs, profiled). Materializing INSIDE the cache is what
+    * Σx² dot (16× per subspace per row, which dominated the training
+    * jobs' profile). Materializing INSIDE the cache is what
     * makes this stick: in a chained projection Catalyst's CollapseProject
     * would inline the subtree right back into each branch. Cache cost is
     * 2× the vector bytes — a training-scan trade any PQ build makes.
@@ -1173,9 +1171,8 @@ object VectorSearch {
     * long ceiling at a 10⁹-row corpus) and surface as DOUBLE via ONE
     * round-to-nearest cast of the same exact integer on both engines
     * (Spark never outputs decimal — the driver coerces DuckDB decimals to
-    * float); the r14 formulation's `2N·ΣSx` long envelope aborted this
-    * audit at sf10's ~31k-member cells — the decomposition removes that
-    * ceiling entirely (cells safe to N ≈ 2^28, driver-guarded loud).
+    * float). A `2N·ΣSx` long product would overflow at sf10's ~31k-member
+    * cells; the decomposition has no such ceiling (cells safe to N ≈ 2^28, driver-guarded loud).
     *
     * Shape at 100 TB: one scan of the cached quantized corpus, a
     * subspaces-sized explode, one map-side-combinable aggregate to
@@ -1288,8 +1285,8 @@ object VectorSearch {
     * encoded corpus. Per subspace, I_j = Σ qx·S via a codebook lookup on
     * the row's code. Each codebook is a SINGLE nested-array literal
     * (typedLit) — one constant reference in codegen, not
-    * codebookSize×subDim lit() nodes (the janino-compile blowup the r4
-    * bench flagged: ~7 s compiling the old CreateArray forest at sf0.1).
+    * codebookSize×subDim lit() nodes (a CreateArray forest of those takes
+    * ~7 s of janino compile at sf0.1).
     */
   private def pqServe(df: DataFrame, id: Column, vec: Column, queries: DataFrame,
       codebooks: Array[Array[Centroid]], encoded: DataFrame, queryIds: Seq[Long],
@@ -1406,7 +1403,7 @@ object VectorSearch {
     */
   private def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, cfg: PqConfig): Array[Array[Centroid]] = {
-    val cbRows = spark.read.parquet(s"$indexDir/codebooks.parquet").collect()
+    val cbRows = Tables.parquet(spark, s"$indexDir/codebooks.parquet").collect()
     val byJ = cbRows.groupBy(_.getAs[Int]("j"))
     Array.tabulate(cfg.subspaces) { j =>
       byJ(j).sortBy(_.getAs[Int]("c"))
@@ -1438,7 +1435,7 @@ object VectorSearch {
     val spark = df.sparkSession
     val scale = (1L << cfg.quantBits).toDouble
     val codebooks = loadPqCodebooks(spark, indexDir, cfg)
-    val encoded = spark.read.parquet(s"$indexDir/codes.parquet")
+    val encoded = Tables.parquet(spark, s"$indexDir/codes.parquet")
     val queries = df.select(id.as("qid"), vec.as("v"))
       .filter(col("qid").isin(queryIds: _*))
       .select(col("qid"),

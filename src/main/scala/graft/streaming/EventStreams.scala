@@ -42,7 +42,7 @@ object EventStreams {
     */
   def eventStream(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = scala.util.Try(spark.read.parquet(path).schema("ts").dataType)
+    val tsType = scala.util.Try(graft.ops.Tables.parquetSchema(spark, path)("ts").dataType)
       .getOrElse(TimestampNTZType)
     tsType match {
       case LongType =>
