@@ -473,8 +473,8 @@ object TextAnalysis {
     // global top-k via orderBy+limit (TakeOrderedAndProject: per-partition
     // heaps), NOT a bare row_number window — common query terms match a
     // corpus-sized candidate set, and an unpartitioned window would drag
-    // it all through one partition. The rank
-    // window then runs over ≤ k rows.
+    // it all through one partition. The rank window then runs over ≤ k
+    // rows.
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("score_bp").desc, col("doc_id"))
     contrib.groupBy(col("doc_id"))
@@ -787,7 +787,8 @@ object TextAnalysis {
     * representation while DuckDB rounds the exact binary value — the
     * integer form removes the boundary entirely.)
     *
-    * Magnitude (envelope escape): the moments are DECIMAL(38,0) end-to-end — numerator `c_xy·N·10^6`
+    * Magnitude (envelope escape): the moments are DECIMAL(38,0)
+    * end-to-end — numerator `c_xy·N·10^6`
     * (safe while `c_xy·N ≤ 10^32`, i.e. any corpus to ~10^16 tokens; the
     * old long form wrapped at ~10^12), denominator `c_x·c_y` (safe to
     * ~10^19-count unigrams), and the per-doc Σ lift. The per-position
