@@ -17,7 +17,9 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Artifacts, Dedup, Pipeline, TextDedup}
@@ -50,6 +52,9 @@ import graft.ops.TextOps.tokens
   * calibration sentinel first, so a reading taken under load is
   * visible in the record, then the result is materialized through the
   * `noop` sink (a bare `count()` would let Catalyst prune the work).
+  * The record keeps, per query, the classes that attempt compiled and
+  * its compile time, on the driver and in tasks (Spark's JVM-wide
+  * generated-code cache, see [[GraftSession.CodegenCacheEntries]]).
   */
 object Bench {
   type Query = (SparkSession, String) => DataFrame
@@ -80,7 +85,13 @@ object Bench {
     spark
   }
 
-  final case class Timing(sec: Double, calib: Double)
+  /** One attempt: wall seconds, calibration sentinel seconds, and the
+    * generated classes compiled while it ran, with their compile seconds. */
+  final case class Timing(sec: Double, calib: Double, compiles: Long, compileSec: Double)
+
+  /** (classes compiled, compile nanoseconds) in this JVM so far. */
+  private def compileCounters(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
@@ -95,10 +106,12 @@ object Bench {
     * `df` fails to build or run. */
   def attempt(spark: SparkSession, name: String)(df: => DataFrame): Option[Timing] = {
     val (_, calib) = timed(noop(spark.range(1L << 22).selectExpr("sum(id * 2 + 1) AS s")))
+    val (n0, ns0) = compileCounters()
     val (run, sec) = timed(Try(noop(df)))
+    val (n1, ns1) = compileCounters()
     Caches.releaseAll(spark)
     run.failed.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
-    run.toOption.map(_ => Timing(sec, calib))
+    run.toOption.map(_ => Timing(sec, calib, n1 - n0, (ns1 - ns0) / 1e9))
   }
 
   /** [[attempt]]'s seconds; `name` is added to `failed` when it fails. */
@@ -118,8 +131,10 @@ object Bench {
       case None    => None
     }
 
-  private def r3(v: Double): Double = math.round(v * 1000) / 1000.0
-  private def r2(v: Double): Double = math.round(v * 100) / 100.0
+  private def roundTo(places: Int)(v: Double): Double = {
+    val scale = math.pow(10, places)
+    math.round(v * scale) / scale
+  }
   private def ms(v: Double): Long = math.round(v * 1000)
   private def kv(xs: Iterable[(String, Any)]): ListMap[String, Any] = ListMap(xs.toSeq: _*)
   private def record(fields: (String, Any)*): ObjectNode = mapper.valueToTree[ObjectNode](kv(fields))
@@ -166,15 +181,17 @@ object Bench {
     val builds = ServingIndexes.buildLog.toSeq.sortBy(_._1)
     val rec = record(
       "metric" -> "total",
-      "value" -> r3(best.map(_._2.sec).sum),
+      "value" -> roundTo(3)(best.map(_._2.sec).sum),
       "unit" -> "sec",
-      "queries" -> kv(best.map { case (n, t) => n -> r3(t.sec) }),
+      "queries" -> kv(best.map { case (n, t) => n -> roundTo(3)(t.sec) }),
       "calib_ms" -> kv(best.map { case (n, t) => n -> ms(t.calib) }),
+      "compiles" -> kv(best.map { case (n, t) => n -> t.compiles }),
+      "compile_ms" -> kv(best.map { case (n, t) => n -> ms(t.compileSec) }),
       "calib" -> kv(Seq("n" -> calibs.size, "median_ms" -> ms(pct(0.5)),
         "p90_ms" -> ms(pct(0.9)), "max_ms" -> ms(calibs.lastOption.getOrElse(0.0)))),
       "runs" -> runs,
-      "artifact_build_sec" -> kv(builds.map { case (k, s) => k -> r3(s) }),
-      "artifact_build_total_sec" -> r3(builds.map(_._2).sum),
+      "artifact_build_sec" -> kv(builds.map { case (k, s) => k -> roundTo(3)(s) }),
+      "artifact_build_total_sec" -> roundTo(3)(builds.map(_._2).sum),
       "sf" -> dir)
     if (sf1 && best.nonEmpty) {
       val byTime = best.sortBy(-_._2.sec)
@@ -246,8 +263,8 @@ object Bench {
       }
     }
     record(
-      "sf1_ratios" -> kv(done.map(d => d._1 -> r2(d._2))),
-      "sf1_secs" -> kv(done.map(d => d._1 -> r3(d._3.sec))),
+      "sf1_ratios" -> kv(done.map(d => d._1 -> roundTo(2)(d._2))),
+      "sf1_secs" -> kv(done.map(d => d._1 -> roundTo(3)(d._3.sec))),
       "sf1_calib_ms" -> kv(done.map(d => d._1 -> ms(d._3.calib))),
       "sf1_contended" -> done.filter(_._3.calib > quietBar).map(_._1),
       "sf1_skipped" -> skipped,
@@ -284,7 +301,7 @@ object Bench {
       (q, t1, t10, for (a <- t1; b <- t10) yield b / math.max(a, 1e-3))
     }
     def byQuery(f: ((String, Option[Double], Option[Double], Option[Double])) => Option[Double]) =
-      kv(rows.map(r => r._1 -> f(r).map(r3)))
+      kv(rows.map(r => r._1 -> f(r).map(roundTo(3))))
     record("metric" -> "sf10_probe", "cpus" -> cpus.toInt, "partitions" -> cpus.toInt,
       "sf1_secs" -> byQuery(_._2), "sf10_secs" -> byQuery(_._3), "decade_ratios" -> byQuery(_._4),
       "failed" -> failed)
@@ -320,8 +337,8 @@ object Bench {
     }
     val (a, b) = (timeAt(sfDir), timeAt(sf1Dir))
     record("metric" -> "intake_probe",
-      "fixed_arrival_secs" -> kv(Seq("sf0.1" -> a.map(r3), "sf1" -> b.map(r3))),
-      "corpus_ratio" -> (for (x <- a; y <- b) yield r3(y / math.max(x, 1e-3))),
+      "fixed_arrival_secs" -> kv(Seq("sf0.1" -> a.map(roundTo(3)), "sf1" -> b.map(roundTo(3)))),
+      "corpus_ratio" -> (for (x <- a; y <- b) yield roundTo(3)(y / math.max(x, 1e-3))),
       "failed" -> failed)
   }
 

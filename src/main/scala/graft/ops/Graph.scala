@@ -677,15 +677,16 @@ object Graph {
     * Each round is one join (labels into edges — the edges are
     * [[distributed]] on src, so only the node-sized label relation
     * exchanges per round), one count aggregate on (dst,label), and one
-    * per-node argmax as a second HASH aggregate: `max(struct(c, -label))`
-    * picks the highest count then the smallest label — same result as
-    * a row_number window, without the window's per-partition SORT over
-    * the edge-sized (v,label,c) relation. At 10× data over a fixed
-    * partition count that sort runs spill passes that grow
-    * super-linearly, while a hash argmax stays one linear probe — and it
-    * partially combines map-side, which the sort never did. Round count
-    * is fixed — LPA oscillates on bipartite structures, so bounded
-    * rounds is the standard production choice.
+    * per-node argmax, `max(struct(c, -label))`: the highest count, then
+    * the smallest label, the same result as a row_number window. A hash
+    * aggregate needs a buffer of mutable fixed-width fields and a struct
+    * is not one, so the argmax plans as a `SortAggregate` with a `Sort`
+    * on `v` on each side of its exchange: the map side sorts the
+    * (v,label,c) rows of the count aggregate and combines them
+    * partially, so the exchange and the second sort carry at most one
+    * row per node per partition. Round count is fixed — LPA oscillates on
+    * bipartite structures, so bounded rounds is the standard production
+    * choice.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     val e = distributed(edges.select(col("src"), col("dst")), "src")

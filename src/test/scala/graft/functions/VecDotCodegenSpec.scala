@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkFunSuite
 
 /** Regression: several VecDots inlined into ONE generated function (the
   * cosine shape — dot(a,b), dot(a,a), dot(b,b)) must codegen-compile.
@@ -14,7 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole projections 30-40x slower. `GenerateUnsafeProjection.generate`
   * has no fallback, so a compile failure fails this test.
   */
-class VecDotCodegenSpec extends AnyFunSuite {
+class VecDotCodegenSpec extends SparkFunSuite {
+
+  // Spark sizes its JVM-wide generated-code cache at the JVM's first code
+  // generation, which may be this suite's: build the shared session first
+  override protected def beforeAll(): Unit = { super.beforeAll(); spark }
 
   test("three VecDots in one projection compile and evaluate correctly") {
     val a = BoundReference(0, ArrayType(FloatType), nullable = true)

@@ -1,12 +1,16 @@
 package graft.hub
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFunSuite
 
 /** Goldens pinned against pyarrow 16 `cast(float64, string)`, which
   * the reference relies on for parquet double→string casts
   * (test_model_output_integration.py:117-122, test_model_output.py:314-336).
   */
-class ArrowFormatSpec extends AnyFunSuite {
+class ArrowFormatSpec extends SparkFunSuite {
+
+  // Spark sizes its JVM-wide generated-code cache at the JVM's first code
+  // generation, which may be this suite's: build the shared session first
+  override protected def beforeAll(): Unit = { super.beforeAll(); spark }
 
   test("double → string matches Arrow cast goldens") {
     val cases = Seq(
